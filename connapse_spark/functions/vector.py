@@ -14,6 +14,8 @@ oracle mirrors the same fold via ``list_reduce``.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -40,14 +42,8 @@ def bind_once(expr: Column, fn) -> Column:
     as a lambda variable (one-element ``transform``): Catalyst HOFs run
     interpreted with no subexpression elimination, so a subtree
     referenced twice is evaluated twice unless bound this way.
-
-    Public name (r12, ADVICE r11): keyword_index and plans/pq build their
-    fold kernels on this helper, so it is part of the module's contract —
-    the old underscore alias is kept for source compatibility."""
+    :func:`spark_sql_bind` is the same shape as Spark-SQL text."""
     return F.element_at(F.transform(F.array(expr), fn), 1)
-
-
-_bind = bind_once
 
 
 def cosine_expr(a: Column, b: Column) -> Column:
@@ -63,9 +59,9 @@ def cosine_expr(a: Column, b: Column) -> Column:
     once instead of twice)."""
 
     def _with_arrays(aa: Column, bb: Column) -> Column:
-        return _bind(
+        return bind_once(
             F.sqrt(dot_expr(aa, aa)),
-            lambda na: _bind(
+            lambda na: bind_once(
                 F.sqrt(dot_expr(bb, bb)),
                 lambda nb: F.when(
                     (na > F.lit(0.0)) & (nb > F.lit(0.0)),
@@ -74,7 +70,7 @@ def cosine_expr(a: Column, b: Column) -> Column:
             ),
         )
 
-    return _bind(a, lambda aa: _bind(b, lambda bb: _with_arrays(aa, bb)))
+    return bind_once(a, lambda aa: bind_once(b, lambda bb: _with_arrays(aa, bb)))
 
 
 def paired_cosine_expr(na: Column, nb: Column, a: Column, b: Column) -> Column:
@@ -95,8 +91,6 @@ def py_l2norm(vals) -> float:
     floats are IEEE doubles, so for a literal query vector this produces
     the same bits the Catalyst fold would — which is what lets a scan
     against a Python-literal query skip the per-row query-norm fold."""
-    import math
-
     acc = 0.0
     for v in vals:
         v = float(v)
@@ -104,10 +98,15 @@ def py_l2norm(vals) -> float:
     return math.sqrt(acc)
 
 
-def cosine_to_query_expr(
-    vec: Column, query_vec, norm_col: Column | None = None
-) -> Column:
-    """Cosine of a row vector against a PYTHON-LITERAL query vector.
+def cosine_to_query_sql(vec: str, query_vec, norm_col: str | None = None) -> str:
+    """Spark-SQL text of the cosine of a row vector against a
+    PYTHON-LITERAL query vector.
+
+    ``vec`` (and ``norm_col``) are Spark-SQL expression text over the
+    frame, e.g. ``spark_sql_double_array("embedding")``; the whole score —
+    query literal array, bound folds, CASE — enters the plan through ONE
+    ``F.expr``/``selectExpr``, so building it costs one Python→JVM round
+    trip instead of one per literal and per fold node.
 
     ``cosine_expr(row, q_literal)`` pays three O(d) folds per row — the
     query's own norm is a fold over a literal array that Catalyst does NOT
@@ -119,23 +118,90 @@ def cosine_to_query_expr(
     instead of 3·n_q. Operand order matches cosine_expr(a=row, b=query):
     condition (norm_row > 0) AND (norm_q > 0), denominator norm_row·norm_q
     — so scores are bit-identical and the DuckDB mirrors are unchanged."""
-    qn = py_l2norm(query_vec)
-    qarr = F.array(*[F.lit(float(v)) for v in query_vec])
+    qn = spark_sql_literal(py_l2norm(query_vec))
+    qarr = spark_sql_double_array_literal(query_vec)
+
+    def _score(row: str, norm: str) -> str:
+        return (
+            f"CASE WHEN ({norm} > 0.0D) AND ({qn} > 0.0D) "
+            f"THEN {spark_sql_dot(row, qarr)} / ({norm} * {qn}) ELSE 0.0D END"
+        )
+
     if norm_col is not None:
-        return F.when(
-            (norm_col > F.lit(0.0)) & (F.lit(qn) > F.lit(0.0)),
-            dot_expr(vec, qarr) / (norm_col * F.lit(qn)),
-        ).otherwise(F.lit(0.0))
-    return _bind(
-        vec,
-        lambda vv: _bind(
-            F.sqrt(dot_expr(vv, vv)),
-            lambda nv: F.when(
-                (nv > F.lit(0.0)) & (F.lit(qn) > F.lit(0.0)),
-                dot_expr(vv, qarr) / (nv * F.lit(qn)),
-            ).otherwise(F.lit(0.0)),
-        ),
-    )
+        return _score(vec, norm_col)
+    norm = f"sqrt({spark_sql_dot('_cv', '_cv')})"
+    return spark_sql_bind(vec, "_cv", spark_sql_bind(norm, "_cn", _score("_cv", "_cn")))
+
+
+# ---------------------------------------------------------------------------
+# Spark-SQL expression text — per-query literals enter a plan as one F.expr
+# ---------------------------------------------------------------------------
+
+
+def spark_sql_literal(v) -> str:
+    """Spark-SQL literal text for a Python scalar, typed as ``F.lit`` types
+    it: a float becomes a DOUBLE literal written ``repr(x)+"D"`` (repr is the
+    shortest string that round-trips, so the parsed double has the same
+    bits), NaN/±inf become a cast from their string names, a str is quoted
+    with ``\\`` and ``'`` escaped, an int stays an INT/BIGINT literal, a
+    bool is TRUE/FALSE. Negative numbers are parenthesized so the text can
+    follow a binary minus."""
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, int):
+        return f"({v})" if v < 0 else str(v)
+    if isinstance(v, float):
+        x = float(v)
+        if math.isnan(x):
+            return "CAST('NaN' AS DOUBLE)"
+        if math.isinf(x):
+            return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+        s = repr(x) + "D"
+        return f"({s})" if math.copysign(1.0, x) < 0 else s
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    raise TypeError(f"no Spark-SQL literal for {type(v).__name__}")
+
+
+def spark_sql_values(values) -> str:
+    """Comma-separated literals, e.g. for an ``IN (…)`` list."""
+    return ", ".join(spark_sql_literal(v) for v in values)
+
+
+def spark_sql_double_array_literal(values) -> str:
+    """One array<double> constant as Spark-SQL text: a JSON string that
+    ``from_json`` parses and the optimizer folds to a literal. Analyzing one
+    string literal costs far less than ``array(...)`` of d literal children
+    (the bulk of a query vector's plan time). Numbers are written with
+    repr, the shortest string that round-trips, so the folded doubles have
+    the same bits; NaN/±inf use the JSON reader's non-numeric tokens."""
+
+    def _num(v) -> str:
+        x = float(v)
+        if math.isnan(x):
+            return "NaN"
+        if math.isinf(x):
+            return "Infinity" if x > 0 else "-Infinity"
+        return repr(x)
+
+    text = "[" + ",".join(_num(v) for v in values) + "]"
+    return f"from_json({spark_sql_literal(text)}, 'array<double>')"
+
+
+def spark_sql_bind(expr: str, var: str, body: str) -> str:
+    """:func:`bind_once` as Spark-SQL text: ``body`` sees ``expr``,
+    evaluated once per row, as the lambda variable ``var``."""
+    return f"element_at(transform(array({expr}), {var} -> {body}), 1)"
+
+
+def spark_sql_dot(a: str, b: str) -> str:
+    """:func:`dot_expr` as Spark-SQL text — the same left fold."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, v) -> acc + v)"
+
+
+def spark_sql_double_array(col: str) -> str:
+    """:func:`to_double_array` of column ``col`` as Spark-SQL text."""
+    return f"transform(`{col}`, x -> CAST(x AS DOUBLE))"
 
 
 # ---------------------------------------------------------------------------

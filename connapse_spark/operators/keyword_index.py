@@ -35,8 +35,12 @@ from connapse_spark.functions.text import (
     tokenize_py,
     tokens_exact_expr,
 )
-from connapse_spark.functions.vector import bind_once as _bind
-from connapse_spark.operators.search import WEIGHT_EXACT, WEIGHT_STEMMED
+from connapse_spark.functions.vector import bind_once as _bind, spark_sql_values
+from connapse_spark.operators.search import (
+    WEIGHT_EXACT,
+    WEIGHT_STEMMED,
+    keyword_score_sql,
+)
 
 
 def build_token_table(
@@ -590,7 +594,7 @@ def websearch_scores_indexed(
       Sorts on the heaviest frames, deleted here.
 
     The final projection evaluates, per qid, the scan tier's
-    ``websearch_score_expr`` rebuilt over the pivoted columns in the SAME
+    ``websearch_score_sql`` rebuilt over the pivoted columns in the SAME
     FP order (doubles bit-equal) and the match gate as a boolean formula
     over the OR'd bitmask — ``mask & (1<<aid)`` per atom, negated atoms
     inverted, AND within a group, OR across groups. Pure-negation groups
@@ -776,7 +780,7 @@ def websearch_scores_indexed(
     cand = probe.groupBy("id", "qid").agg(*aggs)
     mask = F.coalesce(F.col("_mask"), F.lit(0).cast("long"))
 
-    # ---- per-qid score (websearch_score_expr's FP order — bit-equal
+    # ---- per-qid score (websearch_score_sql's FP order — bit-equal
     # doubles) and match gate (bitmask formula), one when-chain each
     score_expr = None
     match_expr = None
@@ -1448,31 +1452,25 @@ def keyword_search_indexed(
     # left-semi probe is insensitive to duplicate candidate ids, and the
     # dedup was a full shuffle of the candidate set.
     cand = (
-        postings_exact.filter(F.col("term").isin(*terms))
-        .select(F.explode("ids").alias("id"))
-        .unionByName(
-            postings_stemmed.filter(F.col("term").isin(*stems)).select(
-                F.explode("ids").alias("id")
-            )
-        )
+        postings_exact.filter(f"term IN ({spark_sql_values(terms)})")
+        .unionByName(postings_stemmed.filter(f"term IN ({spark_sql_values(stems)})"))
+        .selectExpr("explode(ids) AS id")
     )
     if allowed is not None:
         cand = cand.join(allowed.select("id"), "id", "left_semi")
-    n_exact = F.size(F.filter("tokens_exact", lambda t: t.isin(*terms)))
-    n_stem = F.size(F.filter("tokens_stemmed", lambda t: t.isin(*stems)))
-    raw = F.lit(WEIGHT_EXACT) * n_exact + F.lit(WEIGHT_STEMMED) * n_stem
     # top-k FIRST, filter the <=k survivors (r11 §16, the §12 scan-tier
     # rewrite): the score>0 cut below the sort pushes through the
     # projection, so the Filter re-ran both O(tokens·terms) array-filter
     # counts a second time per candidate row; provably identical (raw is
     # a non-negative weighted count, so zero-score rows sort last under
     # desc) and Limit is a pushdown barrier.
+    score = keyword_score_sql("tokens_exact", "tokens_stemmed", terms, stems)
     return (
         tokens.join(F.broadcast(cand), "id", "left_semi")
-        .select(F.col("id"), (raw / (raw + F.lit(1.0))).alias("score"))
-        .orderBy(F.desc("score"), F.col("id"))
+        .selectExpr("id", f"{score} AS score")
+        .orderBy(F.desc("score"), F.asc("id"))
         .limit(k)
-        .filter(F.col("score") > 0.0)
+        .filter("score > 0.0D")
     )
 
 
@@ -1524,7 +1522,7 @@ def keyword_search_websearch_indexed(
     lists — each OR-group's FIRST positive term is a sound screen (a doc
     matching the group must contain it, in either config) — then the
     SAME match/score expressions as the scan tier
-    (operators.search.websearch_match_expr/_score_expr) verify and rank
+    (operators.search.websearch_match_sql/_score_sql) verify and rank
     over the candidates' STORED token arrays. Phrase adjacency therefore
     needs no separate positions column: the token table IS the
     write-time positional materialization, and candidate verification
@@ -1538,8 +1536,8 @@ def keyword_search_websearch_indexed(
     candidate-pruned) — ValueError otherwise."""
     from connapse_spark.operators.search import (
         parse_websearch,
-        websearch_match_expr,
-        websearch_score_expr,
+        websearch_match_sql,
+        websearch_score_sql,
     )
 
     stem = stem_py if stem_fn is None else stem_fn
@@ -1555,19 +1553,14 @@ def keyword_search_websearch_indexed(
             )
         tok = pos[0].tokens[0]
         screens.append((tok, stem(tok)))
-    cand = None
-    for tok, st in screens:
-        c = (
-            postings_exact.filter(F.col("term") == tok)
-            .select(F.explode("ids").alias("id"))
-            .unionByName(
-                postings_stemmed.filter(F.col("term") == st).select(
-                    F.explode("ids").alias("id")
-                )
-            )
-        )
-        cand = c if cand is None else cand.unionByName(c)
-    te, ts = F.col("tokens_exact"), F.col("tokens_stemmed")
+    exact = spark_sql_values(sorted({tok for tok, _ in screens}))
+    stemmed = spark_sql_values(sorted({st for _, st in screens}))
+    cand = (
+        postings_exact.filter(f"term IN ({exact})")
+        .unionByName(postings_stemmed.filter(f"term IN ({stemmed})"))
+        .selectExpr("explode(ids) AS id")
+    )
+    te, ts = "tokens_exact", "tokens_stemmed"
     # no broadcast HINT on the candidate set: a high-df screen term can
     # explode it to corpus scale, and a forced broadcast would collect
     # that to the driver — AQE broadcasts while the measured size fits
@@ -1576,12 +1569,9 @@ def keyword_search_websearch_indexed(
     # is insensitive to duplicate candidate ids, so no distinct either.
     return (
         tokens.join(cand, "id", "left_semi")
-        .filter(websearch_match_expr(te, ts, groups, stem_fn=stem_fn))
-        .select(
-            F.col("id"),
-            websearch_score_expr(te, ts, groups, stem_fn=stem_fn).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.col("id"))
+        .filter(websearch_match_sql(te, ts, groups, stem_fn=stem_fn))
+        .selectExpr("id", f"{websearch_score_sql(te, ts, groups, stem_fn=stem_fn)} AS score")
+        .orderBy(F.desc("score"), F.asc("id"))
         .limit(k)
     )
 

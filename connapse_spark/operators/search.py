@@ -29,14 +29,19 @@ from pyspark.sql.window import Window
 
 from connapse_spark.functions.embed import embed_expr, embed_py
 from connapse_spark.functions.text import (
+    sql_stem,
     stem_py,
     tokenize_py,
     tokens_exact_expr,
     tokens_stemmed_expr,
 )
 from connapse_spark.functions.vector import (
-    cosine_to_query_expr,
+    cosine_to_query_sql,
     l2norm_expr,
+    spark_sql_bind,
+    spark_sql_double_array,
+    spark_sql_literal,
+    spark_sql_values,
     to_double_array,
 )
 
@@ -77,26 +82,27 @@ def vector_knn(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     predicate: Column | None = None,
+    norm_col: str | None = None,
 ) -> DataFrame:
     """Exact cosine top-k against a literal query vector
     (reference: PgVectorStore.cs:186-285 — score = cosine similarity,
     filters AND-composed before the scan so they push into the parquet read).
 
     The plan is scan → project(cosine) → TakeOrderedAndProject(k): one pass,
-    no shuffle. Ties broken by id for determinism.
+    no shuffle. Ties broken by id for determinism. ``norm_col`` names a
+    stored row-norm column (``l2norm_expr`` of ``vec_col``, e.g. the IVF
+    index's ``norm``): the scan then reads it instead of folding each
+    row's norm — the same double, so the same scores.
     """
     df = vectors
     if predicate is not None:
         df = df.filter(predicate)
     # query norm folds driver-side (same FP order → same bits): the scan
     # pays two O(d) folds per row instead of three (r11)
-    scored = df.select(
-        F.col(id_col),
-        cosine_to_query_expr(to_double_array(F.col(vec_col)), query_vec).alias(
-            "score"
-        ),
-    )
-    return scored.orderBy(F.desc("score"), F.col(id_col)).limit(k)
+    norm = None if norm_col is None else f"`{norm_col}`"
+    score = cosine_to_query_sql(spark_sql_double_array(vec_col), query_vec, norm_col=norm)
+    scored = df.selectExpr(f"`{id_col}`", f"{score} AS score")
+    return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 
 
 # ---------------------------------------------------------------------------
@@ -138,6 +144,22 @@ def keyword_score_expr(text: Column, query: str) -> Column:
     return F.element_at(
         F.transform(F.array(tokens_exact_expr(text)), _score), 1
     )
+
+
+def keyword_score_sql(te: str, ts: str, terms: list[str], stems: list[str]) -> str:
+    """Spark-SQL text of the flat keyword score over token-array
+    expressions ``te``/``ts``: weighted exact + stemmed term counts,
+    normalized raw/(raw+1) — keyword_score_expr's arithmetic."""
+
+    def _count(arr: str, vals: list[str]) -> str:
+        hit = f"t IN ({spark_sql_values(vals)})" if vals else "FALSE"
+        return f"size(filter({arr}, t -> {hit}))"
+
+    raw = (
+        f"({spark_sql_literal(WEIGHT_EXACT)} * {_count(te, terms)} "
+        f"+ {spark_sql_literal(WEIGHT_STEMMED)} * {_count(ts, stems)})"
+    )
+    return f"({raw} / ({raw} + 1.0D))"
 
 
 def keyword_search(
@@ -236,8 +258,9 @@ def parse_websearch(query: str) -> list[list[WebsearchTerm]]:
     return [g for g in groups if g]
 
 
-def _phrase_occurrences(arr: Column, words: list[str]) -> Column:
-    """Count of adjacency matches of ``words`` in token array ``arr``.
+def _phrase_occurrences(arr: str, words: list[str]) -> str:
+    """Count of adjacency matches of ``words`` in token array ``arr``
+    (Spark-SQL text over an array<string> expression).
 
     Computed as a non-overlapping substring count over the double-space-
     joined token string (tokens are lowercase alphanumeric, so the
@@ -248,11 +271,9 @@ def _phrase_occurrences(arr: Column, words: list[str]) -> Column:
     Periodic phrases sharing a token between occurrences count once, not
     twice — documented simplification, mirrored exactly in the oracle;
     presence (count > 0) is unaffected."""
-    s = F.concat(F.lit(" "), F.array_join(arr, "  "), F.lit(" "))
+    s = f"concat(' ', array_join({arr}, '  '), ' ')"
     p = " " + "  ".join(words) + " "
-    return (
-        (F.length(s) - F.length(F.replace(s, F.lit(p), F.lit("")))) / F.lit(len(p))
-    ).cast("int")
+    return f"CAST((length({s}) - length(replace({s}, {spark_sql_literal(p)}, ''))) / {len(p)} AS INT)"
 
 
 def _sql_phrase_occurrences(arr: str, words: list[str]) -> str:
@@ -264,18 +285,20 @@ def _sql_phrase_occurrences(arr: str, words: list[str]) -> str:
     return f"CAST((length({s}) - length(replace({s}, '{p}', ''))) / {len(p)} AS INT)"
 
 
-def _term_presence(
-    te: Column, ts: Column, term: WebsearchTerm, stem_fn=None
-) -> Column:
+def _term_presence(te: str, ts: str, term: WebsearchTerm, stem_fn=None) -> str:
     """Either config matches (exact tokens OR stemmed tokens), like
     ``@@ (websearch_to_tsquery('simple',q) || websearch_to_tsquery('english',q))``."""
     stem = stem_py if stem_fn is None else stem_fn
     stems = [stem(t) for t in term.tokens]
     if term.phrase:
-        return (_phrase_occurrences(te, term.tokens) > 0) | (
-            _phrase_occurrences(ts, stems) > 0
+        return (
+            f"({_phrase_occurrences(te, term.tokens)} > 0 "
+            f"OR {_phrase_occurrences(ts, stems)} > 0)"
         )
-    return F.array_contains(te, term.tokens[0]) | F.array_contains(ts, stems[0])
+    return (
+        f"(array_contains({te}, {spark_sql_literal(term.tokens[0])}) "
+        f"OR array_contains({ts}, {spark_sql_literal(stems[0])}))"
+    )
 
 
 def _sql_term_presence(te: str, ts: str, term: WebsearchTerm) -> str:
@@ -288,17 +311,20 @@ def _sql_term_presence(te: str, ts: str, term: WebsearchTerm) -> str:
     return f"(list_contains({te}, '{term.tokens[0]}') OR list_contains({ts}, '{stems[0]}'))"
 
 
-def websearch_match_expr(
-    te: Column, ts: Column, groups: list[list[WebsearchTerm]], stem_fn=None
-) -> Column:
-    out = F.lit(False)
+def websearch_match_sql(
+    te: str, ts: str, groups: list[list[WebsearchTerm]], stem_fn=None
+) -> str:
+    """Spark-SQL boolean text: some OR-group has all its positive terms
+    present and none of its negated ones, over the token-array
+    expressions ``te``/``ts``."""
+    ors = []
     for g in groups:
-        cond = F.lit(True)
-        for term in g:
-            p = _term_presence(te, ts, term, stem_fn=stem_fn)
-            cond = cond & (~p if term.negated else p)
-        out = out | cond
-    return out
+        ands = [
+            ("NOT " if term.negated else "") + _term_presence(te, ts, term, stem_fn)
+            for term in g
+        ]
+        ors.append("(" + " AND ".join(ands) + ")")
+    return "(" + " OR ".join(ors) + ")" if ors else "FALSE"
 
 
 def sql_websearch_match(te: str, ts: str, groups: list[list[WebsearchTerm]]) -> str:
@@ -322,26 +348,28 @@ def _positive_terms(groups: list[list[WebsearchTerm]]):
     return singles, [list(p) for p in sorted(phrases_seen)]
 
 
-def websearch_score_expr(
-    te: Column, ts: Column, groups: list[list[WebsearchTerm]], stem_fn=None
-) -> Column:
-    """TF scoring over positive terms only (same documented ts_rank_cd(…,32)
-    simplification as keyword_score_expr): singles count per-config with
-    weights A/B; a phrase occurrence counts len(phrase) tokens."""
+def websearch_score_sql(
+    te: str, ts: str, groups: list[list[WebsearchTerm]], stem_fn=None
+) -> str:
+    """Spark-SQL score text: TF scoring over positive terms only (same
+    documented ts_rank_cd(…,32) simplification as keyword_score_expr):
+    singles count per-config with weights A/B; a phrase occurrence counts
+    len(phrase) tokens. The sum is a left fold from 0.0 in term order."""
     stem = stem_py if stem_fn is None else stem_fn
     singles, phrases = _positive_terms(groups)
-    raw = F.lit(0.0)
+    we, ws = spark_sql_literal(WEIGHT_EXACT), spark_sql_literal(WEIGHT_STEMMED)
+    raw = "0.0D"
     if singles:
         stems = sorted({stem(t) for t in singles})
-        raw = raw + F.lit(WEIGHT_EXACT) * F.size(F.filter(te, lambda t: t.isin(*singles)))
-        raw = raw + F.lit(WEIGHT_STEMMED) * F.size(F.filter(ts, lambda t: t.isin(*stems)))
+        raw = f"({raw} + {we} * size(filter({te}, t -> t IN ({spark_sql_values(singles)}))))"
+        raw = f"({raw} + {ws} * size(filter({ts}, t -> t IN ({spark_sql_values(stems)}))))"
     for ph in phrases:
         stems = [stem(t) for t in ph]
-        raw = raw + F.lit(float(len(ph))) * (
-            F.lit(WEIGHT_EXACT) * _phrase_occurrences(te, ph)
-            + F.lit(WEIGHT_STEMMED) * _phrase_occurrences(ts, stems)
+        raw = (
+            f"({raw} + {spark_sql_literal(float(len(ph)))} * ("
+            f"{we} * {_phrase_occurrences(te, ph)} + {ws} * {_phrase_occurrences(ts, stems)}))"
         )
-    return raw / (raw + F.lit(1.0))
+    return f"({raw} / ({raw} + 1.0D))"
 
 
 def sql_websearch_score(te: str, ts: str, groups: list[list[WebsearchTerm]]) -> str:
@@ -387,27 +415,27 @@ def keyword_search_websearch(
     toks = df.select(
         F.col(id_col), tokens_exact_expr(F.col(text_col)).alias("_te")
     ).withColumn("_ts", F.transform(F.col("_te"), stem_expr))
-    te, ts = F.col("_te"), F.col("_ts")
     # the match gate binds both arrays at the FILTER site (r11): predicate
     # pushdown substitutes _te/_ts through the projection, and the match
     # expression references them once per term — unbound, the pushed-down
     # scan filter carried ~11 full tokenizer copies (10.7 KB plan
     # condition); bound, the substitution lands inside one-element
     # transform lambdas and the filter tokenizes once per scanned row.
-    from connapse_spark.functions.vector import _bind
-
-    match = _bind(
-        te, lambda aa: _bind(
-            # stem from the BOUND exact array, not the _ts column: the
-            # column substitutes back to transform(<tokenizer>, stem)
-            # under pushdown, re-tokenizing a second time in the filter
-            F.transform(aa, stem_expr),
-            lambda bb: websearch_match_expr(aa, bb, groups),
-        )
+    # The stemmed array derives from the BOUND exact array, not the _ts
+    # column: the column substitutes back to transform(<tokenizer>, stem)
+    # under pushdown, re-tokenizing a second time in the filter.
+    match = spark_sql_bind(
+        "_te",
+        "_wa",
+        spark_sql_bind(
+            f"transform(_wa, t -> {sql_stem('t')})",
+            "_wb",
+            websearch_match_sql("_wa", "_wb", groups),
+        ),
     )
     return (
-        toks.filter(match)
-        .select(F.col(id_col), websearch_score_expr(te, ts, groups).alias("score"))
+        toks.filter(F.expr(match))
+        .select(F.col(id_col), F.expr(websearch_score_sql("_te", "_ts", groups)).alias("score"))
         .orderBy(F.desc("score"), F.col(id_col))
         .limit(k)
     )
@@ -444,55 +472,11 @@ ORDER BY score DESC, {id_col} LIMIT {k}
 # (per config, A/B weighted like the TF part) — adjacent hits score a full
 # extra point per pair, scattered hits asymptotically nothing, which is the
 # shape of ts_rank_cd's 1/width cover sum without the O(doc·terms) cover
-# walk. The minimal distance is computed by ONE O(tokens) aggregate fold
-# per pair (track last-seen position of each term, take the running min of
-# cross-term gaps — the classic two-finger mindist, as a Catalyst
-# higher-order function): map-side, codegen'd, no per-row position arrays,
-# no shuffle. The DuckDB oracle computes the same integer via the
-# straightforward position-matrix min — different algorithm, identical
-# value, so the hash compare holds.
+# walk. The minimal distance is the min of the position-distance matrix
+# over one document's matched occurrences (keyword_search_proximity); the
+# DuckDB oracle computes the same integer over all positions of the two
+# terms, so the hash compare holds.
 # ---------------------------------------------------------------------------
-
-
-def _pair_bonus_expr(arr: Column, t1: str, t2: str) -> Column:
-    """1 / min|pos(t1) - pos(t2)| when both terms co-occur, else 0. The
-    ``greatest(…, 1)`` guards stem collisions (t1 == t2 is filtered out by
-    the caller for exact tokens, but two different terms may share a stem).
-
-    Single fold over the token array with accumulator
-    (pos, last_t1, last_t2, best): on a t1 hit the gap to the last t2 is a
-    candidate (and vice versa); every true mindist is between some
-    occurrence and the LAST prior occurrence of the other term, so the
-    running min is exact."""
-    zero = F.struct(
-        F.lit(0).alias("pos"),
-        F.lit(-1).alias("la"),
-        F.lit(-1).alias("lb"),
-        F.lit(None).cast("int").alias("best"),
-    )
-
-    def merge(acc, x):
-        is_a = x == F.lit(t1)
-        is_b = x == F.lit(t2)
-        cand = F.when(is_a & (acc["lb"] >= 0), acc["pos"] - acc["lb"]).when(
-            is_b & (acc["la"] >= 0), acc["pos"] - acc["la"]
-        )
-        best = (
-            F.when(acc["best"].isNull(), cand)
-            .when(cand.isNull(), acc["best"])
-            .otherwise(F.least(acc["best"], cand))
-        )
-        return F.struct(
-            (acc["pos"] + 1).alias("pos"),
-            F.when(is_a, acc["pos"]).otherwise(acc["la"]).alias("la"),
-            F.when(is_b, acc["pos"]).otherwise(acc["lb"]).alias("lb"),
-            best.alias("best"),
-        )
-
-    md = F.aggregate(arr, zero, merge, lambda acc: acc["best"])
-    return F.when(
-        md.isNotNull(), F.lit(1.0) / F.greatest(md, F.lit(1))
-    ).otherwise(F.lit(0.0))
 
 
 def _sql_positions(arr: str, term: str) -> str:
@@ -516,43 +500,6 @@ def _query_term_pairs(query: str) -> tuple[list[str], list[tuple[str, str]]]:
     terms = list(dict.fromkeys(tokenize_py(query)))
     pairs = [(a, b) for a, b in zip(terms, terms[1:]) if a != b]
     return terms, pairs
-
-
-def proximity_score_from_tokens(te: Column, ts: Column, query: str) -> Column:
-    """TF score (keyword_score_expr) + A/B-weighted adjacent-pair proximity
-    bonuses over precomputed exact/stemmed token arrays."""
-    terms, pairs = _query_term_pairs(query)
-    uniq = sorted(set(terms))
-    stems = sorted({stem_py(t) for t in terms})
-    raw = F.lit(WEIGHT_EXACT) * F.size(F.filter(te, lambda t: t.isin(*uniq)))
-    raw = raw + F.lit(WEIGHT_STEMMED) * F.size(F.filter(ts, lambda t: t.isin(*stems)))
-    for a, b in pairs:
-        raw = raw + F.lit(WEIGHT_EXACT) * _pair_bonus_expr(te, a, b)
-        sa, sb = stem_py(a), stem_py(b)
-        raw = raw + F.lit(WEIGHT_STEMMED) * _pair_bonus_expr(ts, sa, sb)
-    return raw / (raw + F.lit(1.0))
-
-
-def keyword_proximity_score_expr(text: Column, query: str) -> Column:
-    # bind BOTH token arrays once via nested one-element transform
-    # lambdas (r11): the score references each array per pair bonus, and
-    # interpreted HOF references re-evaluate their subtree every time —
-    # previously each reference re-ran the full tokenizer
-    from connapse_spark.functions.text import stem_expr
-
-    return F.element_at(
-        F.transform(
-            F.array(tokens_exact_expr(text)),
-            lambda te: F.element_at(
-                F.transform(
-                    F.array(F.transform(te, stem_expr)),
-                    lambda ts: proximity_score_from_tokens(te, ts, query),
-                ),
-                1,
-            ),
-        ),
-        1,
-    )
 
 
 def _occ_pair_bonus(occ: Column, field: str, t1: str, t2: str) -> Column:
@@ -802,68 +749,44 @@ ORDER BY score DESC, {id_col} LIMIT {k}
 # ---------------------------------------------------------------------------
 
 
-def _minmax_normalize(hits: DataFrame, score_col: str = "score") -> DataFrame:
+def _minmax_sql(score: str) -> str:
     """MinMaxNormalize (HybridSearchService.cs: range>0 → (s-min)/range,
-    else all 1.0). Stats via whole-frame window aggregates, not agg +
-    broadcast cross join: the windows ride the single-partition exchange the
-    hit list already has (it is post-limit, ≤ k rows), while every broadcast
-    adds a separate Spark job — measured ~2s of pure scheduling overhead per
-    hybrid query across the four normalize/stats broadcasts."""
-    wall = Window.partitionBy()
-    mn = F.min(score_col).over(wall)
-    mx = F.max(score_col).over(wall)
-    return hits.withColumn(
-        score_col,
-        F.when(mx > mn, (F.col(score_col) - mn) / (mx - mn)).otherwise(F.lit(1.0)),
-    )
+    else all 1.0) of column ``score``, as Spark-SQL text. Stats via
+    whole-frame window aggregates, not agg + broadcast cross join: the
+    windows ride the single-partition exchange the hit list already has
+    (it is post-limit, ≤ k rows), while every broadcast adds a separate
+    Spark job — measured ~2s of pure scheduling overhead per hybrid query
+    across the four normalize/stats broadcasts."""
+    mn, mx = f"min({score}) OVER ()", f"max({score}) OVER ()"
+    return f"CASE WHEN {mx} > {mn} THEN ({score} - {mn}) / ({mx} - {mn}) ELSE 1.0D END"
 
 
-def _dbsf_normalize(hits: DataFrame, score_col: str = "score") -> DataFrame:
+def _dbsf_sql(score: str) -> str:
     """DbsfNormalize: clamp((s - (mean - 3σ)) / 6σ, 0, 1) with population σ;
-    n==1 or σ<1e-9 → all 1.0 (HybridSearchService.cs:340-360).
+    n==1 or σ<1e-9 → all 1.0 (HybridSearchService.cs:340-360), of column
+    ``score``, as Spark-SQL text.
 
     Mean/σ are computed by a *sorted sequential fold* over the collected
     score list rather than ``avg``/``stddev_pop``: distributed reductions sum
     in partition order, which is nondeterministic in the last FP bits; the
     fold is bit-stable and mirrored exactly by the DuckDB oracle. Hit lists
     are ≤ a few k rows post-limit, so the collect_list is trivially safe at
-    any corpus scale — and for the same reason the stats ride whole-frame
-    window aggregates on the list's existing single partition instead of an
+    any corpus scale — and for the same reason the stats ride a whole-frame
+    window aggregate on the list's existing single partition instead of an
     agg + broadcast cross join (each broadcast is a separate Spark job; see
-    _minmax_normalize).
-    """
-    wall = Window.partitionBy()
-    return (
-        hits.withColumn("_ss", F.sort_array(F.collect_list(score_col).over(wall)))
-        .withColumn("_n", F.size("_ss"))
-        .withColumn(
-            "_mu", F.aggregate("_ss", F.lit(0.0), lambda a, v: a + v) / F.col("_n")
-        )
-        .withColumn(
-            "_sd",
-            F.sqrt(
-                F.aggregate(
-                    "_ss",
-                    F.lit(0.0),
-                    lambda a, v: a + (v - F.col("_mu")) * (v - F.col("_mu")),
-                )
-                / F.col("_n")
-            ),
-        )
-        .withColumn(
-            score_col,
-            F.when((F.col("_n") == 1) | (F.col("_sd") < 1e-9), F.lit(1.0)).otherwise(
-                F.least(
-                    F.lit(1.0),
-                    F.greatest(
-                        F.lit(0.0),
-                        (F.col(score_col) - (F.col("_mu") - F.lit(3.0) * F.col("_sd")))
-                        / (F.lit(6.0) * F.col("_sd")),
-                    ),
-                )
-            ),
-        )
-        .drop("_ss", "_mu", "_sd", "_n")
+    _minmax_sql). Each statistic is bound once per row."""
+    clamp = (
+        "CASE WHEN (_n = 1) OR (_sd < 1.0e-9D) THEN 1.0D "
+        f"ELSE least(1.0D, greatest(0.0D, ({score} - (_mu - 3.0D * _sd)) / (6.0D * _sd))) END"
+    )
+    sd = "sqrt(aggregate(_ss, 0.0D, (a, v) -> a + (v - _mu) * (v - _mu)) / _n)"
+    mu = "aggregate(_ss, 0.0D, (a, v) -> a + v) / _n"
+    return spark_sql_bind(
+        f"sort_array(collect_list({score}) OVER ())",
+        "_ss",
+        spark_sql_bind(
+            "size(_ss)", "_n", spark_sql_bind(mu, "_mu", spark_sql_bind(sd, "_sd", clamp))
+        ),
     )
 
 
@@ -881,26 +804,19 @@ def fuse(
     Missing side contributes 0; alpha clamped to [0,1]. Input sides are tiny
     (≤ a few k rows), so the join is trivially broadcastable.
     """
-    norm = _minmax_normalize if method == "ConvexCombination" else _dbsf_normalize
+    norm = _minmax_sql if method == "ConvexCombination" else _dbsf_sql
     a = min(max(alpha, 0.0), 1.0)
-    v = norm(vector_hits.select(F.col(id_col), F.col("score"))).withColumnRenamed(
-        "score", "vector_score"
-    )
-    kw = norm(keyword_hits.select(F.col(id_col), F.col("score"))).withColumnRenamed(
-        "score", "keyword_score"
-    )
+    v = vector_hits.selectExpr(f"`{id_col}`", f"{norm('score')} AS vector_score")
+    kw = keyword_hits.selectExpr(f"`{id_col}`", f"{norm('score')} AS keyword_score")
     merged = v.join(kw, on=id_col, how="full_outer")
-    in_v = F.col("vector_score").isNotNull()
-    in_k = F.col("keyword_score").isNotNull()
-    return merged.select(
-        F.col(id_col),
-        (
-            F.lit(a) * F.coalesce(F.col("vector_score"), F.lit(0.0))
-            + F.lit(1.0 - a) * F.coalesce(F.col("keyword_score"), F.lit(0.0))
-        ).alias("score"),
-        F.coalesce(F.col("vector_score"), F.lit(0.0)).alias("vector_score"),
-        F.coalesce(F.col("keyword_score"), F.lit(0.0)).alias("keyword_score"),
-        F.when(in_v & in_k, "both").when(in_v, "vector").otherwise("keyword").alias("source"),
+    return merged.selectExpr(
+        f"`{id_col}`",
+        f"{spark_sql_literal(a)} * coalesce(vector_score, 0.0D) "
+        f"+ {spark_sql_literal(1.0 - a)} * coalesce(keyword_score, 0.0D) AS score",
+        "coalesce(vector_score, 0.0D) AS vector_score",
+        "coalesce(keyword_score, 0.0D) AS keyword_score",
+        "CASE WHEN vector_score IS NOT NULL AND keyword_score IS NOT NULL THEN 'both' "
+        "WHEN vector_score IS NOT NULL THEN 'vector' ELSE 'keyword' END AS source",
     )
 
 
@@ -927,7 +843,7 @@ def fuse_rrf(
     contributes 0 and rank 0.
 
     The row_number windows ride the post-limit single-partition hit lists
-    (≤ k rows) — no corpus-scale shuffle, same as _minmax_normalize.
+    (≤ k rows) — no corpus-scale shuffle, same as _minmax_sql.
     """
     w = Window.partitionBy().orderBy(F.desc("score"), F.col(id_col))
     v = (
@@ -1335,7 +1251,7 @@ def min_score_topk(
 
 
 def apply_min_score(hits: DataFrame, min_score: float) -> DataFrame:
-    return hits.filter(F.col("score") >= F.lit(min_score))
+    return hits.filter(f"score >= {spark_sql_literal(min_score)}")
 
 
 def hybrid_search(
@@ -1401,27 +1317,26 @@ def hybrid_search(
     if options.mode in ("Semantic", "Hybrid"):
         qv = embed_py(query, dims)
         if vector_index is not None:
-            from connapse_spark.plans.ivf import probe_list_ids
-
-            probe_ids = probe_list_ids(
-                vector_index.centroids, qv, vector_index.nprobe
-            )
-            cands = vector_index.index.filter(
-                F.col("list_id").isin(probe_ids)
-            ).select("id", F.col("vec").alias("embedding"))
+            # lists ranked over the bundle's driver-resident centroid rows:
+            # no Spark job per query (the rows are collected on the
+            # bundle's first probe)
+            (probe_ids,) = vector_index.probe_lists([qv])
+            cands = vector_index.index.filter(f"list_id IN ({spark_sql_values(probe_ids)})")
             if predicate is not None:
                 allowed = base.select(F.col(id_col).alias("id"))
                 cands = cands.join(F.broadcast(allowed), "id", "left_semi")
-            vecs = cands
-        elif vectors is not None:
-            vecs = vectors
-            if predicate is not None:
-                allowed = base.select(F.col(id_col).alias("id"))
-                vecs = vecs.join(F.broadcast(allowed), "id", "left_semi")
+            # the index stores each row's norm (l2norm_expr of vec)
+            v_hits = vector_knn(cands, qv, fetch_k, id_col="id", vec_col="vec", norm_col="norm")
         else:
-            vec_expr = vec_col if vec_col is not None else embed_expr(F.col(text_col), dims)
-            vecs = base.select(F.col(id_col).alias("id"), vec_expr.alias("embedding"))
-        v_hits = vector_knn(vecs, qv, fetch_k, id_col="id")
+            if vectors is not None:
+                vecs = vectors
+                if predicate is not None:
+                    allowed = base.select(F.col(id_col).alias("id"))
+                    vecs = vecs.join(F.broadcast(allowed), "id", "left_semi")
+            else:
+                vec_expr = vec_col if vec_col is not None else embed_expr(F.col(text_col), dims)
+                vecs = base.select(F.col(id_col).alias("id"), vec_expr.alias("embedding"))
+            v_hits = vector_knn(vecs, qv, fetch_k, id_col="id")
     if options.mode in ("Keyword", "Hybrid"):
         if options.websearch:
             # full tsquery semantics (phrases/negation/OR): served from
@@ -1484,11 +1399,14 @@ def hybrid_search(
         fused = fuse(v_hits, k_hits, options.fusion_alpha, options.fusion, id_col="id")
 
     # Reference stage order (HybridSearchService.cs:146-159):
-    # min-score filter → AutoCut → top-k.
-    fused = apply_min_score(fused, options.min_score)
+    # min-score filter → AutoCut → top-k. Fused scores are never negative
+    # (weights and normalized scores lie in [0, 1]; NaN passes a >= filter
+    # anyway), so a min-score of 0 or less keeps every fused row.
+    if options.mode != "Hybrid" or options.min_score > 0.0:
+        fused = apply_min_score(fused, options.min_score)
     if options.auto_cut:
         fused = auto_cut(fused, id_col="id")
-    return fused.orderBy(F.desc("score"), F.col("id")).limit(options.top_k)
+    return fused.orderBy(F.desc("score"), F.asc("id")).limit(options.top_k)
 
 
 def hybrid_search_onepass(
@@ -1519,7 +1437,7 @@ def hybrid_search_onepass(
     candidates explode into (branch, score, id) entries, each branch's
     top-k cut is a branch-partitioned row_number, per-branch normalization
     rides branch-partitioned window aggregates (identical arithmetic to
-    ``_minmax_normalize``/``_dbsf_normalize``), and the full-outer merge of
+    ``_minmax_sql``/``_dbsf_sql``), and the full-outer merge of
     ``fuse`` becomes a groupBy(id) pivot — the same union-of-ids with nulls
     for the missing side. No persist, no eager count: building the
     DataFrame launches zero jobs (plan-only consumers never scan), one
@@ -1544,9 +1462,7 @@ def hybrid_search_onepass(
     # folds per scanned row instead of three (r11)
     scored = base.select(
         F.col(id_col).alias("id"),
-        cosine_to_query_expr(to_double_array(F.col(vec_col)), qv).alias(
-            "vector_score"
-        ),
+        F.expr(cosine_to_query_sql(spark_sql_double_array(vec_col), qv)).alias("vector_score"),
         keyword_score_expr(F.col(text_col), query).alias("keyword_score"),
     )
     id_type = scored.schema["id"].dataType.simpleString()
@@ -1623,7 +1539,7 @@ def hybrid_search_onepass(
         )
     else:
         # Per-branch normalization with the exact arithmetic of
-        # _minmax_normalize / _dbsf_normalize, over the same post-cut row
+        # _minmax_sql / _dbsf_sql, over the same post-cut row
         # sets those helpers would see — just branch-partitioned.
         wbranch = Window.partitionBy("branch")
         if options.fusion == "ConvexCombination":
@@ -1635,7 +1551,7 @@ def hybrid_search_onepass(
                     F.lit(1.0)
                 ),
             )
-        else:  # Dbsf: sorted sequential fold, bit-stable (see _dbsf_normalize)
+        else:  # Dbsf: sorted sequential fold, bit-stable (see _dbsf_sql)
             normed = (
                 ranked.withColumn(
                     "_ss", F.sort_array(F.collect_list("bscore").over(wbranch))
@@ -2093,7 +2009,7 @@ def hybrid_search_many(
 
     ``websearch=True`` (r9) gives every query in the batch full tsquery
     semantics (phrases/negation/OR) — the per-query keyword score
-    becomes websearch_score_expr GATED by websearch_match_expr over the
+    becomes websearch_score_sql GATED by websearch_match_sql over the
     SAME shared token arrays, so the single-scan structure is unchanged:
     one corpus read, one expression pair per query. A doc that matches
     but scores 0 (only positive-free groups) never enters the keyword
@@ -2172,26 +2088,19 @@ def hybrid_search_many(
         qvec = embed_py(qtext, dims)
         if websearch:
             groups = parse_websearch(qtext)
-            kscore = F.when(
-                websearch_match_expr(F.col("_te"), F.col("_ts"), groups, stem_fn=stem),
-                websearch_score_expr(F.col("_te"), F.col("_ts"), groups, stem_fn=stem),
-            ).otherwise(F.lit(0.0))
+            kscore = F.expr(
+                f"CASE WHEN {websearch_match_sql('_te', '_ts', groups, stem)} "
+                f"THEN {websearch_score_sql('_te', '_ts', groups, stem)} ELSE 0.0D END"
+            )
         else:
             terms = sorted(set(tokenize_py(qtext)))
             stems = sorted({stem(t) for t in terms})
-            raw = F.lit(WEIGHT_EXACT) * F.size(
-                F.filter(F.col("_te"), lambda t: t.isin(*terms))
-            ) + F.lit(WEIGHT_STEMMED) * F.size(
-                F.filter(F.col("_ts"), lambda t: t.isin(*stems))
-            )
-            kscore = raw / (raw + F.lit(1.0))
+            kscore = F.expr(keyword_score_sql("_te", "_ts", terms, stems))
         ok = F.col("_oks")[i] if predicates else F.lit(True)
         per_q.append(
             F.struct(
                 F.lit(int(qid)).cast("int").alias("qid"),
-                cosine_to_query_expr(
-                    F.col("_v"), qvec, norm_col=F.col("_nv")
-                ).alias("vector_score"),
+                F.expr(cosine_to_query_sql("_v", qvec, norm_col="_nv")).alias("vector_score"),
                 kscore.alias("keyword_score"),
                 ok.alias("ok"),
             )
@@ -2396,7 +2305,7 @@ def hybrid_search_many_fast(
 
     ``vector_index`` (a ``plans.ivf.VectorIndex``) is the vector branch's
     serving structure, batched: probe lists are ranked driver-side ONCE per
-    query against the collected centroid table, the index scan is pruned to
+    query against the bundle's driver-resident centroid rows, the index scan is pruned to
     the UNION of the batch's probed lists (a literal ``list_id IN`` that is
     partition pruning on the list_id-partitioned layout), and each query's
     score column is masked to ITS probe set inside the Arrow kernel — so a
@@ -2489,13 +2398,7 @@ def hybrid_search_many_fast(
 
     probe_sets: list | None = None
     if vector_index is not None:
-        from connapse_spark.plans.ivf import probe_list_ids_many
-
-        probes = probe_list_ids_many(
-            vector_index.centroids,
-            [qv.tolist() for qv in Q],
-            vector_index.nprobe,
-        )
+        probes = vector_index.probe_lists([qv.tolist() for qv in Q])
         probe_sets = [np.array(p) for p in probes]
         union_lists = sorted({int(l) for p in probes for l in p})
         idx = vector_index.index.filter(F.col("list_id").isin(union_lists))

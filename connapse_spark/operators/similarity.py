@@ -19,7 +19,7 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 from pyspark.sql.window import Window
 
 from connapse_spark.functions.vector import (
-    _bind,
+    bind_once,
     cosine_expr,
     l2norm_expr,
     paired_cosine_expr,
@@ -441,7 +441,7 @@ def cluster_assign(
     # read it — unboundaried, the whole k-seed fold ran twice per row.
     def _best_of(vv):
         def _step(acc, s):
-            return _bind(
+            return bind_once(
                 cosine_expr(s["cvec"], vv),
                 lambda sc: F.when(
                     sc > acc["score"],
@@ -451,7 +451,7 @@ def cluster_assign(
 
         return F.aggregate("_seeds", acc0, _step)
 
-    scored_cols = [F.col(id_col), _bind(v, _best_of).alias("_best")]
+    scored_cols = [F.col(id_col), bind_once(v, _best_of).alias("_best")]
     if keep_vec:
         scored_cols.append(v.alias("_v"))
     scored = embeddings.crossJoin(F.broadcast(seeds)).select(*scored_cols)

@@ -24,31 +24,6 @@ from connapse_spark.operators.search import WEIGHT_EXACT, WEIGHT_STEMMED
 
 
 # ---------------------------------------------------------------------------
-# Q2 — vector KNN
-# ---------------------------------------------------------------------------
-
-
-def knn_sql(
-    query_vec: list[float],
-    k: int = 10,
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    where: str | None = None,
-) -> str:
-    qv = sql_vector_literal(query_vec)
-    where_clause = f"WHERE {where}" if where else ""
-    return f"""
-WITH q AS (SELECT {qv} AS qv),
-scored AS (
-  SELECT {id_col}, {sql_cosine(f"CAST({vec_col} AS DOUBLE[])", "qv")} AS score
-  FROM {table}, q {where_clause}
-)
-SELECT {id_col}, score FROM scored ORDER BY score DESC, {id_col} LIMIT {k}
-""".strip()
-
-
-# ---------------------------------------------------------------------------
 # Q3 — keyword search
 # ---------------------------------------------------------------------------
 

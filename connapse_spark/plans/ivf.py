@@ -27,7 +27,7 @@ parquet row-group level.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -35,7 +35,7 @@ from pyspark.sql.window import Window
 
 from connapse_spark.functions.embed import sql_vector_literal
 from connapse_spark.functions.vector import (
-    _bind,
+    bind_once,
     cosine_expr,
     dot_expr,
     l2norm_expr,
@@ -274,21 +274,34 @@ def probe_list_ids(
     """Rank centroids by cosine to the query ON THE DRIVER (the centroid
     table is ≤100 rows by the lists policy — exactly the coordinator-side
     decision pgvector's ivfflat.probes makes) and return the ``nprobe``
-    nearest list_ids. The Python fold here is the same sequential FP ops as
-    ``sql_cosine``'s left fold, so a DuckDB mirror ranks identically
-    (pinned by the green ``ann_ivf_seeded`` oracle). Ties break on list_id
-    ascending, mirroring ``ORDER BY s DESC, list_id``."""
+    nearest list_ids. See :func:`rank_lists` for the ranking contract."""
     return probe_list_ids_many(centroids, [query_vec], nprobe)[0]
 
 
 def probe_list_ids_many(
     centroids: DataFrame, query_vecs: list[list[float]], nprobe: int
 ) -> list[list[int]]:
-    """Batched probe selection: ONE collect of the centroid table, then the
-    same sequential-fold ranking per query — the driver-side cost of
-    serving an N-query batch through the IVF index is one tiny collect,
-    not N."""
-    rows = [(r["list_id"], r["centroid"]) for r in centroids.collect()]
+    """Batched probe selection: ONE collect of the centroid table, then
+    :func:`rank_lists` per query — the driver-side cost of serving an
+    N-query batch through the IVF index is one tiny collect, not N. A
+    :class:`VectorIndex` bundle keeps the collected rows
+    (:meth:`VectorIndex.probe_lists`), so its probes collect nothing."""
+    return rank_lists(_collect_centroids(centroids), query_vecs, nprobe)
+
+
+def _collect_centroids(centroids: DataFrame) -> list[tuple]:
+    """The (list_id, centroid) rows of a centroid table, on the driver."""
+    return [(r["list_id"], r["centroid"]) for r in centroids.collect()]
+
+
+def rank_lists(
+    rows: list[tuple], query_vecs: list[list[float]], nprobe: int
+) -> list[list[int]]:
+    """The ``nprobe`` nearest lists per query over collected (list_id,
+    centroid) rows, in pure Python. The fold here is the same sequential
+    FP ops as ``sql_cosine``'s left fold, so a DuckDB mirror ranks
+    identically (pinned by the green ``ann_ivf_seeded`` oracle). Ties
+    break on list_id ascending, mirroring ``ORDER BY s DESC, list_id``."""
 
     def _probe(qv: list[float]) -> list[int]:
         qn = sum(x * x for x in qv) ** 0.5
@@ -455,12 +468,27 @@ class VectorIndex:
     index is a physical structure, not a semantic change.
 
     index: (id, list_id, vec, norm) — write partitioned by list_id.
-    centroids: (list_id, centroid) — ≤100 rows, collected at probe time.
+    centroids: (list_id, centroid) — ≤100 rows. A bundle stands for one
+    pinned cut, so its first probe collects them and the rows stay on the
+    driver for THIS instance (a new cut is a new bundle with its own
+    rows): later probes rank lists in pure Python and launch no Spark job.
+    Building a bundle collects nothing.
     """
 
     index: DataFrame
     centroids: DataFrame
     nprobe: int = 4
+    _rows: list | None = field(default=None, init=False, repr=False, compare=False)
+
+    def centroid_rows(self) -> list[tuple]:
+        """(list_id, centroid) rows, collected once per bundle."""
+        if self._rows is None:
+            self._rows = _collect_centroids(self.centroids)
+        return self._rows
+
+    def probe_lists(self, query_vecs: list[list[float]]) -> list[list[int]]:
+        """:func:`rank_lists` of each query over this bundle's centroids."""
+        return rank_lists(self.centroid_rows(), query_vecs, self.nprobe)
 
     def persist(self) -> "VectorIndex":
         self.index.persist()
@@ -752,7 +780,7 @@ def ivf_index_upsert(
     )
 
     def _step(acc, s):
-        return _bind(
+        return bind_once(
             cosine_expr(s["cvec"], F.col("vec")),
             lambda sc: F.when(
                 sc > acc["score"], F.struct(s["cid"].alias("cid"), sc.alias("score"))
@@ -879,7 +907,7 @@ def ivf_drift(index: DataFrame, dims: int = 64, round_digits: int = 6) -> DataFr
         # matching the SQL row_number ORDER BY s DESC, cid. sc is bound
         # once (r11): it was referenced by both the comparison and the
         # kept struct, running the O(d) cosine twice per seed.
-        return _bind(
+        return bind_once(
             cosine_expr(s["cvec"], F.col("vec")),
             lambda sc: F.when(
                 sc > acc["score"], F.struct(s["cid"].alias("cid"), sc.alias("score"))

@@ -492,24 +492,17 @@ def ivfpq_probe(
     dims: int = 64,
 ) -> DataFrame:
     """Probe the IVFPQ index: rank centroids by cosine to the query ON THE
-    DRIVER (same coordinator-side decision as ann_ivf_topk,
-    plans/ivf.py:231 — the centroid table is ≤100 rows by policy), scan
+    DRIVER (the same ``plans.ivf.probe_list_ids`` ranking as ann_ivf_topk —
+    the centroid table is ≤100 rows by policy), scan
     only ``list_id IN (probe set)`` (partition pruning on the stored
     layout), score the 4-byte codes against the broadcast m×k LUT, top-k.
 
     Output: (id, list_id, adc_dist) ascending — ADC is a DISTANCE; the
     cosine probes elsewhere return descending similarities."""
+    from connapse_spark.plans.ivf import probe_list_ids
+
     sub_d = dims // n_subspaces
-    qn = sum(x * x for x in query_vec) ** 0.5
-
-    def _cos(c: list[float]) -> float:
-        cn = sum(x * x for x in c) ** 0.5
-        if cn <= 0.0 or qn <= 0.0:
-            return 0.0
-        return sum(a * b for a, b in zip(c, query_vec)) / (cn * qn)
-
-    ranked = sorted(((-_cos(r["centroid"]), r["list_id"]) for r in centroids.collect()))
-    probe_ids = [int(lid) for _, lid in ranked[:nprobe]]
+    probe_ids = [int(lid) for lid in probe_list_ids(centroids, query_vec, nprobe)]
 
     qv = F.array(*[F.lit(float(x)) for x in query_vec])
     lut = F.transform(

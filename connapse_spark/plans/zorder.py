@@ -142,7 +142,16 @@ def write_zordered(
     With explicit boundaries + hash-slot routing (``_exact_route_values``)
     the payload plan executes exactly once — the shuffle itself
     (tests/test_round3.py::test_write_zordered_payload_executes_once pins
-    this with an accumulator on a payload UDF)."""
+    this with an accumulator on a payload UDF).
+
+    The z-key is at most 53 bits wide (``len(cols) * bits <= 53``): the
+    range boundaries come back from approxQuantile as doubles, which hold
+    integers exactly only up to 2^53."""
+    if len(cols) * bits > 53:
+        raise ValueError(
+            f"z-key of {len(cols)} cols x {bits} bits exceeds the 53 bits "
+            "a double quantile boundary represents exactly"
+        )
     zcols = normalized_zorder_cols(df, cols, bits)  # one key-only stats agg
     zkey = zorder_key_expr(zcols, bits)
     probs = [i / n_files for i in range(1, n_files)]

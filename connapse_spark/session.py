@@ -53,20 +53,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    """Load the driver's parquet tables as a dict of DataFrames."""
-    names = names or [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ]
-    return {n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet")) for n in names}

@@ -9,9 +9,6 @@ cloud stores are the same code with an ``s3a://`` / ``abfss://`` URI —
 Hadoop's connectors do the paginated listing the reference hand-rolls
 (S3Connector.cs:78-108).
 
-ConnectorType dispatch (S5, ConnectorFactory.cs + StorageModels.cs:3) is a
-URI-scheme resolver: a container row maps to (uri, options), not a class
-hierarchy.
 """
 
 from __future__ import annotations
@@ -20,30 +17,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-# ConnectorType enum (StorageModels.cs:3): value → URI scheme builder
-CONNECTOR_SCHEMES = {
-    0: "s3a",  # ManagedStorage (MinIO) — s3a against the MinIO endpoint
-    1: "file",  # Filesystem
-    3: "s3a",  # S3
-    4: "abfss",  # AzureBlob
-}
-
-
-def connector_uri(connector_type: int, config: dict) -> str:
-    """S5 dispatch: container row → source URI. Mirrors
-    ConnectorFactory.Create + each connector's path mapping."""
-    scheme = CONNECTOR_SCHEMES.get(connector_type)
-    if scheme is None:
-        raise ValueError(f"unknown connector_type {connector_type}")
-    if scheme == "file":
-        return "file://" + os.path.abspath(config["root_path"])
-    if scheme == "s3a":
-        return f"s3a://{config['bucket']}/{config.get('prefix', '').lstrip('/')}"
-    return (
-        f"abfss://{config['container']}@{config['account']}.dfs.core.windows.net/"
-        f"{config.get('prefix', '').lstrip('/')}"
-    )
 
 
 def list_files(
@@ -64,28 +37,6 @@ def list_files(
         F.col("path"),
         F.col("length").alias("size_bytes"),
         F.col("modificationTime").alias("last_modified"),
-    )
-
-
-def read_files(
-    spark: SparkSession,
-    uri: str,
-    glob: str | None = None,
-    recursive: bool = True,
-) -> DataFrame:
-    """S1-S4 ReadFileAsync, batch form: (path, size_bytes, last_modified,
-    content: binary). One task per file group; cloud listing is pushed to
-    the store's LIST API by the Hadoop connector."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    return reader.load(uri).select(
-        F.col("path"),
-        F.col("length").alias("size_bytes"),
-        F.col("modificationTime").alias("last_modified"),
-        F.col("content"),
     )
 
 

@@ -457,6 +457,15 @@ def test_zorder_key_rejects_overflow(spark):
         zorder.zorder_key_expr([F.col("a"), F.col("b")], bits=32)
 
 
+def test_write_zordered_rejects_key_wider_than_53_bits(spark, tmp_path):
+    from connapse_spark.plans import zorder
+
+    df = spark.createDataFrame([(1, 2)], ["a", "b"])
+    with pytest.raises(ValueError, match="53 bits"):
+        zorder.write_zordered(df, str(tmp_path / "z"), ["a", "b"], bits=27)
+    assert not (tmp_path / "z").exists()
+
+
 def test_write_zordered_narrows_both_dimensions(spark, sf_dir, tmp_path):
     """After z-order clustering, each FILE's min/max envelope must be
     narrow on BOTH key columns — the property parquet row-group skipping

@@ -1329,7 +1329,7 @@ def test_hybrid_many_fast_websearch_parity_with_oracle_tier(spark, sf_dir):
     """FULL websearch syntax through the PRODUCTION tier (r10 — VERDICT
     r9 ask #3): hybrid_search_many_fast(websearch=True) must equal the
     oracle tier hybrid_search_many(websearch=True) — keyword doubles
-    BIT-equal (set-based postings math mirrors websearch_score_expr's FP
+    BIT-equal (set-based postings math mirrors websearch_score_sql's FP
     order), full rows equal after the fast family's round-9 vector
     contract. Covers phrases, negation, OR, pure negation, whitespace
     (Q13), predicates, and both the corpus-derived and the served
