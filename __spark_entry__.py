@@ -1022,7 +1022,7 @@ def q_contamination(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     held_out = docs.filter(F.col("doc_id") % 97 == 0)
     blocklist = held_out.select(
-        F.explode(dedup.shingles_expr(F.col("text"), 3)).alias("s")
+        F.explode(dedup.shingles_expr("text", 3)).alias("s")
     )
     return dedup.contamination_check(docs, blocklist, n=3)
 
@@ -1081,7 +1081,7 @@ def q_curate_classified(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     held_out = docs.filter(F.col("doc_id") % 97 == 0)
     blocklist = held_out.select(
-        F.explode(dedup.shingles_expr(F.col("text"), 3)).alias("s")
+        F.explode(dedup.shingles_expr("text", 3)).alias("s")
     )
     return curate.curate(
         docs, blocklist, neardup_threshold=0.4, contam_n=3,
@@ -1229,7 +1229,7 @@ def q_corpus_curate(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     held_out = docs.filter(F.col("doc_id") % 97 == 0)
     blocklist = held_out.select(
-        F.explode(dedup.shingles_expr(F.col("text"), 3)).alias("s")
+        F.explode(dedup.shingles_expr("text", 3)).alias("s")
     )
     return curate.curate(docs, blocklist, neardup_threshold=0.4, contam_n=3)
 
@@ -1364,7 +1364,7 @@ def q_dataset_card(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     held_out = docs.filter(F.col("doc_id") % 97 == 0)
     blocklist = held_out.select(
-        F.explode(dedup.shingles_expr(F.col("text"), 3)).alias("s")
+        F.explode(dedup.shingles_expr("text", 3)).alias("s")
     )
     return curate.dataset_card(docs, blocklist)
 
@@ -1385,7 +1385,7 @@ def q_bloom_contamination(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     held_out = docs.filter(F.col("doc_id") % 97 == 0)
     blocklist = held_out.select(
-        F.explode(dedup.shingles_expr(F.col("text"), 3)).alias("s")
+        F.explode(dedup.shingles_expr("text", 3)).alias("s")
     )
     return dedup.bloom_contamination_check(docs, blocklist, n=3, m_bits=8192, j=5)
 
@@ -2887,7 +2887,7 @@ def q_web_curate(spark, sf_dir):
     )
     held_out = crawled.filter(F.col("doc_id") % 97 == 0)
     blocklist = held_out.select(
-        F.explode(dedup.shingles_expr(F.col("text"), 3)).alias("s")
+        F.explode(dedup.shingles_expr("text", 3)).alias("s")
     )
     return curate.curate(crawled, blocklist, neardup_threshold=0.4, contam_n=3)
 

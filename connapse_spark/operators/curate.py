@@ -1,7 +1,6 @@
-"""End-to-end corpus curation: one verdict per document from the composed
-dedup/quality/decontamination operators — the single call a training-data
-team actually runs, showing the individual operators compose into a
-pipeline (the batch analogue of the reference's multi-stage ingestion
+"""End-to-end corpus curation: one verdict per document from the dedup,
+quality and decontamination stages — the single call a training-data team
+actually runs (the batch analogue of the reference's multi-stage ingestion
 pipeline, IngestionPipeline.cs:1-120, recast as corpus curation).
 
 Stage order follows the published curation recipes (RefinedWeb, Penedo et
@@ -10,12 +9,21 @@ fuzzy dedup → benchmark decontamination → quality heuristics. The emitted
 ``reason`` uses that same precedence, so per-stage drop counts read
 straight off a groupBy(reason).
 
-Scale (100 TB): each stage is the already-audited plan of its operator
-(one hash shuffle for exact, banded self-join for MinHash, broadcast
-semi-join for contamination, map-side quality). The verdict assembly is
-three left joins on the id — all against DROP-side tables that are orders
-of magnitude smaller than the corpus, so AQE broadcasts them; nothing here
-adds a corpus-sized shuffle beyond the stages themselves.
+Scale (100 TB): curate() is ONE per-document pass, not a stack of the
+four stage operators. A projection computes (id, sha256, tokens); the
+Gopher stats, keep flag and shingle array derive from that one token
+array; one explode of the shingles feeds both the MinHash hashes and a
+left broadcast join to the (small, distinct) blocklist; one groupBy(id)
+yields the signature and the contamination count. The near-dup join, the
+exact-dup window and the final sort run on that per-document table (id,
+content hash, keep flag, k-long signature, two counts) — no corpus-sized
+shuffle beyond the per-document aggregate. The executed plan reads the
+corpus twice: the per-document table's two consumers (verdict, banding)
+prune it to different columns, so their exchanges are not reused; each
+read tokenizes a document once. Every stage's math is the same Spark-SQL
+text as its standalone operator (dedup.spark_sql_*,
+textstats.spark_sql_gopher_*), so the verdicts equal the composed stage
+operators'.
 """
 
 from __future__ import annotations
@@ -23,7 +31,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from connapse_spark.functions.text import spark_sql_tokens_exact
 from connapse_spark.operators import dedup, textstats
+
+# near-dup stage: MinHash over 3-gram shingles, k=32 hashes in 8 bands
+# (minhash_lsh_pairs' defaults)
+MINHASH_N, MINHASH_K, MINHASH_BANDS = 3, 32, 8
 
 
 def curate(
@@ -37,13 +50,12 @@ def curate(
     min_logit_q: int = 0,
     tokens_col: str | None = None,
 ) -> DataFrame:
-    """(id, kept, reason) for every document.
+    """(id, kept, reason) for every document; ``id_col`` must be unique
+    (the document primary key — the per-document table groups by it).
 
     ``tokens_col`` (r12 — dataset_card pass fusion): a column on ``docs``
-    already holding ``tokens_exact_expr(text_col)``; the minhash,
-    contamination and gopher stages read it instead of each re-tokenizing
-    the corpus. Values are identical either way; the default (None) keeps
-    every stage's audited standalone plan.
+    already holding ``tokens_exact_expr(text_col)``, read instead of
+    tokenizing; values are identical either way.
 
     reason ∈ {exact_duplicate, near_duplicate, contaminated, low_quality,
     model_low_quality, kept}, first matching stage wins:
@@ -52,7 +64,7 @@ def curate(
     * near_duplicate — appears as the HIGHER id of a MinHash-LSH pair at
       ``neardup_threshold`` (greedy keep-lowest; transitive chains collapse
       toward the lowest id, same convention as neardup_components' roots);
-    * contaminated — shares an n-gram with the blocklist;
+    * contaminated — shares a ``contam_n``-gram with the blocklist;
     * low_quality — fails any Gopher-style quality rule;
     * model_low_quality (only when ``classifier_model`` is passed — r9) —
       survives every heuristic stage but scores below ``min_logit_q``
@@ -61,48 +73,75 @@ def curate(
       stage after the rule-based gates. Its plan adds one broadcast join
       + one id-keyed sum — nothing corpus-quadratic.
     """
-    ex = dedup.exact_dedup(docs, id_col=id_col, text_col=text_col).select(
-        F.col(id_col).alias("id"), (~F.col("is_kept")).alias("exact_dup")
+    toks = (
+        f"`{tokens_col}`" if tokens_col is not None
+        else spark_sql_tokens_exact(f"`{text_col}`")
     )
-    nd_drop = (
-        dedup.minhash_lsh_pairs(
-            docs, threshold=neardup_threshold, id_col=id_col, text_col=text_col,
-            tokens_col=tokens_col,
+    shingles = [f"{dedup.spark_sql_shingles('toks', MINHASH_N)} AS sh"]
+    if contam_n == MINHASH_N:
+        grams, minhash_gram, contam_gram = "sh", "TRUE", "TRUE"
+    else:
+        # the blocklist n-grams are another shingle set: explode both, told
+        # apart by position (the MinHash shingles come first)
+        shingles.append(f"{dedup.spark_sql_shingles('toks', contam_n)} AS ch")
+        grams, minhash_gram, contam_gram = "concat(sh, ch)", "pos < n_sh", "pos >= n_sh"
+    per_doc = (
+        docs.selectExpr(
+            f"`{id_col}` AS id", f"sha2(`{text_col}`, 256) AS h", f"{toks} AS toks"
         )
-        .select(F.col("id_b").alias("id"))
+        .selectExpr("id", "h", *textstats.spark_sql_gopher_stats("toks"), *shingles)
+        .selectExpr(
+            "id", "h", f"{textstats.spark_sql_gopher_rules()['keep']} AS keep",
+            "size(sh) AS n_sh", f"{grams} AS grams",
+        )
+        # explode_outer: a shingle-less document keeps one NULL row, so it
+        # still gets a per-document row, with n_x 0 (never banded) and
+        # n_hits 0
+        .selectExpr("id", "h", "keep", "n_sh", "posexplode_outer(grams) AS (pos, g)")
+        .selectExpr(
+            "id", "h", "keep",
+            f"CASE WHEN {minhash_gram} THEN {dedup.spark_sql_sha_bigint('g')} END AS x",
+            f"CASE WHEN {contam_gram} THEN g END AS cg",
+        )
+        .join(F.broadcast(blocklist.selectExpr("s AS bs").distinct()), F.expr("cg = bs"), "left")
+        # keyed by id alone (h and keep ride along as any_value): the
+        # table then arrives hash-partitioned on id, which the near-dup
+        # join reuses instead of shuffling the verdict side again
+        .groupBy("id")
+        .agg(
+            F.expr("any_value(h) AS h"),
+            F.expr("any_value(keep) AS keep"),
+            F.expr(f"{dedup.spark_sql_minhash_signature('x', MINHASH_K)} AS sig"),
+            F.expr("count(x) AS n_x"),
+            F.expr("count(bs) AS n_hits"),
+        )
+    )
+    near = (
+        dedup.band_pairs(
+            dedup.band_signatures(per_doc.filter("n_x > 0"), MINHASH_K, MINHASH_BANDS),
+            neardup_threshold, MINHASH_K,
+        )
+        .selectExpr("id_b AS id", "TRUE AS near_dup")
         .distinct()
-        .withColumn("near_dup", F.lit(True))
     )
-    ct = dedup.contamination_check(
-        docs, blocklist, n=contam_n, id_col=id_col, text_col=text_col,
-        tokens_col=tokens_col,
-    ).select("id", "contaminated")
-    gq = textstats.gopher_filter(
-        docs, id_col=id_col, text_col=text_col, tokens_col=tokens_col
-    ).select(F.col(id_col).alias("id"), F.col("keep").alias("quality_ok"))
-    reason = (
-        F.when(F.col("exact_dup"), F.lit("exact_duplicate"))
-        .when(F.coalesce(F.col("near_dup"), F.lit(False)), F.lit("near_duplicate"))
-        .when(F.col("contaminated"), F.lit("contaminated"))
-        .when(~F.col("quality_ok"), F.lit("low_quality"))
-    )
-    verdict = ex.join(nd_drop, "id", "left").join(ct, "id").join(gq, "id")
+    verdict = per_doc.join(near, "id", "left")
+    arms = [
+        f"WHEN {dedup.spark_sql_dup_rank('h', 'id')} > 1 THEN 'exact_duplicate'",
+        "WHEN coalesce(near_dup, FALSE) THEN 'near_duplicate'",
+        "WHEN n_hits > 0 THEN 'contaminated'",
+        "WHEN NOT keep THEN 'low_quality'",
+    ]
     if classifier_model is not None:
         from connapse_spark.operators import classifier
 
         mq = classifier.quality_classifier_scores(
             docs, model=classifier_model, id_col=id_col, text_col=text_col
-        ).select(F.col(id_col).alias("id"), "logit_q")
+        ).selectExpr(f"`{id_col}` AS id", "logit_q")
         verdict = verdict.join(mq, "id")
-        reason = reason.when(
-            F.col("logit_q") < F.lit(int(min_logit_q)), F.lit("model_low_quality")
-        )
-    reason = reason.otherwise(F.lit("kept"))
+        arms.append(f"WHEN logit_q < {int(min_logit_q)} THEN 'model_low_quality'")
     return (
-        verdict
-        .select("id", reason.alias("reason"))
-        .withColumn("kept", F.col("reason") == "kept")
-        .select("id", "kept", "reason")
+        verdict.selectExpr("id", f"CASE {' '.join(arms)} ELSE 'kept' END AS reason")
+        .selectExpr("id", "reason = 'kept' AS kept", "reason")
         .orderBy("id")
     )
 
@@ -180,26 +219,32 @@ def dataset_card(
     and five of them re-running the tokenizer (minhash, contamination,
     gopher inside curate, gopher inside quality_score_linear,
     language_id) — ~6 corpus scans and 5 tokenizes per card. The card now
-    materializes (id, text, tokens) ONCE with an eager localCheckpoint
-    and feeds every component from it via ``tokens_col``: one parquet
+    materializes (id, text, tokens) ONCE with an eager checkpoint and
+    feeds every component from it via ``tokens_col``: one parquet
     pass, one tokenize; the components' own expressions are unchanged, so
-    every derived value is identical. localCheckpoint (not persist) on
+    every derived value is identical. A checkpoint (not persist) on
     purpose: its storage is tied to THIS RDD instance — a fresh
     invocation recomputes from parquet, so nothing is cached across
     bench/oracle runs (the CacheManager canonicalized-plan reuse that
-    persist() would silently give a repeated identical query)."""
+    persist() would silently give a repeated identical query). The
+    checkpoint goes through links._step_checkpoint: a RELIABLE checkpoint
+    when the session has a checkpoint dir (an executor loss must not lose
+    the shared frame's blocks mid-card), localCheckpoint otherwise."""
     from connapse_spark.functions.text import tokens_exact_expr
+    from connapse_spark.operators import links
     from connapse_spark.operators.textstats import (
         language_id,
         quality_score_linear,
         token_count_bpeish_expr,
     )
 
-    shared = docs.select(
-        F.col(id_col),
-        F.col(text_col),
-        tokens_exact_expr(F.col(text_col)).alias("_ts_shared"),
-    ).localCheckpoint(eager=True)
+    shared = links._step_checkpoint(
+        docs.select(
+            F.col(id_col),
+            F.col(text_col),
+            tokens_exact_expr(F.col(text_col)).alias("_ts_shared"),
+        )
+    )
     verdicts = curate(
         shared, blocklist, id_col=id_col, text_col=text_col,
         tokens_col="_ts_shared",

@@ -25,7 +25,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from connapse_spark.functions.text import sql_tokens_exact, tokens_exact_expr
+from connapse_spark.functions.text import (
+    spark_sql_tokens_exact,
+    sql_tokens_exact,
+    tokens_exact_expr,
+)
+from connapse_spark.functions.vector import spark_sql_bind, spark_sql_literal
 
 HASH_MOD = 2147483647  # 2^31 - 1, Mersenne prime
 
@@ -45,17 +50,24 @@ def sql_sha_bigint(c: str) -> str:
 # ---------------------------------------------------------------------------
 
 
+def spark_sql_dup_rank(hash_col: str, id_col: str) -> str:
+    """Spark-SQL text of a document's rank in its content-hash group (by id
+    asc) — rank 1 is the kept copy."""
+    return f"row_number() OVER (PARTITION BY {hash_col} ORDER BY {id_col})"
+
+
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Classify every document: content sha256, duplicate-group size, rank
     within group (by id asc), and the keep flag (first id wins).
     One shuffle on the hash; no join."""
-    h = F.sha2(F.col(text_col), 256).alias("content_hash")
-    w = Window.partitionBy("content_hash").orderBy(F.col(id_col))
     return (
-        docs.select(F.col(id_col), h)
-        .withColumn("dup_rank", F.row_number().over(w))
-        .withColumn("group_size", F.count(F.lit(1)).over(Window.partitionBy("content_hash")))
-        .withColumn("is_kept", F.col("dup_rank") == 1)
+        docs.selectExpr(f"`{id_col}`", f"sha2(`{text_col}`, 256) AS content_hash")
+        .selectExpr(
+            "*",
+            f"{spark_sql_dup_rank('content_hash', f'`{id_col}`')} AS dup_rank",
+            "count(1) OVER (PARTITION BY content_hash) AS group_size",
+        )
+        .selectExpr("*", "dup_rank = 1 AS is_kept")
     )
 
 
@@ -74,40 +86,45 @@ FROM (SELECT {id_col}, sha256({text_col}) AS content_hash FROM documents)
 # ---------------------------------------------------------------------------
 
 
-def shingles_expr(text: Column, n: int = 3) -> Column:
-    """Distinct n-gram token shingles joined with ' ' — sorted for
-    deterministic array order.
+def spark_sql_shingles(toks: str, n: int = 3) -> str:
+    """Spark-SQL text of the distinct n-gram token shingles of the token
+    array ``toks``, joined with ' ' and sorted for a deterministic array
+    order. ``toks`` must be cheap to reference (a column or a lambda
+    variable): the text names it 2n-1 times.
 
     Built by zip_with over SHIFTED copies of the token array instead of a
     positional transform whose lambda indexes back into the array: Catalyst
     re-evaluates lambda-captured subexpressions per element, which turns a
     slice-in-lambda formulation into O(tokens²) re-tokenization per
     document (~20s just to shingle 5k docs). zip_with lambdas touch only
-    their own arguments; the token array is evaluated a constant number of
-    times per row. zip_with pads to the longer side with nulls and concat
-    propagates null, so trailing (incomplete) windows filter out.
+    their own arguments. zip_with pads to the longer side with nulls and
+    concat propagates null, so trailing (incomplete) windows filter out."""
+    acc = toks
+    for j in range(1, n):
+        shifted = f"slice({toks}, {j + 1}, greatest(size({toks}) - {j}, 0))"
+        acc = f"zip_with({acc}, {shifted}, (x, y) -> concat(x, ' ', y))"
+    return f"array_sort(array_distinct(filter({acc}, s -> s IS NOT NULL)))"
 
-    The token array is BOUND once via a one-element ``transform`` lambda
-    (r11): the shingle construction references the array ~5× (acc + each
-    shift's slice/size), and since HOFs evaluate interpreted — outside
-    codegen's subexpression elimination — each reference used to re-run
-    the full tokenizer (regex split + CJK bigrams) per row. A lambda
-    variable is evaluated once and read cheaply thereafter; measured
-    1.5× on the sf0.1 shingle+sha pass, bit-identical output."""
-    toks = tokens_exact_expr(text)
-    return F.element_at(
-        F.transform(F.array(toks), lambda t: _shingles_from_tokens(t, n)), 1
+
+def _text_shingles_sql(text_col: str, n: int, tokens_col: str | None = None) -> str:
+    """Shingles of column ``text_col`` as Spark-SQL text; from the token
+    column ``tokens_col`` instead when the caller already holds
+    ``tokens_exact_expr(text_col)`` there (identical values). The token
+    array is BOUND once as a lambda variable (r11): HOFs evaluate
+    interpreted, outside codegen's subexpression elimination, so each of
+    the shingle text's references would otherwise re-run the tokenizer
+    (measured 1.5× on the sf0.1 shingle+sha pass)."""
+    if tokens_col is not None:
+        return spark_sql_shingles(f"`{tokens_col}`", n)
+    return spark_sql_bind(
+        spark_sql_tokens_exact(f"`{text_col}`"), "_t", spark_sql_shingles("_t", n)
     )
 
 
-def _shingles_from_tokens(toks: Column, n: int) -> Column:
-    """Shingle construction over an already-evaluated token array column
-    (or HOF lambda variable — every reference must be cheap)."""
-    acc = toks
-    for j in range(1, n):
-        shifted = F.slice(toks, j + 1, F.greatest(F.size(toks) - j, F.lit(0)))
-        acc = F.zip_with(acc, shifted, lambda x, y: F.concat(x, F.lit(" "), y))
-    return F.array_sort(F.array_distinct(F.filter(acc, lambda s: s.isNotNull())))
+def shingles_expr(text_col: str, n: int = 3) -> Column:
+    """Column of the distinct sorted n-gram token shingles of column
+    ``text_col`` (see :func:`spark_sql_shingles`), one ``F.expr`` call."""
+    return F.expr(_text_shingles_sql(text_col, n))
 
 
 def sql_shingles(c: str, n: int = 3) -> str:
@@ -150,7 +167,7 @@ def ngram_jaccard_pairs(
     if method == "auto":
         method = "prefix" if threshold >= 0.5 else "inverted"
     sh = docs.select(
-        F.col(id_col).alias("id"), shingles_expr(F.col(text_col), n).alias("sh")
+        F.col(id_col).alias("id"), shingles_expr(text_col, n).alias("sh")
     ).withColumn("n_sh", F.size("sh"))
     # The plan below fans `sh` into up to 5 consumers (df-count, both sides
     # of the candidate join, both verification sides); without a
@@ -315,27 +332,63 @@ ORDER BY id_a, id_b
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature_expr(shingle_hashes: Column, num_hashes: int = 32) -> Column:
-    """k minhashes h_i(x) = ((2i+1)·x + i² + 7) mod p over sha-derived
-    shingle ids (materialized once — sha per shingle, not per (shingle, i)),
-    with coefficients derived deterministically from i — no RNG, identical
-    in the SQL mirror."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(
-            F.transform(
-                shingle_hashes,
-                lambda x: ((i * 2 + 1) * x + i * i + 7) % HASH_MOD,
-            )
-        ),
+def spark_sql_sha_bigint(c: str) -> str:
+    """:func:`_sha_bigint` as Spark-SQL text."""
+    return f"CAST(conv(substring(sha2({c}, 256), 1, 8), 16, 10) AS BIGINT)"
+
+
+def spark_sql_minhash_signature(x: str, num_hashes: int = 32) -> str:
+    """Spark-SQL AGGREGATE text: the k-component MinHash signature of a
+    group's shingle hashes ``x`` — k minhashes h_i(x) = ((2i+1)·x + i² + 7)
+    mod p with coefficients derived from i (no RNG, identical in the SQL
+    mirror). Each component is a plain ``min``, so partial (map-side)
+    aggregation keeps the shuffle at k longs per group; a group with no
+    non-null ``x`` gets k NULLs."""
+    mins = ", ".join(
+        f"min(({x} * {2 * i + 1} + {i * i + 7}) % {HASH_MOD})" for i in range(num_hashes)
+    )
+    return f"array({mins})"
+
+
+def spark_sql_band_keys(sig: str, num_hashes: int = 32, bands: int = 8) -> str:
+    """Spark-SQL text of the ``bands`` (band, key) structs of signature
+    ``sig``: key = the band's r = k/b components joined with ','."""
+    r = num_hashes // bands
+    return (
+        f"transform(sequence(0, {bands - 1}), b -> named_struct('band', b, 'key', "
+        f"concat_ws(',', transform(slice({sig}, b * {r} + 1, {r}), v -> CAST(v AS STRING)))))"
     )
 
 
-def sql_minhash_signature(shingle_hashes: str, num_hashes: int = 32) -> str:
+def spark_sql_minhash_estimate(sig_a: str, sig_b: str, num_hashes: int = 32) -> str:
+    """Spark-SQL text of the MinHash Jaccard ESTIMATE: the fraction of
+    agreeing signature components."""
     return (
-        f"list_transform(range(0, {num_hashes}), i -> "
-        f"list_min(list_transform({shingle_hashes}, x -> "
-        f"((i * 2 + 1) * x + i * i + 7) % {HASH_MOD})))"
+        f"size(filter(zip_with({sig_a}, {sig_b}, (x, y) -> x = y), e -> e)) "
+        f"/ {spark_sql_literal(float(num_hashes))}"
+    )
+
+
+def band_signatures(sig: DataFrame, num_hashes: int = 32, bands: int = 8) -> DataFrame:
+    """(id, sig) → (id, sig, band, key): one row per band of each signature."""
+    # inline_outer: the band array is never empty (bands >= 1), but a plain
+    # inline's inferred size()>0 filter would rebuild every band key per row
+    # a second time (see minhash_banded)
+    return sig.selectExpr(
+        "id", "sig", f"inline_outer({spark_sql_band_keys('sig', num_hashes, bands)})"
+    )
+
+
+def band_pairs(banded: DataFrame, threshold: float, num_hashes: int = 32) -> DataFrame:
+    """(id_a < id_b, est_jaccard) of the banded self-join (shuffle on the
+    band key, never a cross join) that pass the estimate filter — one row
+    per shared band, so a pair sharing several bands repeats."""
+    a, b = banded.alias("a"), banded.alias("b")
+    est = spark_sql_minhash_estimate("a.sig", "b.sig", num_hashes)
+    return (
+        a.join(b, F.expr("a.band = b.band AND a.key = b.key AND a.id < b.id"))
+        .selectExpr("a.id AS id_a", "b.id AS id_b", f"{est} AS est_jaccard")
+        .filter(f"est_jaccard >= {spark_sql_literal(threshold)}")
     )
 
 
@@ -351,67 +404,29 @@ def minhash_banded(
     """(id, sig, band, key): signatures + band keys — the SHARED kernel of
     the one-shot pair finder and the persisted incremental index (write it
     partitioned by band; band-key probes then prune at the layout level).
+    ``tokens_col`` as in :func:`contamination_check` (r12 pass fusion).
 
-    Signature via explode → groupBy(id) with 32 cheap min-aggregates:
+    Signature via explode → groupBy(id) with k cheap min-aggregates:
     sha256 runs ONCE per (doc, shingle) row and partial (map-side) mins
-    keep the shuffle at 32 longs per doc. The nested-HOF formulation
-    (minhash_signature_expr) re-evaluates the whole shingle-hash array per
-    hash function because Catalyst does not hoist lambda-invariant
-    subexpressions — ~30× slower on wide docs."""
-    rows_per_band = num_hashes // bands
+    keep the shuffle at k longs per doc. A nested-HOF signature (min over
+    a transform of the shingle-hash array per hash function) re-evaluates
+    the whole array per hash function because Catalyst does not hoist
+    lambda-invariant subexpressions — ~30× slower on wide docs."""
     # explode_outer + isnotnull ≡ explode, but dodges InferFiltersFromGenerate:
     # for a plain explode that rule adds size(<arr>)>0 under the Generate and
     # predicate pushdown substitutes the shingle expression through the
     # projection — a SECOND full tokenize+shingle pass per row (r11; the
     # explicit isnotnull sits on the GENERATED attribute, which cannot push
     # below the Generate, and restores the exact row set)
-    sh_expr = (
-        shingles_expr(F.col(text_col), n)
-        if tokens_col is None
-        # r12 pass fusion: shingle from an already-materialized token
-        # column (same _shingles_from_tokens math, identical values)
-        else _shingles_from_tokens(F.col(tokens_col), n)
-    )
-    exploded = (
-        docs.select(
-            F.col(id_col).alias("id"),
-            F.explode_outer(sh_expr).alias("s"),
-        )
-        .filter(F.col("s").isNotNull())
-        .select("id", _sha_bigint(F.col("s")).alias("x"))
-    )
+    sh = _text_shingles_sql(text_col, n, tokens_col)
     sig = (
-        exploded.groupBy("id")
-        .agg(
-            *[
-                F.min((F.col("x") * (2 * i + 1) + i * i + 7) % HASH_MOD).alias(f"_h{i}")
-                for i in range(num_hashes)
-            ]
-        )
-        .select("id", F.array(*[f"_h{i}" for i in range(num_hashes)]).alias("sig"))
+        docs.selectExpr(f"`{id_col}` AS id", f"explode_outer({sh}) AS s")
+        .filter("s IS NOT NULL")
+        .selectExpr("id", f"{spark_sql_sha_bigint('s')} AS x")
+        .groupBy("id")
+        .agg(F.expr(f"{spark_sql_minhash_signature('x', num_hashes)} AS sig"))
     )
-    # explode_outer: the band array is never empty (bands >= 1), but a plain
-    # explode's inferred size()>0 filter would rebuild every band key per row
-    # a second time (see the exploded-side comment above)
-    return (
-        sig.select(
-            "id",
-            "sig",
-            F.explode_outer(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(bands - 1)),
-                    lambda b: F.struct(
-                        b.alias("band"),
-                        F.concat_ws(
-                            ",", F.transform(F.slice("sig", b * rows_per_band + 1, rows_per_band), lambda v: v.cast("string"))
-                        ).alias("key"),
-                    ),
-                )
-            ).alias("bk"),
-        )
-        .filter(F.col("bk").isNotNull())
-        .select("id", "sig", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    )
+    return band_signatures(sig, num_hashes, bands)
 
 
 def minhash_lsh_pairs(
@@ -431,37 +446,11 @@ def minhash_lsh_pairs(
 
     Output: (id_a, id_b, est_jaccard). Deterministic; oracle-mirrored.
     ``tokens_col`` as in :func:`contamination_check` (r12 pass fusion).
+    Ids must be unique: the estimate is a function of the pair's ids, so
+    ``distinct`` folds a pair's per-band rows into one.
     """
     banded = minhash_banded(docs, n, num_hashes, bands, id_col, text_col, tokens_col)
-    a, b_ = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda eq: eq
-            )
-        )
-        / F.lit(float(num_hashes))
-    )
-    return (
-        cand.select("id_a", "id_b", est.alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= F.lit(threshold))
-        .orderBy("id_a", "id_b")
-    )
+    return band_pairs(banded, threshold, num_hashes).distinct().orderBy("id_a", "id_b")
 
 
 def sql_minhash_lsh_pairs(
@@ -937,43 +926,28 @@ def contamination_check(
     when it shares any n-gram shingle with the blocklist (the standard
     "drop any training doc containing a test-set n-gram" rule).
 
-    Plan: explode the corpus shingles once, semi-join-count against the
+    Plan: explode the corpus shingles once, left-join them to the
     blocklist (broadcast when it fits — benchmark suites are tiny next to
-    a corpus), left-join the hit counts back onto the ids so CLEAN
-    documents keep a row (n_hits 0) — a decontamination report must list
-    what it kept, not only what it dropped.
+    a corpus) and count hits per id. explode_outer keeps a shingle-less
+    document as one NULL-shingle row, so CLEAN documents keep a row
+    (n_hits 0) with no join back onto the ids — a decontamination report
+    must list what it kept, not only what it dropped. (explode_outer also
+    dodges the inferred size()>0 filter that would re-run tokenize+shingle
+    per row through the pushed-down projection — see minhash_banded.)
 
     Output: (id, n_hits = distinct blocklisted shingles present,
     contaminated flag). ``tokens_col`` (r12 pass fusion): a column already
     holding ``tokens_exact_expr(text_col)`` — shingles derive from it
-    instead of re-tokenizing; identical values."""
-    sh_expr = (
-        shingles_expr(F.col(text_col), n)
-        if tokens_col is None
-        else _shingles_from_tokens(F.col(tokens_col), n)
-    )
-    sh = docs.select(F.col(id_col).alias("id"), sh_expr.alias("sh"))
-    # explode_outer + isnotnull: dodges the inferred size(sh)>0 filter that
-    # would re-run tokenize+shingle per row through the pushed-down
-    # projection (see minhash_signatures for the mechanism)
-    ex = (
-        sh.select("id", F.explode_outer("sh").alias("s"))
-        .filter(F.col("s").isNotNull())
-    )
-    bl = blocklist.select(F.col(shingle_col).alias("s")).distinct()
-    hits = (
-        ex.join(F.broadcast(bl), "s")
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
+    instead of re-tokenizing; identical values. Ids must be unique (the
+    count is per id)."""
+    sh = _text_shingles_sql(text_col, n, tokens_col)
+    ex = docs.selectExpr(f"`{id_col}` AS id", f"explode_outer({sh}) AS s")
+    bl = blocklist.selectExpr(f"`{shingle_col}` AS bs").distinct()
     return (
-        sh.select("id")
-        .join(hits, "id", "left")
-        .select(
-            "id",
-            F.coalesce(F.col("n_hits"), F.lit(0)).alias("n_hits"),
-            (F.coalesce(F.col("n_hits"), F.lit(0)) > 0).alias("contaminated"),
-        )
+        ex.join(F.broadcast(bl), F.expr("s = bs"), "left")
+        .groupBy("id")
+        .agg(F.expr("count(bs) AS n_hits"))
+        .selectExpr("id", "n_hits", "n_hits > 0 AS contaminated")
         .orderBy("id")
     )
 
@@ -1031,7 +1005,7 @@ def line_dedup(
     """
     # posexplode_outer + isnotnull: a plain posexplode's inferred size()>0
     # filter re-runs the regex split per row through the pushed-down
-    # projection (see minhash_signatures); split never yields an empty
+    # projection (see minhash_banded); split never yields an empty
     # array, so the null filter only drops the null-text rows plain
     # posexplode dropped anyway
     seg = F.posexplode_outer(
@@ -1153,7 +1127,7 @@ def dup_span_stats(
     toked = docs.select(F.col(id_col).alias("id"), toks.alias("_ts"))
     # explode_outer + isnotnull: a plain explode's inferred size()>0 filter
     # pushes through the projection and re-runs the whole
-    # tokenize+gram+sha chain per row (see minhash_signatures)
+    # tokenize+gram+sha chain per row (see minhash_banded)
     pairs = toked.select(
         "id",
         F.explode_outer(
@@ -1460,9 +1434,9 @@ def bloom_contamination_check(
     One shuffle (the per-doc count), zero joins against the blocklist."""
     bloom = bloom_build(blocklist, m_bits, j, shingle_col)
     sh = docs.select(
-        F.col(id_col).alias("id"), shingles_expr(F.col(text_col), n).alias("sh")
+        F.col(id_col).alias("id"), shingles_expr(text_col, n).alias("sh")
     )
-    # explode_outer + isnotnull: inferred-filter dodge (see minhash_signatures)
+    # explode_outer + isnotnull: inferred-filter dodge (see minhash_banded)
     ex = (
         sh.select("id", F.explode_outer("sh").alias("s"))
         .filter(F.col("s").isNotNull())
@@ -1650,7 +1624,7 @@ def cdc_chunks(
     )
     # posexplode_outer + isnotnull: a plain posexplode's inferred size()>0
     # filter would re-run the ENTIRE rolling-hash boundary fold per row
-    # through the pushed-down projection (see minhash_signatures)
+    # through the pushed-down projection (see minhash_banded)
     exploded = docs.select(
         F.col(id_col).alias("id"), text.alias("_t"), F.posexplode_outer(segs)
     ).filter(F.col("pos").isNotNull())
@@ -1821,30 +1795,13 @@ def incremental_neardup_pairs(
     come from minhash_lsh_pairs over the batch (tiny) — run both."""
     probe = minhash_banded(new_docs, n, num_hashes, bands, id_col, text_col)
     p, ix = probe.alias("p"), index.alias("ix")
-    cand = (
-        p.join(
-            ix,
-            (F.col("p.band") == F.col("ix.band"))
-            & (F.col("p.key") == F.col("ix.key"))
-            & (F.col("p.id") != F.col("ix.id")),
-        )
-        .select(
-            F.col("p.id").alias("new_id"),
-            F.col("ix.id").alias("old_id"),
-            F.col("p.sig").alias("sig_a"),
-            F.col("ix.sig").alias("sig_b"),
-        )
-        .dropDuplicates(["new_id", "old_id"])
-    )
-    est = (
-        F.size(
-            F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda eq: eq)
-        )
-        / F.lit(float(num_hashes))
-    )
+    est = spark_sql_minhash_estimate("sig_a", "sig_b", num_hashes)
     return (
-        cand.select("new_id", "old_id", est.alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= F.lit(threshold))
+        p.join(ix, F.expr("p.band = ix.band AND p.key = ix.key AND p.id != ix.id"))
+        .selectExpr("p.id AS new_id", "ix.id AS old_id", "p.sig AS sig_a", "ix.sig AS sig_b")
+        .dropDuplicates(["new_id", "old_id"])
+        .selectExpr("new_id", "old_id", f"{est} AS est_jaccard")
+        .filter(f"est_jaccard >= {spark_sql_literal(threshold)}")
         .orderBy("new_id", "old_id")
     )
 

@@ -13,7 +13,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from connapse_spark.functions.text import sql_tokens_exact, tokens_exact_expr
+from connapse_spark.functions.text import (
+    spark_sql_tokens_exact,
+    sql_tokens_exact,
+    tokens_exact_expr,
+)
+from connapse_spark.functions.vector import spark_sql_literal, spark_sql_values
 from connapse_spark.operators.dedup import HASH_MOD, _sha_bigint, sql_sha_bigint
 
 # Small English function-word list for the n-gram/stopword language heuristic.
@@ -611,6 +616,50 @@ SELECT id AS {id_col}, term, tf, df, score FROM ranked WHERE rk <= {k}
 # ---------------------------------------------------------------------------
 
 
+GOPHER_STATS = ("n_tokens", "mean_token_len", "distinct_ratio", "n_stopwords", "alpha_frac")
+
+
+def spark_sql_gopher_stats(toks: str) -> list[str]:
+    """Spark-SQL ``expr AS name`` texts of the Gopher per-document stats
+    (:data:`GOPHER_STATS`) over the token array ``toks`` — a column, since
+    each stat names it. Integer counts + one exact IEEE division each."""
+    dn = f"greatest(CAST(size({toks}) AS DOUBLE), 1.0D)"  # guard /0; rules still fail via n
+    stop = f"array({spark_sql_values(EN_STOPWORDS)})"
+    return [
+        f"CAST(size({toks}) AS BIGINT) AS n_tokens",
+        f"CAST(aggregate({toks}, 0L, (a, t) -> a + length(t)) AS DOUBLE) / {dn} AS mean_token_len",
+        f"CAST(size(array_distinct({toks})) AS DOUBLE) / {dn} AS distinct_ratio",
+        f"CAST(size(array_intersect(array_distinct({toks}), {stop})) AS BIGINT) AS n_stopwords",
+        # r8: any Unicode letter counts as alphabetic (the tokenizer is
+        # Unicode-wide — a Cyrillic or CJK token must not fail the alpha
+        # rule the way it would under an ASCII [a-z] class)
+        f"CAST(size(filter({toks}, t -> t RLIKE '\\\\p{{L}}')) AS DOUBLE) / {dn} AS alpha_frac",
+    ]
+
+
+def spark_sql_gopher_rules(
+    min_tokens: int = 30,
+    max_tokens: int = 10000,
+    min_mean_len: float = 2.0,
+    max_mean_len: float = 10.0,
+    min_distinct_ratio: float = 0.4,
+    min_stopwords: int = 2,
+    min_alpha_frac: float = 0.8,
+) -> dict[str, str]:
+    """Spark-SQL texts of the Gopher rules over the :data:`GOPHER_STATS`
+    columns, keyed by output name; ``keep`` is their conjunction."""
+    lit = spark_sql_literal
+    rules = {
+        "rule_length": f"(n_tokens >= {lit(min_tokens)}) AND (n_tokens <= {lit(max_tokens)})",
+        "rule_mean_len": f"(mean_token_len >= {lit(min_mean_len)}) AND (mean_token_len <= {lit(max_mean_len)})",
+        "rule_diversity": f"distinct_ratio >= {lit(min_distinct_ratio)}",
+        "rule_stopwords": f"n_stopwords >= {lit(min_stopwords)}",
+        "rule_alpha": f"alpha_frac >= {lit(min_alpha_frac)}",
+    }
+    rules["keep"] = " AND ".join(f"({r})" for r in rules.values())
+    return rules
+
+
 def gopher_filter(
     docs: DataFrame,
     min_tokens: int = 30,
@@ -646,61 +695,27 @@ def gopher_filter(
         # reference it many times, and HOF-containing subtrees are not
         # fused by codegen subexpression elimination — each reference
         # re-ran the tokenizer (measured 1.67x on the sf0.1 gopher pass)
-        docs = docs.withColumn("_toks_once", tokens_exact_expr(F.col(text_col)))
-        toks = F.col("_toks_once")
-    else:
-        toks = F.col(tokens_col)
-    n = F.size(toks)
-    dn = F.greatest(n.cast("double"), F.lit(1.0))  # guard /0; rules still fail via n
-    mean_len = F.aggregate(toks, F.lit(0).cast("long"), lambda a, t: a + F.length(t)).cast(
-        "double"
-    ) / dn
-    distinct_ratio = F.size(F.array_distinct(toks)).cast("double") / dn
-    n_stop = F.size(F.array_intersect(F.array_distinct(toks), F.array(*[F.lit(w) for w in EN_STOPWORDS])))
-    # r8: any Unicode letter counts as alphabetic (the tokenizer is now
-    # Unicode-wide — a Cyrillic or CJK token must not fail the alpha rule
-    # the way it would under the old ASCII [a-z] class)
-    alpha_frac = F.size(F.filter(toks, lambda t: t.rlike(r"\p{L}"))).cast("double") / dn
+        tokens_col = "_toks_once"
+        docs = docs.selectExpr("*", f"{spark_sql_tokens_exact(f'`{text_col}`')} AS _toks_once")
+    idc, passed = f"`{id_col}`", [f"`{c}`" for c in passthrough]
     # materialize the per-doc stats ONCE, then derive the rules from the
     # materialized columns (r11): mean_len (an interpreted aggregate fold)
     # and alpha_frac (an interpreted filter) were each referenced by their
     # rule, by `keep`, and by the output column — every reference re-ran
     # the O(tokens) pass. Chained projections stay streaming-safe
     # (map-side); the boundary survives CollapseProject because the stats
-    # are non-cheap and multi-referenced.
-    stats = docs.select(
-        F.col(id_col),
-        n.cast("long").alias("n_tokens"),
-        mean_len.alias("mean_token_len"),
-        distinct_ratio.alias("distinct_ratio"),
-        n_stop.cast("long").alias("n_stopwords"),
-        alpha_frac.alias("alpha_frac"),
-        # passthrough keeps the result a projection chain of `docs` —
-        # streaming callers cannot join a derived frame back onto the
-        # stream (stream-stream join), and batch callers save the join too
-        *[F.col(c) for c in passthrough],
+    # are non-cheap and multi-referenced. passthrough keeps the result a
+    # projection chain of `docs` — streaming callers cannot join a derived
+    # frame back onto the stream (stream-stream join), and batch callers
+    # save the join too.
+    rules = spark_sql_gopher_rules(
+        min_tokens, max_tokens, min_mean_len, max_mean_len,
+        min_distinct_ratio, min_stopwords, min_alpha_frac,
     )
-    nn, ml = F.col("n_tokens"), F.col("mean_token_len")
-    dr, ns, af = F.col("distinct_ratio"), F.col("n_stopwords"), F.col("alpha_frac")
-    r_len = (nn >= min_tokens) & (nn <= max_tokens)
-    r_mean = (ml >= min_mean_len) & (ml <= max_mean_len)
-    r_div = dr >= min_distinct_ratio
-    r_stop = ns >= min_stopwords
-    r_alpha = af >= min_alpha_frac
-    return stats.select(
-        F.col(id_col),
-        nn,
-        ml,
-        dr,
-        ns,
-        af,
-        r_len.alias("rule_length"),
-        r_mean.alias("rule_mean_len"),
-        r_div.alias("rule_diversity"),
-        r_stop.alias("rule_stopwords"),
-        r_alpha.alias("rule_alpha"),
-        (r_len & r_mean & r_div & r_stop & r_alpha).alias("keep"),
-        *[F.col(c) for c in passthrough],
+    return docs.selectExpr(
+        idc, *spark_sql_gopher_stats(f"`{tokens_col}`"), *passed
+    ).selectExpr(
+        idc, *GOPHER_STATS, *[f"{t} AS {k}" for k, t in rules.items()], *passed
     )
 
 

@@ -325,7 +325,7 @@ def streaming_quality_gate(
         docs.crossJoin(F.broadcast(bl_row))
         .withColumn(
             "contaminated",
-            F.arrays_overlap(shingles_expr(F.col(text_col), contam_n), F.col("_bl")),
+            F.arrays_overlap(shingles_expr(text_col, contam_n), F.col("_bl")),
         )
         .drop("_bl")
     )

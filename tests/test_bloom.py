@@ -25,7 +25,7 @@ def docs(spark, sf_dir):
 @pytest.fixture(scope="module")
 def blocklist(docs):
     return docs.filter(F.col("doc_id") % 17 == 0).select(
-        F.explode(dedup.shingles_expr(F.col("text"), 3)).alias("s")
+        F.explode(dedup.shingles_expr("text", 3)).alias("s")
     )
 
 

@@ -421,7 +421,7 @@ def test_curate_reason_precedence(spark):
         ["doc_id", "text"],
     )
     blocklist = docs.filter(F.col("doc_id") == 4).select(
-        F.explode(dedup.shingles_expr(F.col("text"), 3)).alias("s")
+        F.explode(dedup.shingles_expr("text", 3)).alias("s")
     )
     out = {r["id"]: r for r in curate.curate(docs, blocklist, neardup_threshold=0.3).collect()}
     assert out[1]["reason"] == "kept" and out[1]["kept"]

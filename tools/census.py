@@ -31,6 +31,9 @@ NODE_KEYS = {
     "window": r"\bWindow\b",
     "sort_agg": r"SortAggregate",
     "obj_hash_agg": r"ObjectHashAggregate",
+    # one per file-source scan node (its "(n) Scan <format>" detail
+    # header), so a query that re-reads the corpus shows a count > 1
+    "file_scan": r"(?m)^\(\d+\) Scan (?:parquet|orc|json|csv|text|avro|binaryFile)\b",
 }
 
 
