@@ -598,21 +598,33 @@ def ingest_serving_incremental(
     the reference re-ingesting changed documents while Postgres maintains
     the GIN/ivfflat indexes row-by-row. Cost per structure, honestly:
 
-    - **chunks / chunk_vectors — O(affected files)**: one
+    - **wave head — O(batch) on the driver**: the affected document ids
+      (the batch's ids plus the deletions) are collected once; the old
+      chunk ids are a ``document_id IN (…)`` filter of the pinned chunks
+      (no shuffle, no join). The one-model guard reads the vectors
+      manifest's per-file ``model_id`` footer stats and scans only files
+      whose stats are missing or differ from ``[model_id, model_id]``.
+      Precondition (the :func:`snapshots.apply_changes` one): a wave's
+      distinct keys fit on the driver; a wave that rewrites most of the
+      corpus is a rebuild (:func:`ingest_serving`).
+    - **chunks / chunk_vectors / tokens — O(affected files)**: one
       ``snapshots.apply_changes`` each — the affected documents' old
       chunk rows delete (a doc's new version may have FEWER chunks, so
       deletion is by the OLD chunk ids, not by overwrite) and the new
-      rows upsert, with file-level copy-on-write rewriting only files
-      containing affected keys, one atomic version per table. Embeddings
+      rows upsert. The copy-on-write probe opens only the files whose
+      chunk_id stats and Blooms admit a wave key and rewrites only those
+      holding one: a key collect, a probe scan, a staging write and a
+      bloom build per table, one atomic version each. Embeddings
       reuse the content-addressed cache: unchanged chunk text carries its
       stored vector (from_cache=true), only novel content pays the
       embedder; the cache narrows to the batch's hashes before joining,
       so the corpus-sized vectors table is never broadcast.
-    - **tf_postings**: ``tf_mode="overwrite"`` (default) runs
-      ``upsert_tf_postings`` per kind and re-commits the postings table —
-      O(tf table) per batch, the simple regime ``read_tf_postings``
-      serves directly (a term-clustered index cannot use keyed
-      copy-on-write: one doc touches every term range).
+    - **postings / tf_postings / positions_postings — O(table)**:
+      ``tf_mode="overwrite"`` (default) runs the anti-join upserts per
+      kind and re-commits each table whole — the simple regime
+      ``read_tf_postings`` serves directly (a term-clustered index cannot
+      use keyed copy-on-write: one doc touches every term range). These
+      three overwrite commits are most of a small wave's remaining jobs.
       ``tf_mode="pending"`` appends the batch's postings + tombstones to
       ``tf_pending/`` in O(batch) (the GIN-fastupdate regime —
       ``keyword_index.tf_pending_append``); serve via
@@ -624,10 +636,10 @@ def ingest_serving_incremental(
     - **IVF — O(batch) assignment + O(index) version commit**: the
       affected ids anti-join out of the stored index, the batch's vectors
       route to the EXISTING centroids (``ivf_index_upsert`` — no refit),
-      and :func:`plans.ivf.maybe_rebuild_index` decides whether drift or
-      corpus growth warrants a refit; the merged bundle commits as a new
-      snapshot version (index-proportional write, like
-      ``streaming_index_maintenance``).
+      and :func:`plans.ivf.maybe_rebuild_index` decides whether corpus
+      growth or (on a multi-list index) drift warrants a refit; the
+      merged bundle commits as a new snapshot version (index-proportional
+      write, like ``streaming_index_maintenance``).
 
     Every wave ends by PUBLISHING a root serving manifest
     (:func:`publish_serving`): readers through :func:`load_serving` see
@@ -701,43 +713,41 @@ def ingest_serving_incremental(
             )
         eff_stemmer = layout_stemmer
 
-        # affected documents = this batch's ids ∪ explicit deletions
-        affected_docs = docs_batch.select(F.col(id_col).alias("_doc"))
+        # affected documents = this batch's ids ∪ explicit deletions, as a
+        # driver set (one job): a wave's keys live on the driver, like the
+        # manifests and touched-file lists of the commits below
+        id_frames = [docs_batch.select(id_col)]
+        listed = []
         if isinstance(deleted_doc_ids, DataFrame):
-            affected_docs = affected_docs.unionByName(
-                deleted_doc_ids.toDF("_doc")
-            )
+            id_frames.append(deleted_doc_ids)
         elif deleted_doc_ids:
-            # type the list form off the batch's own id column — doc ids may
-            # be strings/UUIDs, not just longs
-            from pyspark.sql.types import StructField, StructType
-
-            id_type = docs_batch.schema[id_col].dataType
-            affected_docs = affected_docs.unionByName(
-                spark.createDataFrame(
-                    [(i,) for i in deleted_doc_ids],
-                    StructType([StructField("_doc", id_type)]),
-                )
-            )
-        affected_docs = affected_docs.distinct()
+            listed = [i for i in deleted_doc_ids if i is not None]
+        affected = list(dict.fromkeys(snapshots.driver_keys(id_frames) + listed))
 
         cur_chunks = snapshots.read_snapshot(spark, chunks_dir, version=pinned["chunks"])
-        old_chunk_ids = (
-            cur_chunks.join(
-                affected_docs, cur_chunks["document_id"] == affected_docs["_doc"], "left_semi"
-            )
-            .select("chunk_id")
-            .persist()
-        )
-        _pinned_dfs.append(old_chunk_ids)
-        old_chunk_ids.count()
+        old_chunk_ids = cur_chunks.filter(
+            snapshots.keys_in("document_id", affected) if affected else F.lit(False)
+        ).select("chunk_id")
 
-        cur_vectors = snapshots.read_snapshot(
-            spark, vectors_dir, version=pinned["chunk_vectors"]
-        )
+        # one layout, one model: the manifest's per-file model_id footer
+        # stats clear every file pinned to [model_id, model_id]; only files
+        # without such stats are scanned, so the guard stays conservative
+        vectors_m = snapshots.load_manifest(vectors_dir, pinned["chunk_vectors"])
+        unsure = [
+            e["path"]
+            for e in vectors_m["files"]
+            if (e.get("stats") or {}).get("model_id") != [model_id, model_id]
+        ]
         other_models = (
-            cur_vectors.select("model_id").distinct().filter(F.col("model_id") != model_id)
-        ).take(1)
+            snapshots.read_snapshot_files(
+                spark, vectors_dir, unsure, version=pinned["chunk_vectors"]
+            )
+            .filter(F.col("model_id") != model_id)
+            .select("model_id")
+            .take(1)
+            if unsure
+            else []
+        )
         if other_models:
             raise ValueError(
                 f"chunk_vectors at {vectors_dir} holds model_id="
@@ -745,6 +755,9 @@ def ingest_serving_incremental(
                 "maintenance is per-layout (chunk-keyed deletion would destroy the "
                 "other model's rows) — keep one base_dir per model/config"
             )
+        cur_vectors = snapshots.read_snapshot(
+            spark, vectors_dir, version=pinned["chunk_vectors"]
+        )
         chunks, vectors = ingest(
             docs_batch,
             existing_vectors=cur_vectors,
@@ -849,7 +862,6 @@ def ingest_serving_incremental(
             ),
             nprobe=nprobe,
         )
-        old_chunk_ids.unpersist()
         sv = publish_serving(
             base_dir,
             {

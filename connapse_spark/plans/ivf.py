@@ -954,7 +954,11 @@ def maybe_rebuild_index(
        report reassignments: there is only one candidate centroid).
     2. **Drift**: :func:`ivf_drift`'s ``reassign_frac`` over the served
        layout crosses ``threshold`` — upsert waves redistributed the data
-       within the existing list count.
+       within the existing list count. A one-list index skips the gauge:
+       no probe depends on its centroid, and a refit at the same size
+       would rebuild the same single list. Only one-list layouts save the
+       gauge's scan this way (every index under ~2,000 rows with the
+       reference lists policy).
 
     Returns ``(rebuilt, VectorIndex)`` so a maintenance job commits the
     new layout through the snapshot layer only when it actually changed.
@@ -966,6 +970,8 @@ def maybe_rebuild_index(
     have_lists = vidx.centroids.count()
     want_lists = ivf_n_lists(n_rows, policy=lists_policy)
     if want_lists <= have_lists:
+        if have_lists == 1:
+            return False, vidx
         verdict = ivf_drift(vidx.index, dims=dims).first()
         frac = float(verdict["reassign_frac"] or 0.0)
         if frac < threshold:

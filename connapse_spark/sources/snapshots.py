@@ -39,7 +39,7 @@ import json
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -544,6 +544,25 @@ def read_snapshot(
     return _read_conformed(spark, table_dir, m)
 
 
+def read_snapshot_files(
+    spark: SparkSession,
+    table_dir: str,
+    paths: list[str],
+    version: int | None = None,
+) -> DataFrame:
+    """Scan only ``paths`` of the pinned version (manifest-relative, as its
+    file entries record them), with the manifest schema — for callers
+    that decide from manifest metadata which files they need to open.
+    Paths the version does not list are ignored."""
+    m = load_manifest(table_dir, version)
+    out = _read_conformed(spark, table_dir, m, keep=set(paths))
+    if out is None:
+        from pyspark.sql.types import StructType
+
+        return spark.createDataFrame([], StructType.fromJson(m["schema"]))
+    return out
+
+
 def _read_conformed(
     spark: SparkSession,
     table_dir: str,
@@ -790,22 +809,6 @@ def _reap(table_dir: str, kept: list[int], file_cutoff: float) -> dict:
     }
 
 
-def _read_with_source(
-    spark: SparkSession, table_dir: str, m: dict, keep: set | None = None
-) -> DataFrame:
-    """The manifest's rows tagged with ``_src_file`` (the data file each
-    row lives in) — _read_conformed's with_source mode plus a typed
-    empty frame when everything was pruned away."""
-    out = _read_conformed(spark, table_dir, m, keep=keep, with_source=True)
-    if out is None:
-        from pyspark.sql.types import StructType
-
-        return spark.createDataFrame(
-            [], StructType.fromJson(m["schema"])
-        ).withColumn("_src_file", F.lit(""))
-    return out
-
-
 def merge_snapshot(
     spark: SparkSession,
     df: DataFrame,
@@ -819,12 +822,12 @@ def merge_snapshot(
     everything else is untouched, and only the data files that actually
     CONTAIN a matching key are rewritten.
 
-    Mechanics (Delta/Iceberg MERGE's shape):
-    1. metadata-bounded probe: join the current version (tagged with
-       ``_metadata.file_path``) against the batch's keys → the TOUCHED
-       file set (collect is ≤ file-count rows, never data-sized);
-    2. rewrite: survivors from touched files (anti-join on key) + the
-       whole batch stage into a fresh immutable dir;
+    Mechanics (Delta/Iceberg MERGE's shape, see :func:`_cow_commit`):
+    1. keyed probe: the batch's distinct keys come to the driver, the
+       manifest's per-file stats and Blooms pick the candidate files, and
+       one filtered scan of those finds the TOUCHED files;
+    2. rewrite: the touched files' rows whose key is not in the batch,
+       plus the whole batch, stage into a fresh immutable dir;
     3. commit: untouched files carry over into the next manifest BY
        REFERENCE (same paths, zero IO), staged files join them; the
        previous version stays fully readable (time travel, crash safety
@@ -842,7 +845,9 @@ def merge_snapshot(
     (merge replaces whole rows; silently nulling a column the caller
     forgot would be data loss, so that raises instead).
 
-    Returns the committed version number."""
+    The batch's distinct keys must fit on the driver (the
+    :func:`apply_changes` precondition). Returns the committed version
+    number."""
     prev = latest_version(table_dir) if base_version is None else base_version
     if prev is None:
         raise FileNotFoundError(f"no snapshot committed at {table_dir}")
@@ -861,7 +866,7 @@ def merge_snapshot(
     schema = _merged_schema(m["schema"], df)
     return _cow_commit(
         spark, table_dir, m, version, key_col,
-        keys=df.select(key_col).distinct(),
+        keys=driver_keys([df.select(key_col)]),
         insert_df=_conform(df, schema),
         schema=schema,
         mode="merge",
@@ -883,7 +888,8 @@ def delete_snapshot(
     atomic publish, and time-travel behavior as merge_snapshot —
     deleted rows remain readable in PINNED older versions until
     vacuum_snapshot retires them, which is the part a real
-    erasure-compliance pass must schedule.
+    erasure-compliance pass must schedule. The distinct keys must fit on
+    the driver (the :func:`apply_changes` precondition).
 
     Returns the committed version number."""
     prev = latest_version(table_dir) if base_version is None else base_version
@@ -892,7 +898,7 @@ def delete_snapshot(
     m = load_manifest(table_dir, prev)
     return _cow_commit(
         spark, table_dir, m, prev + 1, key_col,
-        keys=keys_df.select(F.col(keys_df.columns[0]).alias(key_col)).distinct(),
+        keys=driver_keys([keys_df]),
         insert_df=None,
         schema=m["schema"],
         mode="delete",
@@ -917,13 +923,20 @@ def apply_changes(
     routing a CDC stream resolve per-key order first and send each key
     to exactly one side (streaming_table_upsert's op_col does this).
 
+    Precondition: the batch's distinct keys fit on the driver. They are
+    collected there once (one job) and drive the whole probe, the same
+    way the touched-file list and the manifest itself live there. A
+    batch that rewrites most of a table is a rebuild: commit it with
+    :func:`commit_snapshot` instead. NULL keys match nothing: an upsert
+    row with a NULL key is inserted, and stored NULL-key rows survive.
+
     Returns the committed version number."""
     prev = latest_version(table_dir) if base_version is None else base_version
     if prev is None:
         raise FileNotFoundError(f"no snapshot committed at {table_dir}")
     m = load_manifest(table_dir, prev)
     schema = m["schema"]
-    keys = None
+    key_frames = []
     insert_df = None
     if upserts is not None:
         from pyspark.sql.types import StructType
@@ -936,19 +949,43 @@ def apply_changes(
                 "replace whole rows, so every current column must be supplied"
             )
         schema = _merged_schema(schema, upserts)
-        keys = upserts.select(key_col).distinct()
+        key_frames.append(upserts.select(key_col))
         insert_df = _conform(upserts, schema)
     if delete_keys is not None:
-        dk = delete_keys.select(
-            F.col(delete_keys.columns[0]).alias(key_col)
-        ).distinct()
-        keys = dk if keys is None else keys.unionByName(dk).distinct()
-    if keys is None:
+        key_frames.append(delete_keys)
+    if not key_frames:
         raise ValueError("apply_changes needs upserts and/or delete_keys")
     return _cow_commit(
         spark, table_dir, m, prev + 1, key_col,
-        keys=keys, insert_df=insert_df, schema=schema, mode="cdc",
+        keys=driver_keys(key_frames), insert_df=insert_df, schema=schema,
+        mode="cdc",
     )
+
+
+def driver_keys(frames: list[DataFrame]) -> list:
+    """The distinct non-NULL values of the single-column ``frames``,
+    collected to the driver in ONE job (a union of their scans, no
+    shuffle) and deduplicated there in first-seen order."""
+    cols = [f.select(F.col(f.columns[0]).alias("_k")) for f in frames]
+    union = cols[0]
+    for c in cols[1:]:
+        union = union.unionByName(c)
+    keys = (r[0] for r in union.collect())
+    return list(dict.fromkeys(
+        bytes(k) if isinstance(k, bytearray) else k for k in keys if k is not None
+    ))
+
+
+def keys_in(col: str, keys: list) -> Column:
+    """``col IN (keys)`` for a non-empty driver-side key list: one
+    Spark-SQL expression when every key has a literal form (str, int,
+    float, bool), else ``Column.isin``."""
+    from connapse_spark.functions.vector import spark_sql_values
+
+    try:
+        return F.expr(f"`{col.replace('`', '``')}` IN ({spark_sql_values(keys)})")
+    except TypeError:
+        return F.col(col).isin(keys)
 
 
 def _uri_to_table_rel(p: str, table_dir: str) -> str:
@@ -977,63 +1014,74 @@ def _cow_commit(
     m: dict,
     version: int,
     key_col: str,
-    keys: DataFrame,
+    keys: list,
     insert_df: DataFrame | None,
     schema: dict,
     mode: str,
 ) -> int:
-    """Shared copy-on-write core of merge/delete: stats-pruned probe for
-    the touched files, survivor rewrite (+ optional insert batch),
-    by-reference carry-over of everything untouched, atomic publish."""
+    """Shared copy-on-write core of merge/delete/apply_changes, keyed by a
+    driver-side list of distinct non-NULL ``keys`` (:func:`driver_keys`):
+
+    1. candidates: :func:`prune_files_keys` keeps the files whose per-key
+       [min, max] stats and Bloom filter admit at least one key — metadata
+       only, no IO;
+    2. touched: one filtered scan of the candidates collects the
+       ``_src_file`` of every row whose key is in ``keys``, so a Bloom
+       false positive costs a read, never a rewrite;
+    3. survivors: the touched files' rows whose key is NULL or not in
+       ``keys`` re-stage together with ``insert_df`` (blooms inherited);
+    4. untouched files carry over by reference, then the atomic publish.
+
+    No shuffle and no join: a commit costs the key collect, the candidate
+    scan, the staging write and its bloom build."""
     partition_by = m.get("partition_by") or []
-    # stats-based probe pruning: files whose footer [min, max] on the
-    # key column cannot contain ANY batch key never enter the probe —
-    # on a key-clustered layout the probe reads O(batch-locality) files
-    rng = keys.agg(
-        F.min(key_col).alias("lo"), F.max(key_col).alias("hi")
-    ).collect()[0]
-    candidates = (
-        {e["path"] for e in prune_files(m, key_col, rng["lo"], rng["hi"])}
-        if rng["lo"] is not None
-        else set()
-    )
-    cur = _read_with_source(spark, table_dir, m, keep=candidates)
-    touched_rows = (
-        cur.join(F.broadcast(keys), key_col)
-        .select("_src_file")
-        .distinct()
-        .collect()
-    )
-    touched = {r["_src_file"] for r in touched_rows}
-
-    survivors = _conform(
-        cur.filter(F.col("_src_file").isin(list(touched)) if touched else F.lit(False))
-        .drop("_src_file")
-        .join(F.broadcast(keys), key_col, "left_anti"),
-        schema,
-    )
-    staged = (
-        survivors if insert_df is None else survivors.unionByName(insert_df)
-    )
-    # bloom columns SELF-PROPAGATE across incremental rewrites: whatever
-    # columns the base version's files track, the restaged files track
-    # too — an apply_changes/merge lineage keeps its point-lookup index
-    # without every caller re-plumbing bloom_cols (r9)
-    inherited_blooms = sorted(
-        {c for e in m["files"] for c in (e.get("blooms") or {})}
-    )
-    rel_dir, new_entries = _stage_files(
-        staged, table_dir, version, partition_by or None,
-        bloom_cols=inherited_blooms or None,
-    )
-
-    # untouched files carry over by reference — path-identical entries;
-    # _metadata.file_path is a URI (file:/...), manifest paths are
-    # table-relative plain paths
-    bases: dict[str, list[dict]] = {rel_dir: new_entries}
-    abs_touched = {_uri_to_table_rel(p, table_dir) for p in touched}
+    touched: set[str] = set()
+    if keys:
+        hit = keys_in(key_col, keys)
+        candidates = {e["path"] for e in prune_files_keys(m, key_col, keys)}
+        if candidates:
+            probe = _read_conformed(
+                spark, table_dir, m, keep=candidates, with_source=True
+            )
+            # one row per matching stored row (bounded by the key set for
+            # unique keys); _metadata.file_path is a URI, manifest paths
+            # are table-relative
+            touched = {
+                _uri_to_table_rel(r[0], table_dir)
+                for r in probe.filter(hit).select("_src_file").collect()
+            }
+            if not touched <= candidates:
+                # a path that matches no manifest entry would carry its
+                # file over whole, deleted keys included
+                raise RuntimeError(
+                    f"copy-on-write probe at {table_dir} resolved files outside "
+                    f"the manifest: {sorted(touched - candidates)[:3]}"
+                )
+    staged = insert_df
+    if touched:
+        survivors = _conform(
+            _read_conformed(spark, table_dir, m, keep=touched).filter(
+                F.col(key_col).isNull() | ~hit
+            ),
+            schema,
+        )
+        staged = survivors if staged is None else survivors.unionByName(staged)
+    bases: dict[str, list[dict]] = {}
+    if staged is not None:  # a delete that touched no file stages nothing
+        # bloom columns SELF-PROPAGATE across incremental rewrites: whatever
+        # columns the base version's files track, the restaged files track
+        # too — an apply_changes/merge lineage keeps its point-lookup index
+        # without every caller re-plumbing bloom_cols (r9)
+        inherited_blooms = sorted(
+            {c for e in m["files"] for c in (e.get("blooms") or {})}
+        )
+        rel_dir, new_entries = _stage_files(
+            staged, table_dir, version, partition_by or None,
+            bloom_cols=inherited_blooms or None,
+        )
+        bases[rel_dir] = new_entries
     for base, fs in _manifest_bases(m).items():
-        kept = [e for e in fs if e["path"] not in abs_touched]
+        kept = [e for e in fs if e["path"] not in touched]
         if kept:
             bases.setdefault(base, []).extend(kept)
     all_files = [e for fs in bases.values() for e in fs]

@@ -655,6 +655,54 @@ def test_ingest_serving_builds_every_structure(spark, sf_dir, tmp_path):
     out["chunks"].unpersist()
 
 
+# measured on the suite's local[4] session: 65 jobs; with the copy-on-write
+# core that probed by min/max range and broadcast joins, 110
+WAVE_JOB_BUDGET = 70
+
+
+def test_ingest_serving_incremental_wave_job_budget(spark, sf_dir, tmp_path):
+    """One small incremental wave (one doc updated, one deleted) over a
+    40-doc layout stays within WAVE_JOB_BUDGET Spark jobs, counted by job
+    group: the wave head resolves its doc ids on the driver, the chunk,
+    vector and token copy-on-write commits probe by key (no shuffle, no
+    join), the model guard reads manifest stats, and the one-list IVF
+    index skips the drift gauge. The wave must still apply, and a wave
+    for another model must still be refused."""
+    import uuid
+
+    from connapse_spark.operators.ingest import ingest_serving, ingest_serving_incremental
+    from connapse_spark.sources import snapshots as snaps
+
+    docs = _docs(spark, sf_dir).filter(F.col("doc_id") < 40).select("doc_id", "text")
+    base = str(tmp_path / "serving")
+    first = ingest_serving(docs, base_dir=base)
+    first["chunks"].unpersist(), first["vectors"].unpersist()
+    batch = docs.filter(F.col("doc_id") == 3).select(
+        "doc_id", F.lit("entirely new content about table scan joins").alias("text")
+    )
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    group = f"wave-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "incremental wave budget")
+    try:
+        out = ingest_serving_incremental(batch, base, deleted_doc_ids=[7])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    out["chunks"].unpersist(), out["vectors"].unpersist()
+    assert len(jobs) <= WAVE_JOB_BUDGET, len(jobs)
+    chunks = snaps.read_snapshot(spark, os.path.join(base, "chunks"), out["chunks_version"])
+    assert chunks.filter(F.col("document_id").isin(7)).count() == 0
+    assert [r["content"] for r in chunks.filter(F.col("document_id").isin(3)).collect()] == [
+        "entirely new content about table scan joins"
+    ]
+    # the model guard: the manifest's model_id stats differ from the
+    # wave's model, so the guard scans those files and refuses the wave
+    with pytest.raises(ValueError, match="besides"):
+        ingest_serving_incremental(batch, base, model_id="other-model")
+
+
 @pytest.mark.slow
 def test_ingest_serving_incremental_equals_rebuild(spark, sf_dir, tmp_path):
     """Incremental wave (doc 3 updated, doc 7 deleted) over a committed

@@ -1632,3 +1632,177 @@ def test_streaming_serving_maintenance_full_layout(spark, sf_dir, tmp_path):
     for h in (first, want):
         h["chunks"].unpersist(), h["vectors"].unpersist()
     docs.unpersist()
+
+
+# ---------------------------------------------------------------------------
+# Copy-on-write core: driver-keyed probe semantics and job budget
+# ---------------------------------------------------------------------------
+
+
+def _rows(df):
+    """Sorted row tuples; NULLs sort last within a column."""
+    return sorted(
+        (tuple(r) for r in df.collect()),
+        key=lambda r: tuple((x is None, x) for x in r),
+    )
+
+
+def _jobs_in_group(spark, fn):
+    """Run ``fn`` under a fresh job group; return (result, its job ids)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"cow-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "copy-on-write budget")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "ktype,key",
+    [("bigint", lambda i: 1000 + 7 * i), ("string", lambda i: f"doc:{i}")],
+    ids=["bigint", "string"],
+)
+def test_cow_null_keys_survive_and_both_sides_upsert(spark, tmp_path, ktype, key):
+    """Rows with a NULL key never match a key, so they survive every
+    rewrite of their file (apply_changes and merge); a NULL-key upsert row
+    is inserted; a key on both sides of apply_changes ends upserted; an
+    absent delete key is a no-op. Holds for bigint and "doc:idx" keys."""
+    schema = f"k {ktype}, v string"
+    base = [(key(i), f"v{i}") for i in range(12)] + [(None, "null-a"), (None, "null-b")]
+    t = str(tmp_path / f"nulls-{ktype}")
+    # one file: every rewrite re-stages the NULL-key rows
+    snapshots.commit_snapshot(spark.createDataFrame(base, schema).coalesce(1), t)
+    ups = spark.createDataFrame([(key(2), "up2"), (key(5), "up5"), (key(99), "new")], schema)
+    dels = spark.createDataFrame([(key(5),), (key(7),), (key(500),), (None,)], f"k {ktype}")
+    v = snapshots.apply_changes(spark, t, "k", upserts=ups, delete_keys=dels)
+    want = dict((k, val) for k, val in base if k is not None)
+    want.pop(key(7))
+    want.update({key(2): "up2", key(5): "up5", key(99): "new"})
+    got = _rows(snapshots.read_snapshot(spark, t, version=v))
+    assert [r[1] for r in got if r[0] is None] == ["null-a", "null-b"]
+    assert {r[0]: r[1] for r in got if r[0] is not None} == want
+
+    batch = spark.createDataFrame([(key(3), "m3"), (None, "null-c")], schema)
+    v2 = snapshots.merge_snapshot(spark, batch, t, "k")
+    got2 = _rows(snapshots.read_snapshot(spark, t, version=v2))
+    assert sorted(r[1] for r in got2 if r[0] is None) == ["null-a", "null-b", "null-c"]
+    want[key(3)] = "m3"
+    assert {r[0]: r[1] for r in got2 if r[0] is not None} == want
+
+    v3 = snapshots.delete_snapshot(
+        spark, t, "k", spark.createDataFrame([(key(0),), (key(1),)], f"k {ktype}")
+    )
+    got3 = _rows(snapshots.read_snapshot(spark, t, version=v3))
+    assert len([r for r in got3 if r[0] is None]) == 3
+    assert key(0) not in {r[0] for r in got3} and key(1) not in {r[0] for r in got3}
+    assert len(got3) == len(got2) - 2
+
+
+def test_cow_string_keys_with_quotes_round_trip(spark, tmp_path):
+    """Keys enter the probe as SQL literals: quotes and backslashes in a
+    string key must match exactly, not widen or break the filter; a
+    delete that matches nothing rewrites nothing."""
+    keys = ["a'b", "c\\d", "e\\'f", "plain", "doc:1"]
+    t = str(tmp_path / "quoted")
+    snapshots.commit_snapshot(
+        spark.createDataFrame([(k, i) for i, k in enumerate(keys)], "k string, v long"), t
+    )
+    v = snapshots.apply_changes(
+        spark, t, "k",
+        upserts=spark.createDataFrame([("a'b", 100)], "k string, v long"),
+        delete_keys=spark.createDataFrame([("e\\'f",), ("c\\d",)], "k string"),
+    )
+    assert _rows(snapshots.read_snapshot(spark, t, version=v)) == sorted(
+        [("a'b", 100), ("plain", 3), ("doc:1", 4)]
+    )
+    # a delete that matches no row stages nothing: same files, by reference
+    v2 = snapshots.delete_snapshot(
+        spark, t, "k", spark.createDataFrame([("a'",), ("b",)], "k string")
+    )
+    assert snapshots.load_manifest(t, v2)["files"] == snapshots.load_manifest(t, v)["files"]
+
+
+def _bloom_false_positive(m, col, absent_from, tries=20_000):
+    """An absent key some file's Bloom admits, with that file."""
+    import hashlib
+
+    for i in range(tries):
+        k = hashlib.sha256(f"absent{i}".encode()).hexdigest()
+        if k in absent_from:
+            continue
+        hit = snapshots.prune_files_keys(m, col, [k])
+        if hit:
+            return k, hit[0]["path"]
+    raise AssertionError("no Bloom false positive found")
+
+
+def test_cow_bloom_false_positive_candidate_is_not_rewritten(spark, tmp_path):
+    """A file whose Bloom admits a key it does not hold is a CANDIDATE
+    (opened by the probe) but not TOUCHED: its manifest entry carries over
+    by reference, unchanged; the file holding a real key is rewritten."""
+    rows = _sha_rows(400)
+    t = str(tmp_path / "bloom-fp")
+    snapshots.commit_snapshot(
+        spark.createDataFrame(rows, "chunk_id string, payload long").repartition(8),
+        t, bloom_cols=["chunk_id"],
+    )
+    m = snapshots.load_manifest(t)
+    fp_key, fp_file = _bloom_false_positive(m, "chunk_id", {r[0] for r in rows})
+    located = snapshots.read_snapshot(spark, t).select(
+        "chunk_id", F.col("_metadata.file_path").alias("f")
+    ).collect()
+    file_of = {r["chunk_id"]: snapshots._uri_to_table_rel(r["f"], t) for r in located}
+    real = next(k for k, _ in rows if file_of[k] != fp_file)
+    v = snapshots.apply_changes(
+        spark, t, "chunk_id", upserts=None,
+        delete_keys=spark.createDataFrame([(fp_key,), (real,)], "chunk_id string"),
+    )
+    m2 = snapshots.load_manifest(t, v)
+    by_path = {e["path"]: e for e in m2["files"]}
+    assert by_path.get(fp_file) == next(e for e in m["files"] if e["path"] == fp_file)
+    assert file_of[real] not in by_path
+    assert _rows(snapshots.read_snapshot(spark, t, version=v)) == sorted(
+        r for r in rows if r[0] != real
+    )
+
+
+def test_cow_apply_changes_job_budget_and_candidate_scan(spark, tmp_path, monkeypatch):
+    """A 3-key apply_changes on a multi-file Bloomed table runs at most 5
+    Spark jobs (key collect, candidate probe, staging write, bloom build)
+    and opens only the files the stats + Bloom probe admits — no range
+    probe over the whole table, no shuffle, no join."""
+    rows = _sha_rows(400)
+    t = str(tmp_path / "budget")
+    snapshots.commit_snapshot(
+        spark.createDataFrame(rows, "chunk_id string, payload long").repartition(8),
+        t, bloom_cols=["chunk_id"],
+    )
+    m = snapshots.load_manifest(t)
+    keys = [rows[7][0], rows[123][0], rows[399][0]]
+    candidates = {e["path"] for e in snapshots.prune_files_keys(m, "chunk_id", keys)}
+    assert len(candidates) < len(m["files"])
+    opened: list = []
+    real_read = snapshots._read_conformed
+
+    def spy(spark_, table_dir, m_, keep=None, with_source=False):
+        opened.append(keep)
+        return real_read(spark_, table_dir, m_, keep=keep, with_source=with_source)
+
+    monkeypatch.setattr(snapshots, "_read_conformed", spy)
+    ups = spark.createDataFrame([(keys[0], -1)], "chunk_id string, payload long")
+    dels = spark.createDataFrame([(keys[1],), (keys[2],)], "chunk_id string")
+    v, jobs = _jobs_in_group(
+        spark, lambda: snapshots.apply_changes(spark, t, "chunk_id", ups, dels)
+    )
+    assert len(jobs) <= 5, jobs
+    assert opened and all(k is not None and k <= candidates for k in opened)
+    monkeypatch.undo()
+    got = _rows(snapshots.read_snapshot(spark, t, version=v))
+    assert got == sorted(
+        [(keys[0], -1)] + [r for r in rows if r[0] not in set(keys)]
+    )
