@@ -4554,7 +4554,7 @@ def q_positions_upsert(spark, sf_dir):
 
 def q_tf_pending_resolve(spark, sf_dir):
     """Pending-list keyword index END TO END on disk (keyword_index.
-    tf_pending_append → tf_resolve): batch 0 commits the original corpus
+    tf_pending_append → resolve_pending): batch 0 commits the original corpus
     to the delta, batch 1 appends the postings_upsert fixture's updates
     (doc_id%9) and deletes (%31) as tombstones, then the SERVE-time
     resolution reads both committed versions back. Same oracle as
@@ -4565,8 +4565,8 @@ def q_tf_pending_resolve(spark, sf_dir):
     import tempfile
 
     from connapse_spark.operators.keyword_index import (
+        resolve_pending,
         tf_pending_append,
-        tf_resolve,
     )
 
     root = os.path.join(
@@ -4587,13 +4587,13 @@ def q_tf_pending_resolve(spark, sf_dir):
         .collect()
     ]
     tf_pending_append(upd, delta_dir, deleted_ids=deleted, batch=1)
-    out = tf_resolve(spark, base_dir, delta_dir).filter(F.col("kind") == "exact")
+    out = resolve_pending(spark, base_dir, delta_dir).filter(F.col("kind") == "exact")
     return out.select("term", "id", "tf").orderBy("term", "id")
 
 
 def q_positions_pending_resolve(spark, sf_dir):
     """Pending-list POSITIONS index end to end on disk (r10 —
-    keyword_index.positions_pending_append → positions_resolve): the
+    keyword_index.positions_pending_append → resolve_pending): the
     fastupdate regime extended to the phrase/proximity serving
     structure, where the O(index)-per-batch overwrite hurts most. Batch
     0 commits the original corpus's position lists to the delta, batch 1
@@ -4608,7 +4608,7 @@ def q_positions_pending_resolve(spark, sf_dir):
 
     from connapse_spark.operators.keyword_index import (
         positions_pending_append,
-        positions_resolve,
+        resolve_pending,
     )
 
     root = os.path.join(
@@ -4629,7 +4629,7 @@ def q_positions_pending_resolve(spark, sf_dir):
         .collect()
     ]
     positions_pending_append(upd, delta_dir, deleted_ids=deleted, batch=1)
-    out = positions_resolve(spark, base_dir, delta_dir).filter(
+    out = resolve_pending(spark, base_dir, delta_dir).filter(
         F.col("kind") == "exact"
     )
     return (
@@ -4690,11 +4690,9 @@ def q_bm25_upsert(spark, sf_dir):
 
 def q_serving_compact(spark, sf_dir):
     """Serving-layout compaction END TO END (r11 — compact_serving is
-    the only correct fold for an ingest_serving layout: it resolves the
-    pending deltas at the PINNED versions, truncates them, and
-    republishes the repinned cut; raw tf_compact would leave the
-    manifest pinning the old base and the next pending wave's cut would
-    silently lose every folded change). Fixture: bootstrap the keyword
+    the fold for an ingest_serving layout: it folds the pending deltas
+    at the PINNED versions, truncates them, and republishes the
+    repinned cut). Fixture: bootstrap the keyword
     serving tables + manifest over the original corpus, fold the
     postings_upsert batch (doc_id%9 updates, %31 deletes) through a
     PENDING-mode keyword_serving_wave, compact, then serve the tf rows

@@ -209,10 +209,6 @@ def spark_sql_double_array(col: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def sql_double_array(c: str) -> str:
-    return f"CAST({c} AS DOUBLE[])"
-
-
 def sql_dot(a: str, b: str) -> str:
     # list_reduce is a left fold like F.aggregate; seed folded via 0.0 prefix.
     return (

@@ -271,13 +271,6 @@ def extract_html_text(
     )
 
 
-def sql_escape_html(text: str) -> str:
-    """DuckDB mirror of ``escape_html_expr`` (oracle side)."""
-    return (
-        f"replace(replace(replace({text}, '&', '&amp;'), '<', '&lt;'), '>', '&gt;')"
-    )
-
-
 def escape_html_expr(text):
     """Minimal HTML escaping (&, <, >) as JVM column math — used by the
     round-trip oracle to build markup from corpus text inside the plan."""

@@ -22,6 +22,8 @@ sorted/partitioned by, so it co-locates.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -256,12 +258,10 @@ def ingest_serving(
         # doclen rides the same snapshot (kind='doclen', term='', tf=dl):
         # BM25 mixes tf rows and lengths from ONE corpus version, so they
         # must share an atomic commit — see keyword_index.read_doclen
-        dl_rows = ki.doclen_partition_rows(ki.build_doclen_table(tokens))
-        tf_all = tfe.withColumn("kind", F.lit("exact")).unionByName(
-            tfs.withColumn("kind", F.lit("stemmed"))
-        ).select("kind", "term", "id", "tf").unionByName(dl_rows)
         tables["tf_postings"] = snapshots.commit_snapshot(
-            tf_all, os.path.join(base_dir, "tf_postings"), partition_by=["kind"]
+            ki.build_tf_all(tokens),
+            os.path.join(base_dir, "tf_postings"),
+            partition_by=["kind"],
         )
         # positions postings persist too (r10): the phrase / proximity /
         # batched-websearch tiers serve from (term, id, positions) — without
@@ -317,6 +317,77 @@ def ingest_serving(
     }
 
 
+# the row-level payload tables a serving layout maintains by the
+# tombstone-clock fold: (table, its pending delta, the keyword_index
+# builder of its rows from a token table)
+PAYLOAD_TABLES = (
+    ("tf_postings", "tf_pending", "build_tf_all"),
+    ("positions_postings", "positions_pending", "build_positions_all"),
+)
+
+
+def _fold_payload_table(
+    spark,
+    base_dir: str,
+    pinned: dict,
+    table: str,
+    delta: str,
+    build,
+    tokens: DataFrame,
+    wave: "tuple[DataFrame, DataFrame] | None" = None,
+) -> int:
+    """THE fold of one payload table of a serving layout: commit the base
+    at its pinned version minus tombstoned ids plus each id's
+    latest-batch rows from the pinned delta ∪ ``wave`` (this wave's
+    in-memory delta; None when compacting), then truncate a pinned delta
+    (``keyword_index.truncate_pending``). Returns the committed version.
+
+    ``tokens`` is the token table of the cut being produced (a wave's
+    post-copy-on-write version, the pinned one when compacting), which
+    every delta is already reflected in. Two rules read it:
+
+    - no base pinned ⇒ ``build(tokens)`` (a layout whose
+      cut predates the table — the delta alone would publish the
+      delta's ids only);
+    - doclen completeness: the folded doclen rows must number one per
+      token row, else they are rebuilt from ``tokens`` (a pre-doclen
+      base folded with a delta yields a partial, non-empty partition
+      that BM25's inner join would silently shrink the corpus by)."""
+    import os
+
+    from connapse_spark.operators import keyword_index as ki
+    from connapse_spark.sources import snapshots
+
+    if table not in pinned:
+        nxt = build(tokens)
+    else:
+        deltas = [wave] if wave is not None else []
+        if delta in pinned:
+            deltas.append(
+                ki.read_pending(spark, os.path.join(base_dir, delta), pinned[delta])
+            )
+        fresh, tombs = (reduce(DataFrame.unionByName, side) for side in zip(*deltas))
+        nxt = ki.fold_postings(
+            snapshots.read_snapshot(
+                spark, os.path.join(base_dir, table), version=pinned[table]
+            ),
+            fresh,
+            tombs,
+        )
+        if table == "tf_postings":
+            is_dl = F.col("kind") == "doclen"
+            if nxt.filter(is_dl).count() != tokens.count():
+                nxt = nxt.filter(~is_dl).unionByName(
+                    ki.doclen_partition_rows(ki.build_doclen_table(tokens))
+                )
+    v = snapshots.commit_snapshot(
+        nxt, os.path.join(base_dir, table), partition_by=["kind"]
+    )
+    if delta in pinned:
+        ki.truncate_pending(spark, os.path.join(base_dir, delta))
+    return v
+
+
 def keyword_serving_wave(
     spark,
     base_dir: str,
@@ -330,39 +401,32 @@ def keyword_serving_wave(
 ) -> dict:
     """Fold ONE batch into EVERY keyword serving structure of an
     ingest_serving layout — the keyword half of
-    :func:`ingest_serving_incremental`, factored out (r11) so the
-    maintenance-mode interleaving fuzz drives the PRODUCTION branch
-    logic (fold-first, truncate-after-fold, doclen bootstrap guard)
+    :func:`ingest_serving_incremental`, factored out so the
+    maintenance-mode interleaving fuzz drives the production code
     directly, without paying the chunk/embed/IVF pipeline per wave.
 
     ``batch`` holds the wave's live rows (``id_col``, ``text_col``);
     ``deleted_ids`` is a one-column ``id`` frame of EVERY affected old
     id (updated ids' prior rows AND deleted-only ids). ``pinned`` is the
     serving cut the wave reads its current state from (manifest
-    ``tables`` dict). Commits tokens / posting arrays always, then per
-    ``tf_mode``:
+    ``tables`` dict). The token table and the posting arrays commit by
+    copy-on-write and surgery; each payload table (``PAYLOAD_TABLES``)
+    takes the wave as one tombstone-clock delta
+    (``keyword_index.pending_delta``), and per ``tf_mode``:
 
-    - ``"pending"``: O(batch) appends to ``tf_pending`` and
-      ``positions_pending`` (the GIN-fastupdate regime); base tables
-      untouched, the returned mapping carries the previous cut's base
-      pins FORWARD (never latest_version — a crashed overwrite wave may
-      have advanced a table past the published cut, and pinning that
-      torn version would launder it into a "consistent" cut).
-    - ``"overwrite"``: anti-join upserts over the pinned base — with an
-      outstanding pending delta folded in FIRST (reading the base alone
-      would drop every pending wave's changes), the folded deltas
-      truncated AFTER the base commit (a later pending wave over the
-      stale delta would resurrect folded rows — see
-      ``keyword_index.tf_pending_truncate``), and doclen re-bootstrapped
-      from the post-COW tokens whenever upserted coverage disagrees
-      with it (a legacy pre-doclen base under the fold path yields a
-      partial-but-not-empty doclen view).
+    - ``"pending"``: the delta appends to the table's pending dir in
+      O(batch) (the GIN-fastupdate regime); the base is untouched and
+      its pin carries FORWARD from the previous cut (never
+      latest_version — a crashed wave may have advanced a table past the
+      published cut). Readers resolve base ∪ delta; fold on a cadence
+      with :func:`compact_serving`.
+    - ``"overwrite"``: :func:`_fold_payload_table` folds the pinned base,
+      the pinned delta and this wave's delta into the next base, commits
+      it and truncates the pinned delta.
 
-    Returns the version mapping to merge into the wave's serving
-    manifest: always ``tokens`` + ``postings``, plus
-    ``tf_postings``/``positions_postings`` (overwrite) or
-    ``tf_pending``/``positions_pending`` + carried base pins
-    (pending)."""
+    A table the cut does not pin yet is built from the post-wave tokens
+    in either mode. Returns the version mapping to merge into
+    the wave's serving manifest."""
     import os
 
     from connapse_spark.operators import keyword_index as ki
@@ -370,10 +434,9 @@ def keyword_serving_wave(
 
     tokens_dir = os.path.join(base_dir, "tokens")
     postings_dir = os.path.join(base_dir, "postings")
-    tf_dir = os.path.join(base_dir, "tf_postings")
 
-    # persisted: feeds the tokens COW, both posting surgeries, and both tf
-    # upserts — without the barrier the batch re-tokenizes per action
+    # persisted: feeds the tokens COW, both posting surgeries, and both
+    # payload deltas — without the barrier the batch re-tokenizes per action
     tokens_new = ki.build_token_table(
         batch, id_col=id_col, text_col=text_col, stemmer=stemmer
     ).persist()
@@ -406,170 +469,18 @@ def keyword_serving_wave(
             partition_by=["kind"],
         )
         out = {"tokens": tokv, "postings": postv}
-        if tf_mode == "pending":
-            # O(batch): append postings + tombstones to the pending delta;
-            # serve via tf_resolve(tf_dir, tf_pending), fold with
-            # tf_compact. Positions ride their OWN pending delta on the
-            # same clock (r10), so pending-mode cuts serve phrases via
-            # positions_resolve instead of dropping the pin. Both appends
-            # share tokens_new — one tokenize per wave.
-            batch_docs = batch.select(
-                F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-            )
-            tfv = ki.tf_pending_append(
-                batch_docs,
-                os.path.join(base_dir, "tf_pending"),
-                deleted_ids=deleted_ids,
-                tokens=tokens_new,
-            )
-            pposv = ki.positions_pending_append(
-                batch_docs,
-                os.path.join(base_dir, "positions_pending"),
-                deleted_ids=deleted_ids,
-                tokens=tokens_new,
-            )
-            out.update({
-                "tf_postings": pinned["tf_postings"],
-                "tf_pending": tfv,
-                "positions_pending": pposv,
-            })
-            if "positions_postings" in pinned:
-                out["positions_postings"] = pinned["positions_postings"]
-            return out
-        # overwrite regime: an overwrite wave following PENDING waves must
-        # fold their outstanding delta first — reading the pinned base
-        # alone would silently drop every change the pending waves appended
-        # (the cut's tf_pending pin marks exactly this state). The resolved
-        # view is the pending cut's own serve-time truth, so upserting over
-        # it converges; the fresh overwrite cut then drops the pending pin.
-        if "tf_pending" in pinned:
-            resolved_tf = ki.tf_resolve(
-                spark,
-                tf_dir,
-                os.path.join(base_dir, "tf_pending"),
-                base_version=pinned["tf_postings"],
-                delta_version=pinned["tf_pending"],
-            )
-            cur_tfe = resolved_tf.filter(F.col("kind") == "exact").select(
-                "term", "id", "tf"
-            )
-            cur_tfs = resolved_tf.filter(F.col("kind") == "stemmed").select(
-                "term", "id", "tf"
-            )
-        else:
-            cur_tfe, cur_tfs = ki.read_tf_postings(
-                spark, tf_dir, version=pinned["tf_postings"]
-            )
-        parts = []
-        for kind, col, cur_k in (
-            ("exact", "tokens_exact", cur_tfe),
-            ("stemmed", "tokens_stemmed", cur_tfs),
-        ):
-            parts.append(
-                ki.upsert_tf_postings(
-                    cur_k, tokens_new, deleted_ids=deleted_ids, token_col=col
-                ).withColumn("kind", F.lit(kind))
-            )
-        # doclen maintains in the same commit (BM25 serves tf + dl from ONE
-        # version cut); in the fold path it rides the delta's tombstone
-        # clock through the resolve above
-        if "tf_pending" in pinned:
-            cur_dl = resolved_tf.filter(F.col("kind") == "doclen").select(
-                "id", F.col("tf").alias("dl")
-            )
-        else:
-            cur_dl = ki.read_doclen(spark, tf_dir, version=pinned["tf_postings"])
-        # completeness guard (load_serving's count rule, enforced at WRITE
-        # time): over a legacy pre-doclen base the fold-first path resolves
-        # doclen rows for the pending batches' docs ONLY — partial but not
-        # empty, so an emptiness check alone would commit a permanently
-        # partial doclen partition and BM25's inner join would silently
-        # drop every uncovered doc. The upserted coverage must equal the
-        # post-COW tokens count exactly (one row per live chunk); on any
-        # disagreement, bootstrap from the tokens version this wave
-        # committed.
-        tok_post = snapshots.read_snapshot(spark, tokens_dir, version=tokv)
-        if cur_dl.isEmpty():
-            dl_new = ki.build_doclen_table(tok_post)
-        else:
-            dl_new = ki.upsert_doclen(cur_dl, tokens_new, deleted_ids=deleted_ids)
-            if dl_new.count() != tok_post.count():
-                dl_new = ki.build_doclen_table(tok_post)
-        parts.append(ki.doclen_partition_rows(dl_new))
-        tfv = snapshots.commit_snapshot(
-            parts[0]
-            .unionByName(parts[1])
-            .select("kind", "term", "id", "tf")
-            .unionByName(parts[2]),
-            tf_dir,
-            partition_by=["kind"],
-        )
-        if "tf_pending" in pinned:
-            # the fold committed the delta's content into the new base —
-            # truncate the delta (versioned: pinned cuts keep reading their
-            # pinned delta versions). Without this, a LATER pending wave
-            # appends onto the stale rows and resolution revives each
-            # folded id's latest-batch delta rows against the new base —
-            # resurrecting stale content for ids this wave updated and
-            # fully resurrecting docs it deleted (the compact crash-safety
-            # argument does NOT cover a base that also carries this wave's
-            # own edits).
-            ki.tf_pending_truncate(spark, os.path.join(base_dir, "tf_pending"))
-        # positions postings maintain with the same anti-join twin; a
-        # legacy layout whose pinned cut predates the table bootstraps from
-        # the tokens version this wave committed (post-COW, one posexplode
-        # pass), converging the layout in one wave
-        pos_dir = os.path.join(base_dir, "positions_postings")
-        pos_parts = []
-        if "positions_pending" in pinned and "positions_postings" in pinned:
-            # fold-first: pending waves' positions delta resolves into the
-            # upsert's base view (same rule as the tf rows)
-            cur_pos = ki.positions_resolve(
-                spark,
-                pos_dir,
-                os.path.join(base_dir, "positions_pending"),
-                base_version=pinned["positions_postings"],
-                delta_version=pinned["positions_pending"],
-            )
-        elif "positions_postings" in pinned:
-            cur_pos = snapshots.read_snapshot(
-                spark, pos_dir, version=pinned["positions_postings"]
-            )
-        else:
-            cur_pos = None
-        if cur_pos is not None:
-            for kind, col in (("exact", "tokens_exact"), ("stemmed", "tokens_stemmed")):
-                cur_k = cur_pos.filter(F.col("kind") == kind).select(
-                    "term", "id", "positions"
+        tokens_cut = snapshots.read_snapshot(spark, tokens_dir, version=tokv)
+        for table, delta, builder in PAYLOAD_TABLES:
+            build = getattr(ki, builder)
+            delta_dir = os.path.join(base_dir, delta)
+            wave = ki.pending_delta(tokens_new, deleted_ids, build, delta_dir)
+            if tf_mode == "pending" and table in pinned:
+                out[table] = pinned[table]
+                out[delta] = ki.append_pending(delta_dir, *wave)
+            else:
+                out[table] = _fold_payload_table(
+                    spark, base_dir, pinned, table, delta, build, tokens_cut, wave
                 )
-                pos_parts.append(
-                    ki.upsert_positions_postings(
-                        cur_k, tokens_new, deleted_ids=deleted_ids, token_col=col
-                    ).withColumn("kind", F.lit(kind))
-                )
-        else:
-            tok_full = snapshots.read_snapshot(spark, tokens_dir, version=tokv)
-            for kind, col in (("exact", "tokens_exact"), ("stemmed", "tokens_stemmed")):
-                pos_parts.append(
-                    ki.build_positions_postings(tok_full, col).withColumn(
-                        "kind", F.lit(kind)
-                    )
-                )
-        posn_v = snapshots.commit_snapshot(
-            pos_parts[0]
-            .unionByName(pos_parts[1])
-            .select("kind", "term", "id", "positions"),
-            pos_dir,
-            partition_by=["kind"],
-        )
-        if "positions_pending" in pinned:
-            # same truncate-after-fold rule as the tf delta above (the
-            # legacy-base branch rebuilds from post-COW tokens, which
-            # equally subsumes the delta's content)
-            ki.positions_pending_truncate(
-                spark, os.path.join(base_dir, "positions_pending")
-            )
-        out.update({"tf_postings": tfv, "positions_postings": posn_v})
         return out
     finally:
         tokens_new.unpersist()
@@ -619,27 +530,24 @@ def ingest_serving_incremental(
       stored vector (from_cache=true), only novel content pays the
       embedder; the cache narrows to the batch's hashes before joining,
       so the corpus-sized vectors table is never broadcast.
-    - **postings / tf_postings / positions_postings — O(table)**:
-      ``tf_mode="overwrite"`` (default) runs the anti-join upserts per
-      kind and re-commits each table whole — the simple regime
-      ``read_tf_postings`` serves directly (a term-clustered index cannot
-      use keyed copy-on-write: one doc touches every term range). These
-      three overwrite commits are most of a small wave's remaining jobs.
-      ``tf_mode="pending"`` appends the batch's postings + tombstones to
-      ``tf_pending/`` in O(batch) (the GIN-fastupdate regime —
-      ``keyword_index.tf_pending_append``); serve via
-      ``keyword_index.tf_resolve(tf_postings, tf_pending)`` and fold with
-      :func:`compact_serving` on your cadence (NOT raw ``tf_compact`` —
-      it would truncate the delta without repinning the published cut,
-      losing every folded change from the next pending wave; an
-      overwrite-mode wave folds too).
+    - **postings / tf_postings / positions_postings — O(table)**: the
+      posting arrays re-commit whole; the two payload tables take the
+      wave as one tombstone-clock delta (:func:`keyword_serving_wave`).
+      ``tf_mode="overwrite"`` (default) folds it into each base and
+      re-commits the table whole — a term-clustered index cannot use
+      keyed copy-on-write (one doc touches every term range); these
+      commits are most of a small wave's remaining jobs.
+      ``tf_mode="pending"`` appends it to ``tf_pending/`` and
+      ``positions_pending/`` in O(batch) (the GIN-fastupdate regime);
+      :func:`load_serving` resolves base ∪ delta, and
+      :func:`compact_serving` folds on your cadence.
     - **IVF — O(batch) assignment + O(index) version commit**: the
       affected ids anti-join out of the stored index, the batch's vectors
       route to the EXISTING centroids (``ivf_index_upsert`` — no refit),
       and :func:`plans.ivf.maybe_rebuild_index` decides whether corpus
       growth or (on a multi-list index) drift warrants a refit; the
-      merged bundle commits as a new snapshot version (index-proportional
-      write, like ``streaming_index_maintenance``).
+      merged bundle commits as a new snapshot version (an
+      index-proportional write).
 
     Every wave ends by PUBLISHING a root serving manifest
     (:func:`publish_serving`): readers through :func:`load_serving` see
@@ -961,30 +869,30 @@ def load_serving(
         ),
         stem_fn=stem_fn,
     )
-    if "tf_pending" in pinned:
-        # a pending-mode wave: the batched tier's truth is base ∪ delta,
-        # both pinned — resolve the exact cut, then kind-split
-        resolved = ki.tf_resolve(
+
+    def _payload(table, delta):
+        # a pending-mode cut serves base ∪ delta, both at their pins; None
+        # only on a legacy cut that predates the table
+        if table not in pinned:
+            return None
+        if delta not in pinned:
+            return _open(table)
+        return ki.resolve_pending(
             spark,
-            os.path.join(base_dir, "tf_postings"),
-            os.path.join(base_dir, "tf_pending"),
-            base_version=pinned["tf_postings"],
-            delta_version=pinned["tf_pending"],
+            os.path.join(base_dir, table),
+            os.path.join(base_dir, delta),
+            base_version=pinned[table],
+            delta_version=pinned[delta],
         )
-        tf_pair = (
-            resolved.filter(F.col("kind") == "exact").select("term", "id", "tf"),
-            resolved.filter(F.col("kind") == "stemmed").select("term", "id", "tf"),
-        )
-        doclen = resolved.filter(F.col("kind") == "doclen").select(
-            "id", F.col("tf").alias("dl")
-        )
-    else:
-        tf_pair = ki.read_tf_postings(
-            spark, os.path.join(base_dir, "tf_postings"), version=pinned["tf_postings"]
-        )
-        doclen = ki.read_doclen(
-            spark, os.path.join(base_dir, "tf_postings"), version=pinned["tf_postings"]
-        )
+
+    tf = _payload("tf_postings", "tf_pending")
+    tf_pair = tuple(
+        tf.filter(F.col("kind") == k).select("term", "id", "tf")
+        for k in ("exact", "stemmed")
+    )
+    doclen = tf.filter(F.col("kind") == "doclen").select(
+        "id", F.col("tf").alias("dl")
+    )
     vidx = _ivf.VectorIndex(
         index=_open("ivf_index").select(
             "id", F.col("list_id").cast("bigint").alias("list_id"), "vec", "norm"
@@ -1004,29 +912,17 @@ def load_serving(
     if doclen.count() != tokens.count():
         doclen = ki.build_doclen_table(tokens)
     # (term, id, positions) pair for the phrase/proximity/batched-websearch
-    # tiers (r10). A pending-mode cut resolves base ∪ positions_pending at
-    # the pinned versions (positions ride their own fastupdate delta, so
-    # phrase serving stays FRESH through pending waves); an overwrite cut
-    # opens the committed table; None only on pre-positions legacy layouts.
-    if "positions_pending" in pinned and "positions_postings" in pinned:
-        pos = ki.positions_resolve(
-            spark,
-            os.path.join(base_dir, "positions_postings"),
-            os.path.join(base_dir, "positions_pending"),
-            base_version=pinned["positions_postings"],
-            delta_version=pinned["positions_pending"],
+    # tiers; positions ride their own pending delta on the same clock, so
+    # phrase serving stays fresh through pending waves
+    pos = _payload("positions_postings", "positions_pending")
+    pos_pair = (
+        None
+        if pos is None
+        else tuple(
+            pos.filter(F.col("kind") == k).select("term", "id", "positions")
+            for k in ("exact", "stemmed")
         )
-    elif "positions_postings" in pinned:
-        pos = _open("positions_postings")
-    else:
-        pos = None
-    if pos is not None:
-        pos_pair = (
-            pos.filter(F.col("kind") == "exact").select("term", "id", "positions"),
-            pos.filter(F.col("kind") == "stemmed").select("term", "id", "positions"),
-        )
-    else:
-        pos_pair = None
+    )
     return {
         "keyword_index": kidx,
         "tf_postings": tf_pair,
@@ -1048,17 +944,11 @@ def load_serving(
 
 def compact_serving(spark, base_dir: str) -> int | None:
     """Fold a serving layout's outstanding pending deltas into their
-    bases and PUBLISH the repinned cut — the only correct way to compact
-    an ingest_serving layout (r11). Calling ``keyword_index.tf_compact``
-    directly on the layout's dirs is a correctness trap: the published
-    manifest keeps pinning the OLD base while the truncation empties the
-    delta, so the next pending wave carries the stale base pin forward
-    and every folded change silently vanishes from its cut. Here the
-    fold resolves at the PINNED versions (never latest — a crashed
-    wave's torn commits must not launder in), commits the folded bases,
-    truncates the deltas (versioned — older pinned cuts keep reading
-    their pinned delta versions), and publishes a manifest whose cut
-    pins the new bases and drops the pending pins.
+    bases and PUBLISH the repinned cut — :func:`_fold_payload_table`
+    with no wave delta, per pinned delta, at the PINNED versions (never
+    latest: a crashed wave's torn commits must not launder in). The
+    published cut pins the new bases and drops the pending pins; older
+    cuts keep reading their pinned versions.
 
     No-op (returns None) when the current cut has no pending pins.
     Single-writer discipline like the waves themselves: don't run
@@ -1071,39 +961,18 @@ def compact_serving(spark, base_dir: str) -> int | None:
 
     m = snapshots.load_manifest(os.path.join(base_dir, "_serving"))
     pinned = dict(m["tables"])
-    if "tf_pending" not in pinned and "positions_pending" not in pinned:
+    pending = [row for row in PAYLOAD_TABLES if row[1] in pinned]
+    if not pending:
         return None
+    tokens = snapshots.read_snapshot(
+        spark, os.path.join(base_dir, "tokens"), version=pinned["tokens"]
+    )
+    for table, delta, builder in pending:
+        pinned[table] = _fold_payload_table(
+            spark, base_dir, pinned, table, delta, getattr(ki, builder), tokens
+        )
+        del pinned[delta]
     meta = {k: v for k, v in m.items() if k not in ("tables", "version")}
-    if "tf_pending" in pinned:
-        resolved = ki.tf_resolve(
-            spark,
-            os.path.join(base_dir, "tf_postings"),
-            os.path.join(base_dir, "tf_pending"),
-            base_version=pinned["tf_postings"],
-            delta_version=pinned["tf_pending"],
-        )
-        pinned["tf_postings"] = snapshots.commit_snapshot(
-            resolved, os.path.join(base_dir, "tf_postings"), partition_by=["kind"]
-        )
-        ki.tf_pending_truncate(spark, os.path.join(base_dir, "tf_pending"))
-        del pinned["tf_pending"]
-    if "positions_pending" in pinned:
-        resolved_p = ki.positions_resolve(
-            spark,
-            os.path.join(base_dir, "positions_postings"),
-            os.path.join(base_dir, "positions_pending"),
-            base_version=pinned.get("positions_postings"),
-            delta_version=pinned["positions_pending"],
-        )
-        pinned["positions_postings"] = snapshots.commit_snapshot(
-            resolved_p,
-            os.path.join(base_dir, "positions_postings"),
-            partition_by=["kind"],
-        )
-        ki.positions_pending_truncate(
-            spark, os.path.join(base_dir, "positions_pending")
-        )
-        del pinned["positions_pending"]
     return publish_serving(base_dir, pinned, **meta)
 
 

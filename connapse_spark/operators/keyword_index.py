@@ -214,6 +214,25 @@ def build_positions_all(tokens: DataFrame) -> DataFrame:
     )
 
 
+def build_tf_all(tokens: DataFrame) -> DataFrame:
+    """Both configs' tf postings plus the doclen rows as one
+    kind-partitionable frame (kind ∈ exact|stemmed|doclen, term, id, tf)
+    — the rows of the ``tf_postings`` serving table and of its pending
+    delta. Doclen rides the tf table so BM25 reads tf and lengths from
+    one commit (see :func:`read_doclen`)."""
+    return (
+        build_tf_postings(tokens, "tokens_exact")
+        .withColumn("kind", F.lit("exact"))
+        .unionByName(
+            build_tf_postings(tokens, "tokens_stemmed").withColumn(
+                "kind", F.lit("stemmed")
+            )
+        )
+        .select("kind", "term", "id", "tf")
+        .unionByName(doclen_partition_rows(build_doclen_table(tokens)))
+    )
+
+
 def build_positions_postings(
     tokens: DataFrame, token_col: str = "tokens_exact"
 ) -> DataFrame:
@@ -247,9 +266,8 @@ def doclen_partition_rows(doclen: DataFrame) -> DataFrame:
     """Encode an (id, dl) doclen frame as the rows it occupies inside the
     kind-partitioned tf snapshot: (kind='doclen', term='', id, tf=dl).
     The ONE encoder for the format :func:`read_doclen` decodes — every
-    writer (ingest_serving, the incremental wave, the pending-list
-    appender, streaming maintenance) goes through here so encode and
-    decode cannot drift."""
+    writer goes through :func:`build_tf_all`, which calls it, so encode
+    and decode cannot drift."""
     return doclen.select(
         F.lit("doclen").alias("kind"),
         F.lit("").alias("term"),
@@ -935,40 +953,85 @@ def _affected_ids(
     return affected, True
 
 
+def fold_postings(
+    base: "DataFrame | None",
+    fresh: DataFrame,
+    tombs: DataFrame,
+    broadcast: bool = True,
+) -> DataFrame:
+    """The tombstone-clock fold over the ONE change representation of
+    the row-level payload tables (tf postings with their doclen rows,
+    positions postings, a bare doclen table). Every maintenance path is
+    this fold: the upserts apply one batch at once, a pending-list read
+    resolves base ∪ delta (:func:`resolve_pending`), an overwrite wave
+    and ``ingest.compact_serving`` commit the result as the next base.
+
+    ``fresh`` holds changed rows (``base``'s columns plus a ``batch``
+    long); ``tombs`` one (``id``, ``batch``) row per id a batch touched.
+    A batch tombstones the ids it upserts as well as the ids it deletes,
+    so an id's live rows are those of its latest tombstoned batch: the
+    result is ``base`` minus every tombstoned id, plus each fresh row no
+    later tomb of its id supersedes (``base=None`` — no base yet — gives
+    the live fresh rows alone). The clock never reads the payload.
+    Duplicate tombs are harmless; duplicate fresh rows are not (replayed
+    on-disk batches dedup in :func:`read_pending`).
+
+    Both sides are one ``left_anti`` against the tomb frame, broadcast
+    unless ``broadcast=False`` (a change feed of unknown size: the join
+    strategy is then the optimizer's, and AQE broadcasts it when it
+    measures small). Broadcast, the base is scanned once and never
+    shuffled; either way nothing is collected to the driver and no id
+    becomes a plan literal."""
+    t = tombs.select(F.col("id").alias("_tid"), F.col("batch").alias("_tb"))
+    if broadcast:
+        t = F.broadcast(t)
+    cols = [c for c in fresh.columns if c != "batch"] if base is None else base.columns
+    live = fresh.join(
+        t, (F.col("id") == F.col("_tid")) & (F.col("_tb") > F.col("batch")), "left_anti"
+    ).select(*cols)
+    if base is None:
+        return live
+    return (
+        base.join(t, F.col("id") == F.col("_tid"), "left_anti")
+        .select(*cols)
+        .unionByName(live)
+    )
+
+
+def _upsert(base: DataFrame, new_tokens: DataFrame, deleted_ids, fresh: DataFrame) -> DataFrame:
+    """One batch — its ``fresh`` rows and a tomb per affected id, on one
+    clock tick — folded into ``base``."""
+    affected, bounded = _affected_ids(base.sparkSession, new_tokens, deleted_ids)
+    tick = F.lit(0).cast("long")
+    return fold_postings(
+        base,
+        fresh.withColumn("batch", tick),
+        affected.withColumn("batch", tick),
+        broadcast=bounded,
+    )
+
+
 def upsert_tf_postings(
     tf: DataFrame,
     new_tokens: DataFrame,
     deleted_ids: "list[int] | DataFrame | None" = None,
     token_col: str = "tokens_exact",
 ) -> DataFrame:
-    """Incremental maintenance of the tf-postings layout — the write side
+    """Incremental maintenance of a (term, id, tf) table — the write side
     of what ``keyword_search_many_indexed`` / the fast hybrid tier's
     ``tf_postings`` serve from. A batch of NEW/UPDATED docs (their token
-    table) plus optional deletions folds into the existing (term, id, tf)
-    table without re-tokenizing the corpus; rebuild-equivalent semantics
-    (the oracle entry checks incremental == rebuild over the post-upsert
-    corpus).
+    table) plus optional deletions folds in without re-tokenizing the
+    corpus (:func:`fold_postings`: affected ids — upserted, so their
+    stale terms go, or deleted — drop in one anti-join, the batch's rows
+    union in); the ``tf_postings_upsert`` oracle entry checks
+    incremental == rebuild over the post-upsert corpus.
 
-    Unlike :func:`upsert_postings`'s array surgery, row-level postings
-    make removal a plain anti-join: affected ids (upserted — their stale
-    terms must not linger — or deleted) drop in one broadcast left_anti
-    against the batch's id set, with NO driver-side collect, so the batch
-    side may itself be a full change feed. The postings table is scanned
-    once; the only shuffle is the batch's own (term, id) aggregation.
-
-    ``deleted_ids`` may be a Python list (bounded ad-hoc batch) or a
-    DataFrame with an ``id`` column (change-feed scale — stays
-    distributed end to end; the anti-join is then left to the optimizer
-    rather than broadcast-hinted, since a full feed can exceed the
-    broadcast cap — AQE still broadcasts when the measured size is
-    small)."""
-    affected, bounded = _affected_ids(tf.sparkSession, new_tokens, deleted_ids)
-    probe = F.broadcast(affected.distinct()) if bounded else affected.distinct()
-    cleaned = tf.join(probe, "id", "left_anti").select(
-        "term", "id", "tf"  # the join hoists its key; restore the layout order
-    )
-    fresh = build_tf_postings(new_tokens, token_col=token_col)
-    return cleaned.unionByName(fresh)
+    ``deleted_ids`` may be a Python list (bounded ad-hoc batch — the
+    anti-join is broadcast) or a DataFrame with an ``id`` column
+    (change-feed scale — stays distributed end to end, join strategy
+    left to the optimizer). The only shuffle is the batch's own
+    (term, id) aggregation."""
+    return _upsert(tf, new_tokens, deleted_ids, build_tf_postings(new_tokens, token_col))
 
 
 def upsert_positions_postings(
@@ -977,31 +1040,15 @@ def upsert_positions_postings(
     deleted_ids: "list[int] | DataFrame | None" = None,
     token_col: str = "tokens_exact",
 ) -> DataFrame:
-    """Incremental maintenance of the positions-postings layout (r10 —
-    VERDICT r9 ask #2: :func:`build_positions_postings` serves the
-    batched phrase AND the cover-density proximity tiers since r9, but a
-    crawl drop forced a full rebuild, the exact gap ``cdx_append`` closed
-    for CDX). Folds a batch's token table plus optional deletions into
-    an existing (term, id, positions) table WITHOUT re-tokenizing or
-    re-posexploding the corpus; rebuild-equivalent semantics (the
-    ``positions_upsert`` oracle entry pins incremental == rebuild over
-    the post-change corpus, position for position).
-
-    Same driverless anti-join shape as the :func:`upsert_tf_postings`
-    twin — positions postings are row-level (term, id, positions), so
-    removal of an affected id's stale rows is ONE ``left_anti`` against
-    the batch's id frame (broadcast-hinted only when the deletion side
-    is a bounded Python list; a DataFrame change feed stays
-    optimizer-planned, AQE broadcasts it when measured small). The only
-    shuffle is the batch's own posexplode aggregation; the base table is
-    scanned once and never collected."""
-    affected, bounded = _affected_ids(pos.sparkSession, new_tokens, deleted_ids)
-    probe = F.broadcast(affected.distinct()) if bounded else affected.distinct()
-    cleaned = pos.join(probe, "id", "left_anti").select(
-        "term", "id", "positions"  # restore the layout order past the join
+    """Incremental maintenance of a (term, id, positions) table — the
+    phrase/proximity serving structure — without re-posexploding the
+    corpus; the same fold and ``deleted_ids`` contract as
+    :func:`upsert_tf_postings`. The ``positions_upsert`` oracle entry
+    pins incremental == rebuild over the post-change corpus, position
+    for position."""
+    return _upsert(
+        pos, new_tokens, deleted_ids, build_positions_postings(new_tokens, token_col)
     )
-    fresh = build_positions_postings(new_tokens, token_col=token_col)
-    return cleaned.unionByName(fresh)
 
 
 def upsert_doclen(
@@ -1010,27 +1057,119 @@ def upsert_doclen(
     deleted_ids: "list[int] | DataFrame | None" = None,
     token_col: str = "tokens_stemmed",
 ) -> DataFrame:
-    """Incremental maintenance of the doclen table — the last serving
-    structure BM25 reads (``keyword_search_bm25_indexed`` takes the
-    stemmed tf postings + this (id, dl) table; both fold corpus stats
-    N/Σdl/df out of the query path). The tf side already maintained
-    incrementally (:func:`upsert_tf_postings`); without this twin a
-    crawl drop forced a full corpus re-tokenize just to refresh one int
-    per doc, and the served avgdl/N silently went stale.
+    """Incremental maintenance of an (id, dl) doclen table — the length
+    column ``keyword_search_bm25_indexed`` mixes with the stemmed tf
+    postings — through the same fold as :func:`upsert_tf_postings`. The
+    ``bm25_upsert`` oracle entry pins the SERVED BM25 scores over
+    incrementally-maintained tables against a from-scratch rebuild."""
+    return _upsert(
+        doclen, new_tokens, deleted_ids, build_doclen_table(new_tokens, token_col)
+    )
 
-    Same driverless anti-join shape as the tf/positions twins: affected
-    ids (upserted — their old length must not linger — or deleted) drop
-    in ONE ``left_anti`` against the batch's id frame (broadcast-hinted
-    only for bounded Python-list deletions; a DataFrame change feed
-    stays optimizer-planned), then the batch's own lengths union in.
-    Rebuild-equivalent: the ``bm25_upsert`` oracle entry pins the SERVED
-    BM25 scores over incrementally-maintained tables against a
-    from-scratch rebuild of the post-change corpus."""
-    affected, bounded = _affected_ids(doclen.sparkSession, new_tokens, deleted_ids)
-    probe = F.broadcast(affected.distinct()) if bounded else affected.distinct()
-    cleaned = doclen.join(probe, "id", "left_anti").select("id", "dl")
-    fresh = build_doclen_table(new_tokens, token_col=token_col)
-    return cleaned.unionByName(fresh)
+
+def pending_delta(
+    tokens: DataFrame,
+    deleted_ids: "list | DataFrame | None",
+    rows_of,
+    delta_dir: str,
+    batch: int | None = None,
+) -> "tuple[DataFrame, DataFrame]":
+    """One batch as a pending delta: ``(fresh, tombs)`` for
+    :func:`fold_postings` — ``rows_of(tokens)`` (e.g.
+    :func:`build_tf_all`, :func:`build_positions_all`) stamped with the
+    batch id, and one tomb per affected id (the batch's own ids and the
+    deletions). ``batch`` must be monotone across a delta's commits; the
+    default is the delta's next version, which exceeds every batch id the
+    delta holds."""
+    from connapse_spark.sources import snapshots
+
+    if batch is None:
+        lv = snapshots.latest_version(delta_dir)
+        batch = 0 if lv is None else lv + 1
+    tick = F.lit(int(batch)).cast("long")
+    affected, _ = _affected_ids(tokens.sparkSession, tokens, deleted_ids)
+    return rows_of(tokens).withColumn("batch", tick), affected.withColumn("batch", tick)
+
+
+def append_pending(delta_dir: str, fresh: DataFrame, tombs: DataFrame) -> int:
+    """Commit one :func:`pending_delta` to ``delta_dir`` in O(batch), no
+    base read: the fresh rows plus one (kind='tomb', term='', id, NULL
+    payload, batch) row per tomb, kind-partitioned, appended to the
+    delta's latest version. Replaying a batch appends byte-identical
+    rows, which :func:`read_pending` dedups — crash-replay is idempotent
+    at read time."""
+    from connapse_spark.sources import snapshots
+
+    # a NULL cast by type NAME: an array payload then admits null
+    # elements, the on-disk type every commit of the delta shares
+    fill = {"kind": F.lit("tomb"), "term": F.lit(""), "id": F.col("id"), "batch": F.col("batch")}
+    tomb_rows = tombs.select(*[
+        fill.get(f.name, F.lit(None).cast(f.dataType.simpleString())).alias(f.name)
+        for f in fresh.schema
+    ])
+    return snapshots.commit_snapshot(
+        fresh.unionByName(tomb_rows),
+        delta_dir,
+        mode="append" if snapshots.latest_version(delta_dir) is not None else "overwrite",
+        partition_by=["kind"],
+    )
+
+
+def read_pending(
+    spark, delta_dir: str, version: int | None = None
+) -> "tuple[DataFrame, DataFrame]":
+    """A committed pending delta at ``version`` as :func:`fold_postings`'s
+    ``(fresh, tombs)``; crash-replayed appends (byte-identical rows)
+    dedup on (kind, term, id, batch)."""
+    from connapse_spark.sources import snapshots
+
+    d = snapshots.read_snapshot(spark, delta_dir, version=version).dropDuplicates(
+        ["kind", "term", "id", "batch"]
+    )
+    is_tomb = F.col("kind") == "tomb"
+    return d.filter(~is_tomb), d.filter(is_tomb).select("id", "batch")
+
+
+def truncate_pending(spark, delta_dir: str) -> int:
+    """Commit an EMPTY version to a pending delta once a fold committed
+    its content into the base. Versioned: pinned cuts keep reading their
+    pinned delta versions. Without it, a later pending wave would append
+    onto the folded rows, and a fold of base ∪ stale delta would revive
+    each folded id's latest-batch rows — stale content for ids a wave
+    updated since, whole docs it deleted. Mirrors the delta's own schema
+    (id may be long or string)."""
+    from connapse_spark.sources import snapshots
+
+    schema = snapshots.read_snapshot(spark, delta_dir).schema
+    return snapshots.commit_snapshot(
+        spark.createDataFrame([], schema), delta_dir, partition_by=["kind"]
+    )
+
+
+def resolve_pending(
+    spark,
+    base_dir: str,
+    delta_dir: str,
+    base_version: int | None = None,
+    delta_version: int | None = None,
+) -> DataFrame:
+    """Serve-time view of a pending-list index (the GIN fastupdate
+    regime): :func:`fold_postings` of the base and the delta, each at its
+    pinned version (latest when omitted). The tombstone set is the ids
+    touched since the last fold — broadcast-sized by construction — so
+    the base is scanned once with no shuffle. The payload is never read:
+    tf rows (with doclen) and positions resolve alike."""
+    from connapse_spark.sources import snapshots
+
+    base = (
+        snapshots.read_snapshot(spark, base_dir, version=base_version)
+        if snapshots.latest_version(base_dir) is not None
+        else None
+    )
+    if snapshots.latest_version(delta_dir) is None:
+        return base
+    return fold_postings(base, *read_pending(spark, delta_dir, delta_version))
+
 
 
 def tf_pending_append(
@@ -1040,224 +1179,15 @@ def tf_pending_append(
     batch: int | None = None,
     tokens: DataFrame | None = None,
 ) -> int:
-    """PENDING-LIST maintenance of the tf-postings index (the GIN
-    fastupdate regime): instead of rewriting the whole term-clustered
-    index per micro-batch (``upsert_tf_postings`` + overwrite — O(index)
-    per batch), append ONE batch's postings and tombstones to a small
-    delta table — O(batch) per commit, no base read at all. Serving
-    resolves base ∪ delta through :func:`tf_resolve`; :func:`tf_compact`
-    periodically folds the delta into the base so the resolution join
-    stays broadcast-sized.
-
-    Delta rows: (kind ∈ exact|stemmed|doclen, term, id, tf, batch) for
-    the batch's postings and doc lengths (doclen: term='', tf=dl — the
-    BM25 serving column, riding the same clock so :func:`tf_resolve`
-    maintains it with zero special-casing: an upsert's tombstone removes
-    the old length, its own latest-batch row re-adds the new one), plus
-    one (kind='tomb', term='', id, tf=NULL, batch) row per AFFECTED id —
-    upserted ids tombstone their own prior state; deleted-only ids get
-    just the tombstone. ``batch`` must be monotone across commits (a
-    streaming caller passes its replayed-stable micro-batch id; default
-    = next delta version); replaying the same batch appends
-    byte-identical rows, which resolution dedups — crash-replay is
-    idempotent at serve time. ``tokens`` lets a caller maintaining
-    several structures from one batch tokenize once (the streaming
-    pending handler passes a persisted table to both appends)."""
-
-    def _fresh(toks: DataFrame) -> DataFrame:
-        return (
-            build_tf_postings(toks, "tokens_exact").withColumn(
-                "kind", F.lit("exact")
-            )
-            .unionByName(
-                build_tf_postings(toks, "tokens_stemmed").withColumn(
-                    "kind", F.lit("stemmed")
-                )
-            )
-            .select("kind", "term", "id", "tf")
-            .unionByName(doclen_partition_rows(build_doclen_table(toks)))
-        )
-
-    return _pending_append(
-        docs_batch, delta_dir, _fresh, "tf", "long", deleted_ids, batch, tokens
-    )
-
-
-def _pending_append(
-    docs_batch: DataFrame,
-    delta_dir: str,
-    fresh_builder,
-    payload: str,
-    payload_type: str,
-    deleted_ids,
-    batch: int | None,
-    tokens: DataFrame | None = None,
-) -> int:
-    """The shared pending-append skeleton (tombstone-clock twin of
-    :func:`_pending_resolve`): one batch's fresh rows from
-    ``fresh_builder(token_table)`` plus one tomb row per affected id,
-    stamped with a monotone batch id and committed kind-partitioned in
-    append mode. The clock / replay-idempotence / crash-safety argument
-    lives here ONCE — the tf and positions regimes differ only in their
-    payload column and fresh-row builder."""
-    from connapse_spark.sources import snapshots
-
-    spark = docs_batch.sparkSession
+    """PENDING-LIST maintenance of the tf-postings index: append ONE
+    batch's :func:`build_tf_all` rows (exact/stemmed tf and doclen) and
+    tombstones to the delta in O(batch) instead of rewriting the
+    term-clustered index (:func:`pending_delta`, :func:`append_pending`).
+    ``tokens`` reuses an already built token table for the batch."""
     toks = build_token_table(docs_batch) if tokens is None else tokens
-    fresh = fresh_builder(toks)
-    affected, _ = _affected_ids(spark, toks, deleted_ids)
-    lv = snapshots.latest_version(delta_dir)
-    if batch is None:
-        batch = 0 if lv is None else lv + 1
-    tomb = affected.distinct().select(
-        F.lit("tomb").alias("kind"),
-        F.lit("").alias("term"),
-        "id",
-        F.expr(f"CAST(NULL AS {payload_type})").alias(payload),
+    return append_pending(
+        delta_dir, *pending_delta(toks, deleted_ids, build_tf_all, delta_dir, batch)
     )
-    rows = (
-        fresh.select("kind", "term", "id", payload)
-        .unionByName(tomb)
-        .withColumn("batch", F.lit(int(batch)).cast("long"))
-    )
-    return snapshots.commit_snapshot(
-        rows,
-        delta_dir,
-        mode="append" if lv is not None else "overwrite",
-        partition_by=["kind"],
-    )
-
-
-def _pending_resolve(
-    spark,
-    base_dir: str,
-    delta_dir: str,
-    payload: str,
-    payload_type: str,
-    base_version: int | None = None,
-    delta_version: int | None = None,
-) -> DataFrame:
-    """Tombstone-clock resolution of a pending-list postings index,
-    payload-agnostic (tf longs, position arrays — the clock never looks
-    at the payload): base rows minus tombstoned ids, plus each delta
-    id's LATEST batch of rows. ``dropDuplicates`` over the key columns
-    makes crash-replayed appends (byte-identical rows) invisible."""
-    from connapse_spark.sources import snapshots
-
-    cols = ["kind", "term", "id", payload]
-    empty = spark.createDataFrame(
-        [], f"kind string, term string, id long, {payload} {payload_type}"
-    )
-    base = (
-        snapshots.read_snapshot(spark, base_dir, version=base_version).select(*cols)
-        if snapshots.latest_version(base_dir) is not None
-        else empty
-    )
-    if snapshots.latest_version(delta_dir) is None:
-        return base
-    # version pins let a serving-manifest reader resolve the exact cut a
-    # wave published rather than whatever is latest
-    delta = snapshots.read_snapshot(
-        spark, delta_dir, version=delta_version
-    ).dropDuplicates(["kind", "term", "id", "batch"])
-    tomb = (
-        delta.filter(F.col("kind") == "tomb")
-        .groupBy("id")
-        .agg(F.max("batch").alias("_tb"))
-    )
-    live_base = base.join(F.broadcast(tomb), "id", "left_anti").select(*cols)
-    live_delta = (
-        delta.filter(F.col("kind") != "tomb")
-        .join(F.broadcast(tomb), "id")
-        .filter(F.col("batch") == F.col("_tb"))
-        .select(*cols)
-    )
-    return live_base.unionByName(live_delta)
-
-
-def tf_resolve(
-    spark,
-    base_dir: str,
-    delta_dir: str,
-    base_version: int | None = None,
-    delta_version: int | None = None,
-) -> DataFrame:
-    """Serve-time view of a pending-list tf index: base postings minus
-    tombstoned ids, plus each delta id's LATEST batch of postings (an id
-    upserted at batch b carries its own tomb at b, so live delta rows
-    are exactly those whose batch equals the id's max tombstone batch;
-    a later delete raises the max above every posting batch and the id
-    vanishes). The tombstone set is the ids touched since the last
-    compaction — broadcast-sized by construction, so the base table is
-    scanned once with no shuffle. Crash-replayed appends resolve away
-    (see :func:`_pending_resolve`, shared with the positions twin)."""
-    return _pending_resolve(
-        spark, base_dir, delta_dir, "tf", "long", base_version, delta_version
-    )
-
-
-def tf_compact(spark, base_dir: str, delta_dir: str) -> int:
-    """Fold the pending delta into the base index: commit the resolved
-    view as the next base version, then truncate the delta. Crash-safe
-    without coordination: if the truncate never happens, the stale
-    delta's tombstones suppress exactly the base rows its own postings
-    re-add, so resolution over (compacted base, stale delta) equals
-    resolution over the old pair — re-running compaction converges.
-    Old base/delta versions stay readable for pinned readers until a
-    retention pass expires them."""
-    return _pending_compact(spark, base_dir, delta_dir, tf_resolve, "tf long")
-
-
-def _pending_compact(spark, base_dir, delta_dir, resolve_fn, payload_schema) -> int:
-    """Shared compact: commit the resolved view as the next base version,
-    then truncate the delta — the crash-safety argument (stale delta over
-    a compacted base resolves identically) holds for any payload because
-    the tombstone clock never reads it."""
-    from connapse_spark.sources import snapshots
-
-    resolved = resolve_fn(spark, base_dir, delta_dir)
-    v = snapshots.commit_snapshot(resolved, base_dir, partition_by=["kind"])
-    _pending_truncate(spark, delta_dir, payload_schema)
-    return v
-
-
-def _pending_truncate(spark, delta_dir, payload_schema) -> int:
-    """Commit an EMPTY version to a pending delta dir — versioned
-    truncation, so pinned cuts keep reading their pinned delta versions
-    while new cuts see a clean delta. Used by :func:`_pending_compact`
-    and by overwrite waves that FOLD an outstanding pending delta into
-    their new base: the compact crash-safety argument (stale delta over
-    a folded base resolves identically) holds only when the base is
-    exactly the resolved view — an overwrite wave's base additionally
-    carries the wave's own upserts/deletes, so a stale delta row for an
-    id the wave updated or deleted would RESURRECT at the next pending
-    resolve. Truncating after the fold closes that window."""
-    from connapse_spark.sources import snapshots
-
-    if snapshots.latest_version(delta_dir) is not None:
-        # mirror the delta's OWN schema — id may be long or string
-        # depending on the layout's chunk-id type, and snapshot schema
-        # evolution (rightly) refuses a type flip
-        schema = snapshots.read_snapshot(spark, delta_dir).schema
-        empty = spark.createDataFrame([], schema)
-    else:
-        empty = spark.createDataFrame(
-            [], f"kind string, term string, id long, {payload_schema}, batch long"
-        )
-    return snapshots.commit_snapshot(empty, delta_dir, partition_by=["kind"])
-
-
-def tf_pending_truncate(spark, delta_dir: str) -> int:
-    """Versioned truncation of a tf pending delta (see
-    :func:`_pending_truncate` for when an overwrite wave must call this
-    after folding the delta into its base)."""
-    return _pending_truncate(spark, delta_dir, "tf long")
-
-
-def positions_pending_truncate(spark, delta_dir: str) -> int:
-    """Versioned truncation of a positions pending delta — the
-    :func:`tf_pending_truncate` twin."""
-    return _pending_truncate(spark, delta_dir, "positions array<int>")
 
 
 def positions_pending_append(
@@ -1267,55 +1197,11 @@ def positions_pending_append(
     batch: int | None = None,
     tokens: DataFrame | None = None,
 ) -> int:
-    """PENDING-LIST maintenance of the positions postings — the
-    fastupdate regime for the phrase/proximity serving structure (r10:
-    tf gained this in r7, but the HEAVIEST postings layout still paid
-    ``upsert_positions_postings`` + overwrite, O(index) per micro-batch,
-    exactly where high-frequency ingest hurts most). One batch's
-    (kind ∈ exact|stemmed, term, id, positions, batch) rows plus one
-    (kind='tomb', term='', id, positions=NULL, batch) row per affected
-    id append in O(batch); :func:`positions_resolve` serves base ∪
-    delta; :func:`positions_compact` folds on your cadence. Same
-    monotone-batch / replay-idempotence contract as
-    :func:`tf_pending_append` (the clock logic is shared code);
-    ``tokens`` shares one token table across several appends."""
-    return _pending_append(
-        docs_batch,
-        delta_dir,
-        build_positions_all,
-        "positions",
-        "array<int>",
-        deleted_ids,
-        batch,
-        tokens,
-    )
-
-
-def positions_resolve(
-    spark,
-    base_dir: str,
-    delta_dir: str,
-    base_version: int | None = None,
-    delta_version: int | None = None,
-) -> DataFrame:
-    """Serve-time view of a pending-list positions index — the phrase and
-    proximity tiers take the kind-split of this frame exactly as they
-    take a freshly built table (the ``positions_pending_resolve`` oracle
-    pins resolution == rebuild position for position). Same tombstone
-    clock as :func:`tf_resolve` (shared code, array payload)."""
-    return _pending_resolve(
-        spark, base_dir, delta_dir, "positions", "array<int>",
-        base_version, delta_version,
-    )
-
-
-def positions_compact(spark, base_dir: str, delta_dir: str) -> int:
-    """Fold the positions pending delta into the base — same crash-safe
-    convergence argument as :func:`tf_compact`: a committed base with a
-    stale (untruncated) delta resolves identically, so re-running
-    compaction converges."""
-    return _pending_compact(
-        spark, base_dir, delta_dir, positions_resolve, "positions array<int>"
+    """:func:`tf_pending_append` for the positions postings
+    (:func:`build_positions_all` rows)."""
+    toks = build_token_table(docs_batch) if tokens is None else tokens
+    return append_pending(
+        delta_dir, *pending_delta(toks, deleted_ids, build_positions_all, delta_dir, batch)
     )
 
 
@@ -1323,9 +1209,9 @@ def read_tf_postings(
     spark, table_dir: str, version: int | None = None
 ) -> "tuple[DataFrame, DataFrame]":
     """Reopen a committed kind-partitioned tf-postings snapshot (the
-    layout ``ingest_serving`` / ``streaming_keyword_maintenance`` write)
-    as the ``(tf_exact, tf_stemmed)`` pair every serving tier takes —
-    the keyword counterpart of ``plans.ivf.load_vector_index``. The kind
+    layout ``ingest_serving`` commits and every wave folds into) as the
+    ``(tf_exact, tf_stemmed)`` pair every serving tier takes — the
+    keyword counterpart of ``plans.ivf.load_vector_index``. The kind
     filter is partition pruning on the committed layout; ``version``
     pins a serving-manifest cut."""
     from connapse_spark.sources import snapshots
@@ -1574,10 +1460,6 @@ def keyword_search_websearch_indexed(
         .orderBy(F.desc("score"), F.asc("id"))
         .limit(k)
     )
-
-
-def sql_postings(token_expr_builder, k_unused: int = 0) -> str:  # pragma: no cover
-    raise NotImplementedError("use sql_keyword_indexed — postings are an internal structure")
 
 
 def sql_keyword_indexed(query: str, k: int = 10) -> str:

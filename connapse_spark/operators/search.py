@@ -1239,17 +1239,6 @@ def resolve_mode(mode: str, enable_cross_model: bool) -> str:
 # ---------------------------------------------------------------------------
 
 
-def min_score_topk(
-    hits: DataFrame, options: SearchOptions, id_col: str = "id"
-) -> DataFrame:
-    """MinScore filter + desc sort + top-k (HybridSearchService.cs:146-159)."""
-    return (
-        hits.filter(F.col("score") >= F.lit(options.min_score))
-        .orderBy(F.desc("score"), F.col(id_col))
-        .limit(options.top_k)
-    )
-
-
 def apply_min_score(hits: DataFrame, min_score: float) -> DataFrame:
     return hits.filter(f"score >= {spark_sql_literal(min_score)}")
 
@@ -1808,15 +1797,6 @@ def tagged_keyword_agg(probe: DataFrame) -> DataFrame:
         F.sum(F.when(F.col("cfg") == "e", F.col("tf"))).alias("n_exact"),
         F.sum(F.when(F.col("cfg") == "s", F.col("tf"))).alias("n_stem"),
     )
-
-
-def batch_keyword_scores(ne: DataFrame, ns: DataFrame) -> DataFrame:
-    """Compatibility form of :func:`batch_keyword_scores_merged` for
-    callers holding separate per-config count frames — merges them
-    full-outer then applies the shared squash. The in-repo tiers feed
-    the merged/tagged form directly (one aggregation, no merge join)."""
-    merged = ne.join(ns, ["qid", "id"], "full_outer")
-    return batch_keyword_scores_merged(merged)
 
 
 def rank_topk_per_qid(scored: DataFrame, k: int) -> DataFrame:

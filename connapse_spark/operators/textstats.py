@@ -45,13 +45,6 @@ def token_count_bpeish_expr(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(BPE_RE), F.lit(0)))
 
 
-def stopword_stats_expr(text: Column) -> tuple[Column, Column]:
-    toks = tokens_exact_expr(text)
-    n = F.size(toks)
-    n_stop = F.size(F.filter(toks, lambda t: t.isin(*EN_STOPWORDS)))
-    return n, n_stop
-
-
 def quality_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Per-document quality signals: token counts, stopword ratio, mean word
     length, alpha ratio, and a composite [0,1] quality score (heuristic

@@ -12,6 +12,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# largest k an orderBy(...).limit(k) plans as an in-memory top-k buffer
+TOPK_SORT_FALLBACK = 1_000_000
+
 
 def get_spark(
     app_name: str = "connapse-spark",
@@ -38,6 +41,11 @@ def get_spark(
         # Small dimension tables (region/nation/centroids/query vectors)
         # should always broadcast.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # orderBy(...).limit(k) plans TakeOrderedAndProject, which sizes a
+        # k-slot buffer per task; the default threshold (2^31-16) lets a
+        # "no limit" k such as 10**9 allocate gigabytes. Above this k the
+        # plan is a full sort + limit instead; small top-k keep the buffer.
+        .config("spark.sql.execution.topKSortFallbackThreshold", str(TOPK_SORT_FALLBACK))
         # local[N] runs driver+executors in ONE JVM. Keep the heap UNDER
         # 32g: beyond that the JVM drops compressed oops and every pointer
         # doubles — measured 10× slowdown (7s → 91s) on the string-array-

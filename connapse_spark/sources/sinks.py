@@ -4,11 +4,9 @@ writer here chooses partition/sort keys so the matching read prunes.
 
 | table          | partitioned by          | sorted within files by | pruned by                  |
 |----------------|-------------------------|------------------------|----------------------------|
-| documents      | container_id            | path                   | container filter (Q2/Q3)   |
 | chunks         | container_id            | document_id, chunk_idx | container + doc filters    |
 | chunk_vectors  | model_id                | content_hash           | model filter (Q2 forces it)|
 | lsh_index      | model_id, bucket        | id                     | probe's bucket equality    |
-| ivf_index      | model_id, list_id       | id                     | probe's nprobe lists       |
 | postings       | term_bucket (hash-mod)  | term                   | query-term bucket lookup   |
 
 The content-hash sort on chunk_vectors co-locates the E2 cache anti-join;
@@ -23,16 +21,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 POSTINGS_BUCKETS = 64
-
-
-def write_documents(docs: DataFrame, path: str, mode: str = "overwrite") -> None:
-    (
-        docs.repartition("container_id")
-        .sortWithinPartitions("path")
-        .write.mode(mode)
-        .partitionBy("container_id")
-        .parquet(path)
-    )
 
 
 def write_chunks(chunks: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -68,17 +56,6 @@ def write_lsh_index(index: DataFrame, path: str, model_id: str = "hash-64", mode
         .sortWithinPartitions("model_id", "bucket", "id")
         .write.mode(mode)
         .partitionBy("model_id", "bucket")
-        .parquet(path)
-    )
-
-
-def write_ivf_index(index: DataFrame, path: str, model_id: str = "hash-64", mode: str = "overwrite") -> None:
-    (
-        index.withColumn("model_id", F.lit(model_id))
-        .repartition("list_id")
-        .sortWithinPartitions("model_id", "list_id", "id")
-        .write.mode(mode)
-        .partitionBy("model_id", "list_id")
         .parquet(path)
     )
 

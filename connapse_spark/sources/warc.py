@@ -848,7 +848,8 @@ def cdx_append(
     footer stats and :func:`cdx_lookup`'s manifest-level skipping opens
     O(1) files PER COMMITTED DROP for a key — the LSM/zipnum level
     shape. Fold levels back to one file set with :func:`cdx_compact`
-    when drops accumulate (the tf_compact role).
+    when drops accumulate (the role compact_serving plays for keyword
+    pending deltas).
 
     Idempotent under crash-replay: archive files are immutable, so
     ``filename`` is the ingest identity — already-indexed archives drop

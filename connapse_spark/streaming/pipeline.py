@@ -390,81 +390,6 @@ def streaming_view_purchase_attribution(
     )
 
 
-def streaming_index_maintenance(
-    spark: SparkSession,
-    watch_dir: str,
-    table_dir: str,
-    centroids: DataFrame,
-    checkpoint_dir: str,
-    retain_last: int | None = None,
-    vacuum_every: int = 8,
-    vacuum_min_age_seconds: float = 0.0,
-) -> None:
-    """M6 as a STREAMING job — the production shape of continuous vector
-    index maintenance: new embedding batches landing under ``watch_dir``
-    (parquet: vec_id, embedding) are assigned to the EXISTING centroids
-    (plans/ivf.ivf_index_upsert — no refit, pgvector INSERT routing) and
-    the merged index is COMMITTED through the snapshot layer, partitioned
-    by list_id. Every micro-batch publishes a new atomically-visible
-    version; readers on a pinned version keep a consistent index while
-    maintenance runs, and a crashed batch leaves the previous version
-    intact (the foreachBatch + transactional-sink pattern the Structured
-    Streaming guide prescribes — the snapshot manifest IS the
-    transaction). The rebuild-on-drift decision stays with ivf_drift
-    over the committed snapshot. ``retain_last``/``vacuum_every``/
-    ``vacuum_min_age_seconds`` bound version growth exactly as in
-    :func:`streaming_keyword_maintenance` (this job is the table's only
-    writer, so the 0-second in-flight guard default is safe)."""
-    from connapse_spark.plans.ivf import ivf_index_upsert
-    from connapse_spark.sources import snapshots
-
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .parquet(watch_dir)
-    )
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        # one surviving row per vec_id within the batch — without the cut,
-        # duplicate ids would BOTH insert (ivf_index_upsert anti-joins the
-        # current index by id, not the batch against itself); array<double>
-        # is orderable, so desc(embedding) is a deterministic tie-break
-        from pyspark.sql.window import Window
-
-        wv = Window.partitionBy("vec_id").orderBy(F.desc("embedding"))
-        batch_df = (
-            batch_df.withColumn("_rn", F.row_number().over(wv))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        if snapshots.latest_version(table_dir) is None:
-            cur = batch_df.sparkSession.createDataFrame(
-                [],
-                "id long, list_id bigint, vec array<double>, norm double",
-            )
-        else:
-            cur = snapshots.read_snapshot(batch_df.sparkSession, table_dir).select(
-                "id", F.col("list_id").cast("bigint").alias("list_id"), "vec", "norm"
-            )
-        merged = ivf_index_upsert(cur, centroids, batch_df).select(
-            "id", F.col("list_id").cast("bigint").alias("list_id"), "vec", "norm"
-        )
-        snapshots.commit_snapshot(merged, table_dir, partition_by=["list_id"])
-        if retain_last is not None and (batch_id + 1) % max(vacuum_every, 1) == 0:
-            snapshots.vacuum_snapshot(
-                table_dir,
-                keep_last=retain_last,
-                min_age_seconds=vacuum_min_age_seconds,
-            )
-
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def _lww_latest_doc_event(batch_df: DataFrame) -> DataFrame:
     """Reduce a micro-batch to ONE surviving event per doc_id before it
     touches the index — the same Debezium-shaped cut
@@ -487,276 +412,6 @@ def _lww_latest_doc_event(batch_df: DataFrame) -> DataFrame:
     )
 
 
-def streaming_keyword_maintenance(
-    spark: SparkSession,
-    watch_dir: str,
-    table_dir: str,
-    checkpoint_dir: str,
-    retain_last: int | None = None,
-    vacuum_every: int = 8,
-    vacuum_min_age_seconds: float = 0.0,
-    positions_dir: str | None = None,
-    stemmer: str = "suffix",
-) -> None:
-    """Q3/T3 as a STREAMING job — continuous keyword-index maintenance,
-    the tf-postings twin of :func:`streaming_index_maintenance`: document
-    batches landing under ``watch_dir`` (parquet: doc_id, text, op — op
-    'D' deletes, anything else upserts; optional seq long orders events
-    within a batch, and the batch is first cut to one surviving event per
-    doc via :func:`_lww_latest_doc_event`) are tokenized BATCH-ONLY and
-    folded into the committed (kind, term, id, tf) snapshot via
-    ``keyword_index.upsert_tf_postings``, one atomically-visible version
-    per micro-batch, partitioned by kind (exact/stemmed — the two tables
-    ``keyword_search_many_indexed`` and the fast hybrid tier serve from,
-    recovered with a kind filter that prunes at the partition level).
-    A crashed batch leaves the prior version intact; pinned readers keep
-    a consistent index while maintenance runs. The corpus is never
-    re-tokenized — per-batch cost is the batch's own (term, id)
-    aggregation plus one anti-join against the postings table.
-
-    The snapshot also carries the doclen partition (kind='doclen',
-    term='', tf=dl — ``keyword_index.read_doclen``), maintained by the
-    same anti-join twin in the same atomic commit, so
-    ``keyword_search_bm25_indexed`` always serves tf rows and lengths
-    from one corpus version. Doclen accumulates from batch 0; pointing
-    this stream at a PRE-doclen legacy table leaves that partition
-    covering only post-migration docs — re-bootstrap via
-    ``ingest_serving`` (or replay the corpus) to backfill.
-
-    ``retain_last`` bounds version growth: every ``vacuum_every``-th batch
-    runs ``snapshots.vacuum_snapshot(keep_last=retain_last)`` — without
-    it a long-running stream accretes one manifest + full table copy per
-    micro-batch forever. ``vacuum_min_age_seconds`` defaults to 0 because
-    THIS job is by design the table's only writer (the in-flight-commit
-    guard protects concurrent writers, which the maintenance stream
-    doesn't have); raise it if anything else ever commits to the same
-    table.
-
-    ``positions_dir`` (opt-in, r10) additionally maintains a
-    kind-partitioned (term, id, positions) snapshot for the
-    phrase/proximity serving tiers via ``upsert_positions_postings`` —
-    its OWN table and commit, roughly doubling per-batch write volume
-    (positions are the heaviest postings payload). Those tiers read
-    positions tables alone, so the table is self-consistent; a reader
-    mixing tf AND positions across the two tables (the batched-websearch
-    fast tier) should pin matching versions — or use the
-    ``ingest_serving`` layout, whose root manifest pins the cut.
-
-    ``stemmer`` (r11) tokenizes every micro-batch with the named analyzer
-    (see ``keyword_index.build_token_table``); it must match the analyzer
-    the maintained table was BUILT with — this stream writes raw tables
-    with no manifest to record it, so the caller owns the coherence the
-    ingest_serving layout gets from its manifest."""
-    from connapse_spark.operators.keyword_index import (
-        build_token_table,
-        doclen_partition_rows,
-        upsert_doclen,
-        upsert_positions_postings,
-        upsert_tf_postings,
-    )
-    from connapse_spark.sources import snapshots
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string, op string, seq long")
-        .parquet(watch_dir)
-    )
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        latest = _lww_latest_doc_event(batch_df)
-        is_del = F.coalesce(F.col("op"), F.lit("U")) == "D"
-        upserts = latest.filter(~is_del).select("doc_id", "text")
-        deleted = latest.filter(is_del).select(F.col("doc_id").alias("id"))
-        toks = build_token_table(upserts, stemmer=stemmer)
-        if snapshots.latest_version(table_dir) is None:
-            cur = s.createDataFrame([], "kind string, term string, id long, tf long")
-        else:
-            cur = snapshots.read_snapshot(s, table_dir)
-        parts = []
-        for kind, col in (("exact", "tokens_exact"), ("stemmed", "tokens_stemmed")):
-            cur_k = cur.filter(F.col("kind") == kind).select("term", "id", "tf")
-            parts.append(
-                upsert_tf_postings(cur_k, toks, deleted_ids=deleted, token_col=col)
-                .withColumn("kind", F.lit(kind))
-            )
-        # doclen rides the same snapshot (kind='doclen', term='', tf=dl):
-        # BM25 serving mixes tf rows and lengths, so they must move in ONE
-        # atomic version — keyword_index.read_doclen reopens this partition
-        cur_dl = cur.filter(F.col("kind") == "doclen").select(
-            "id", F.col("tf").alias("dl")
-        )
-        parts.append(
-            doclen_partition_rows(upsert_doclen(cur_dl, toks, deleted_ids=deleted))
-        )
-        merged = (
-            parts[0]
-            .unionByName(parts[1])
-            .select("kind", "term", "id", "tf")
-            .unionByName(parts[2])
-        )
-        snapshots.commit_snapshot(merged, table_dir, partition_by=["kind"])
-        if positions_dir is not None:
-            if snapshots.latest_version(positions_dir) is None:
-                cur_p = s.createDataFrame(
-                    [], "kind string, term string, id long, positions array<int>"
-                )
-            else:
-                cur_p = snapshots.read_snapshot(s, positions_dir)
-            pparts = []
-            for kind, col in (("exact", "tokens_exact"), ("stemmed", "tokens_stemmed")):
-                cur_k = cur_p.filter(F.col("kind") == kind).select(
-                    "term", "id", "positions"
-                )
-                pparts.append(
-                    upsert_positions_postings(
-                        cur_k, toks, deleted_ids=deleted, token_col=col
-                    ).withColumn("kind", F.lit(kind))
-                )
-            snapshots.commit_snapshot(
-                pparts[0].unionByName(pparts[1]).select(
-                    "kind", "term", "id", "positions"
-                ),
-                positions_dir,
-                partition_by=["kind"],
-            )
-        if retain_last is not None and (batch_id + 1) % max(vacuum_every, 1) == 0:
-            snapshots.vacuum_snapshot(
-                table_dir,
-                keep_last=retain_last,
-                min_age_seconds=vacuum_min_age_seconds,
-            )
-            if positions_dir is not None:
-                snapshots.vacuum_snapshot(
-                    positions_dir,
-                    keep_last=retain_last,
-                    min_age_seconds=vacuum_min_age_seconds,
-                )
-
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def streaming_keyword_maintenance_pending(
-    spark: SparkSession,
-    watch_dir: str,
-    base_dir: str,
-    delta_dir: str,
-    checkpoint_dir: str,
-    compact_every: int = 8,
-    positions_base_dir: str | None = None,
-    positions_delta_dir: str | None = None,
-    retain_last: int | None = None,
-    vacuum_min_age_seconds: float = 0.0,
-    stemmer: str = "suffix",
-) -> None:
-    """High-frequency variant of :func:`streaming_keyword_maintenance` —
-    the GIN-fastupdate regime. The overwrite variant pays O(index) per
-    micro-batch (a term-clustered index cannot benefit from keyed
-    copy-on-write: a doc touches postings in every term range); here each
-    batch APPENDS its postings + tombstones to a small delta table in
-    O(batch), and every ``compact_every``-th batch folds the delta into
-    the base (``keyword_index.tf_compact`` — amortized, crash-safe).
-    Like the overwrite variant, the batch is first cut to one surviving
-    event per doc (:func:`_lww_latest_doc_event`, optional seq column).
-    Readers resolve base ∪ delta via ``keyword_index.tf_resolve``; the
-    micro-batch id is the tombstone clock (replay-stable through the
-    checkpoint, so crashed-batch replays resolve away).
-
-    ``positions_base_dir``/``positions_delta_dir`` (opt-in, r10, both or
-    neither) extend the same fastupdate regime to the positions postings
-    — the phrase/proximity serving structure, and the layout where the
-    O(index)-per-batch overwrite hurts most. Appends and compactions
-    ride the same micro-batch clock; readers resolve via
-    ``keyword_index.positions_resolve``.
-
-    ``retain_last`` (r10) bounds version growth the way the overwrite
-    variant does: the delta accretes one snapshot version per append and
-    the base one per compaction, so a long-running stream without it
-    accumulates manifests forever. Vacuum runs on the compaction cadence
-    (right after the fold, when old versions stop being the serve path)
-    over every table this stream writes; raise
-    ``vacuum_min_age_seconds`` if anything else ever commits to them.
-
-    ``stemmer`` (r11): same contract as the overwrite variant — must
-    match the base table's build analyzer; the caller owns coherence for
-    raw-table streams."""
-    from connapse_spark.operators.keyword_index import (
-        build_token_table,
-        positions_compact,
-        positions_pending_append,
-        tf_compact,
-        tf_pending_append,
-    )
-
-    if (positions_base_dir is None) != (positions_delta_dir is None):
-        raise ValueError(
-            "positions_base_dir and positions_delta_dir come as a pair"
-        )
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string, op string, seq long")
-        .parquet(watch_dir)
-    )
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        latest = _lww_latest_doc_event(batch_df)
-        is_del = F.coalesce(F.col("op"), F.lit("U")) == "D"
-        upserts = latest.filter(~is_del).select("doc_id", "text")
-        deleted = latest.filter(is_del).select(F.col("doc_id").alias("id"))
-        # tokenize ONCE per micro-batch: with the positions pair enabled,
-        # two independent appends would each re-run the LWW cut + the
-        # tokenizer — the dominant per-batch CPU of an O(batch) append
-        toks = build_token_table(upserts, stemmer=stemmer)
-        if positions_delta_dir is not None:
-            toks = toks.persist()
-        try:
-            tf_pending_append(
-                upserts, delta_dir, deleted_ids=deleted, batch=batch_id, tokens=toks
-            )
-            if positions_delta_dir is not None:
-                positions_pending_append(
-                    upserts,
-                    positions_delta_dir,
-                    deleted_ids=deleted,
-                    batch=batch_id,
-                    tokens=toks,
-                )
-        finally:
-            if positions_delta_dir is not None:
-                toks.unpersist()
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            tf_compact(batch_df.sparkSession, base_dir, delta_dir)
-            if positions_delta_dir is not None:
-                positions_compact(
-                    batch_df.sparkSession, positions_base_dir, positions_delta_dir
-                )
-            if retain_last is not None:
-                from connapse_spark.sources import snapshots
-
-                dirs = [base_dir, delta_dir]
-                if positions_delta_dir is not None:
-                    dirs += [positions_base_dir, positions_delta_dir]
-                for d in dirs:
-                    snapshots.vacuum_snapshot(
-                        d,
-                        keep_last=retain_last,
-                        min_age_seconds=vacuum_min_age_seconds,
-                    )
-
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def streaming_serving_maintenance(
     spark: SparkSession,
     watch_dir: str,
@@ -776,10 +431,8 @@ def streaming_serving_maintenance(
     fold into the committed layout via ``ingest_serving_incremental``
     one micro-batch at a time, each batch ending with a ROOT SERVING
     MANIFEST publish. Readers through ``load_serving`` see a sequence
-    of complete cuts, never a torn mix — the raw-table maintenance
-    streams above keep single tables fresh; THIS one keeps chunks,
-    vectors, every keyword structure, and the IVF bundle moving as one
-    transactional unit (the reference's watcher + Postgres transaction
+    of complete cuts, never a torn mix: chunks, vectors, every keyword
+    structure, and the IVF bundle move as one transactional unit (the reference's watcher + Postgres transaction
     loop, ConnectorWatcherService.cs:42-44 + IngestionPipeline.cs).
 
     Exactly-once: the checkpoint replays a crashed micro-batch, and the
@@ -788,8 +441,8 @@ def streaming_serving_maintenance(
     never latest table versions). ``tf_mode="pending"`` gives
     high-frequency drops the O(batch) fastupdate regime;
     ``compact_every`` then folds via ``ingest.compact_serving`` (the
-    pinned-version fold + repinned republish — NEVER raw tf_compact)
-    every Nth batch. ``vacuum_every`` runs pin-aware
+    pinned-version fold + repinned republish) every Nth batch; the
+    default overwrite mode folds every batch. ``vacuum_every`` runs pin-aware
     ``ingest.vacuum_serving(keep_last_cuts=…)`` on its own cadence so a
     long-running stream does not accrete one full layout copy per batch.
     The layout's analyzer is inherited from its manifest per the
@@ -851,8 +504,8 @@ def streaming_table_upsert(
     ``watch_dir`` (parquet) upsert into the snapshot table through the
     snapshot layer's copy-on-write core, so a micro-batch touching 0.1%
     of keys rewrites ~0.1% of the table's files instead of the whole
-    table (contrast streaming_index_maintenance, which re-commits the
-    merged index because centroid assignment is global). Within a batch,
+    table (contrast the serving layout's IVF index, which re-commits
+    whole because centroid assignment is global). Within a batch,
     last writer wins by ``order_col`` (the Debezium-shaped reduction:
     one surviving row per key per batch).
 
@@ -983,8 +636,7 @@ def streaming_frontier_maintenance(
     retain_last: int | None = None,
     vacuum_every: int = 8,
 ) -> None:
-    """The crawl LOOP as a streaming job (r8 — the ledger twin of
-    :func:`streaming_keyword_maintenance`): micro-batches of discovered
+    """The crawl LOOP as a streaming job (r8): micro-batches of discovered
     URLs landing under ``watch_dir`` (parquet: url string) are screened
     against the persisted crawl ledger on the CANONICAL url key
     (``links.frontier_delta``), and the fresh rows append to the ledger

@@ -920,7 +920,7 @@ def test_read_tf_postings_serves_committed_layout(spark, sf_dir, tmp_path):
 @pytest.mark.slow
 def test_ingest_serving_incremental_pending_mode(spark, sf_dir, tmp_path):
     """tf_mode='pending' appends the wave's postings + tombstones to the
-    pending delta in O(batch); tf_resolve(base, delta) must then serve the
+    pending delta in O(batch); resolve_pending(base, delta) must then serve the
     same postings the overwrite mode would have committed."""
     import os as _os
 
@@ -944,14 +944,14 @@ def test_ingest_serving_incremental_pending_mode(spark, sf_dir, tmp_path):
     out = ingest_serving_incremental(
         batch, base, deleted_doc_ids=[7], tf_mode="pending", rebuild_threshold=2.0
     )
-    resolved = ki.tf_resolve(
+    resolved = ki.resolve_pending(
         spark, _os.path.join(base, "tf_postings"), _os.path.join(base, "tf_pending")
     )
     live = docs.filter(~F.col("doc_id").isin(3, 7)).unionByName(batch)
     want = ingest_serving(live)
     # the resolved view carries the doclen partition too: the base commit
     # wrote it, the pending delta's tombstones + latest-batch doclen rows
-    # maintain it through tf_resolve with zero special-casing (r10)
+    # maintain it through resolve_pending with zero special-casing (r10)
     want_tf = _want_tf_all(want)
     cols = ["kind", "term", "id", "tf"]
     assert {tuple(r) for r in resolved.select(*cols).collect()} == {
@@ -1076,7 +1076,7 @@ def test_load_serving_restart_round_trip(spark, sf_dir, tmp_path):
 def test_mixed_mode_overwrite_folds_pending_delta(spark, sf_dir, tmp_path):
     """A pending wave followed by an OVERWRITE wave must not lose the
     pending wave's changes: the overwrite branch folds the cut's
-    outstanding tf/positions deltas (tf_resolve / positions_resolve at
+    outstanding tf/positions deltas (resolve_pending at
     the pinned versions) before upserting (r10 — previously it read the
     pinned base alone and the pending wave's postings silently vanished
     from the fresh commit). Final serving state must equal a from-scratch
@@ -1413,13 +1413,13 @@ def test_serving_manifest_hides_torn_waves(spark, sf_dir, tmp_path, monkeypatch)
     )
 
     # crash injection: the wave dies after the chunk/vector/token/posting
-    # commits, before the tf upsert — well before publish_serving
+    # commits, before the tf fold — well before publish_serving
     def boom(*a, **k):
         raise RuntimeError("injected crash")
 
     monkeypatch.setattr(
-        keyword_index, "upsert_tf_postings", boom, raising=True
-    )  # the incremental path resolves ki.upsert_tf_postings at call time
+        keyword_index, "fold_postings", boom, raising=True
+    )  # the incremental path resolves ki.fold_postings at call time
     import pytest as _pytest
 
     with _pytest.raises(RuntimeError, match="injected crash"):
@@ -1601,6 +1601,45 @@ def test_upsert_positions_postings_plan_and_df_deletions(spark):
         (r["term"], r["id"], tuple(r["positions"])) for r in df.collect()
     )
     assert canon(via_list) == canon(via_df)
+
+
+def test_fold_postings_latest_tomb_wins(spark):
+    """The tombstone-clock fold every maintenance path shares, over three
+    batches at once: base rows of any tombstoned id drop; a fresh row
+    survives only if no later batch tombstoned its id (an update then a
+    delete removes the doc, a delete then an update restores it, two
+    updates keep the later rows); duplicate tombs change nothing; with no
+    base the live fresh rows alone come back. String ids fold like bigint
+    ones."""
+    from connapse_spark.operators.keyword_index import fold_postings
+
+    base = spark.createDataFrame(
+        [("a", "d1", 1), ("b", "d1", 2), ("a", "d2", 1), ("c", "d3", 4), ("c", "d4", 1)],
+        "term string, id string, tf long",
+    )
+    fresh = spark.createDataFrame(
+        [
+            ("x", "d1", 1, 0),  # d1 updated at 0 ...
+            ("y", "d1", 5, 2),  # ... and again at 2: only these rows live
+            ("z", "d2", 3, 0),  # d2 updated at 0, deleted at 1
+            ("w", "d5", 2, 1),  # d5 inserted at 1 (d3 deleted at 0)
+            ("v", "d4", 7, 2),  # d4 deleted at 1, back at 2
+        ],
+        "term string, id string, tf long, batch long",
+    )
+    tombs = spark.createDataFrame(
+        [("d1", 0), ("d1", 2), ("d2", 0), ("d2", 1), ("d3", 0), ("d3", 0),
+         ("d5", 1), ("d4", 1), ("d4", 2)],
+        "id string, batch long",
+    )
+    got = sorted(tuple(r) for r in fold_postings(base, fresh, tombs).collect())
+    assert got == [("v", "d4", 7), ("w", "d5", 2), ("y", "d1", 5)]
+    alone = fold_postings(None, fresh, tombs)
+    assert alone.columns == ["term", "id", "tf"]
+    assert sorted(tuple(r) for r in alone.collect()) == got
+    # no tombs: the base passes through and every fresh row is live
+    none = tombs.filter(F.lit(False))
+    assert fold_postings(base, fresh.filter(F.lit(False)), none).count() == base.count()
 
 
 def test_upsert_doclen_rebuild_equivalent_and_driverless(spark, sf_dir):
@@ -1811,7 +1850,7 @@ def test_keyword_maintenance_interleaving_fuzz(spark, tmp_path):
         )
         toks_w = ki.build_token_table(want_docs, id_col="doc_id", text_col="text")
         if "tf_pending" in pinned:
-            cut_tf = ki.tf_resolve(
+            cut_tf = ki.resolve_pending(
                 spark,
                 _os.path.join(base, "tf_postings"),
                 _os.path.join(base, "tf_pending"),
@@ -1827,7 +1866,7 @@ def test_keyword_maintenance_interleaving_fuzz(spark, tmp_path):
         want_tf = {tuple(r) for r in tf_all_of(toks_w).collect()}
         assert got_tf == want_tf, f"seed {seed}: tf/doclen diverged"
         if "positions_pending" in pinned:
-            cut_pos = ki.positions_resolve(
+            cut_pos = ki.resolve_pending(
                 spark,
                 _os.path.join(base, "positions_postings"),
                 _os.path.join(base, "positions_pending"),
@@ -1887,3 +1926,92 @@ def test_keyword_maintenance_interleaving_fuzz(spark, tmp_path):
     with ThreadPoolExecutor(max_workers=16) as pool:
         done = list(pool.map(run_sequence, range(n)))
     assert len(done) == n
+
+
+@pytest.mark.parametrize("ids", ["bigint", "chunk"])
+def test_compact_bootstraps_positions_on_legacy_cut(spark, sf_dir, tmp_path, ids):
+    """A serving cut with no positions_postings pin and no table (a layout
+    that predates positions) takes one PENDING keyword wave, then
+    compact_serving: the published positions must equal
+    build_positions_all over the cut's live tokens — every doc, not just
+    the wave's. Bigint doc ids (a bootstrapped keyword layout) and string
+    chunk ids (an ingest_serving layout) both converge."""
+    import shutil
+
+    from connapse_spark.operators.ingest import (
+        compact_serving,
+        ingest_serving,
+        keyword_serving_wave,
+        publish_serving,
+    )
+    from connapse_spark.sources import snapshots as snaps
+
+    base = str(tmp_path / "serving")
+    docs = _docs(spark, sf_dir).filter(F.col("doc_id") < 6).select("doc_id", "text")
+    if ids == "bigint":
+        id_col, text_col = "doc_id", "text"
+        corpus = docs
+        toks = keyword_index.build_token_table(corpus)
+        tables = {
+            "tokens": snaps.commit_snapshot(toks, os.path.join(base, "tokens")),
+            "postings": snaps.commit_snapshot(
+                keyword_index.build_postings(toks, "tokens_exact")
+                .withColumn("kind", F.lit("exact"))
+                .unionByName(
+                    keyword_index.build_postings(toks, "tokens_stemmed").withColumn(
+                        "kind", F.lit("stemmed")
+                    )
+                )
+                .select("kind", "term", "ids", "df"),
+                os.path.join(base, "postings"),
+                partition_by=["kind"],
+            ),
+            "tf_postings": snaps.commit_snapshot(
+                keyword_index.build_tf_all(toks),
+                os.path.join(base, "tf_postings"),
+                partition_by=["kind"],
+            ),
+        }
+        publish_serving(base, tables, stemmer="suffix")
+    else:
+        id_col, text_col = "chunk_id", "content"
+        out = ingest_serving(docs, base_dir=base)
+        corpus = out["chunks"].select("chunk_id", "content")
+        out["vectors"].unpersist()
+        m = snaps.load_manifest(os.path.join(base, "_serving"))
+        tables = {k: v for k, v in m["tables"].items() if k != "positions_postings"}
+        shutil.rmtree(os.path.join(base, "positions_postings"))
+        publish_serving(
+            base, tables, **{k: v for k, v in m.items() if k not in ("tables", "version")}
+        )
+
+    first = corpus.orderBy(id_col).first()
+    batch = spark.createDataFrame(
+        [(first[id_col], "legacy cut pending words")], corpus.schema
+    )
+    pinned = snaps.load_manifest(os.path.join(base, "_serving"))["tables"]
+    wave = keyword_serving_wave(
+        spark, base, batch, batch.select(F.col(id_col).alias("id")), pinned,
+        tf_mode="pending", id_col=id_col, text_col=text_col,
+    )
+    publish_serving(base, {**pinned, **wave}, stemmer="suffix")
+    compact_serving(spark, base)
+
+    cut = snaps.load_manifest(os.path.join(base, "_serving"))["tables"]
+    assert "positions_pending" not in cut and "tf_pending" not in cut
+    live = snaps.read_snapshot(spark, os.path.join(base, "tokens"), version=cut["tokens"])
+    got = snaps.read_snapshot(
+        spark, os.path.join(base, "positions_postings"), version=cut["positions_postings"]
+    )
+
+    def canon(df):
+        return sorted(
+            (r["kind"], r["term"], r["id"], tuple(r["positions"]))
+            for r in df.select("kind", "term", "id", "positions").collect()
+        )
+
+    want = canon(keyword_index.build_positions_all(live))
+    assert canon(got) == want
+    assert {r[2] for r in want} == {r[id_col] for r in corpus.collect()}
+    if ids == "chunk":
+        out["chunks"].unpersist()

@@ -54,6 +54,26 @@ def test_knn_is_take_ordered_not_global_sort(spark, sf_dir):
     assert "Exchange rangepartitioning" not in plan  # no global sort shuffle
 
 
+def test_huge_limit_plans_sort_not_topk_buffer(spark, sf_dir):
+    """get_spark caps the k that orderBy(...).limit(k) plans as a
+    TakeOrderedAndProject buffer: a "no limit" k of 10**9 plans a sort +
+    limit and returns every matching row in order (a 10**9-slot buffer
+    would not fit the heap), while a small top-k keeps the buffer."""
+    from connapse_spark.session import TOPK_SORT_FALLBACK
+
+    assert int(spark.conf.get("spark.sql.execution.topKSortFallbackThreshold")) == (
+        TOPK_SORT_FALLBACK
+    )
+    emb = _emb(spark, sf_dir).filter(F.col("vec_id") % 3 == 0)
+    huge = emb.orderBy(F.desc("vec_id")).limit(10**9).select("vec_id")
+    assert "TakeOrderedAndProject" not in _plan(huge)
+    want = sorted((r["vec_id"] for r in emb.select("vec_id").collect()), reverse=True)
+    assert want and [r["vec_id"] for r in huge.collect()] == want
+    small = emb.orderBy(F.desc("vec_id")).limit(10).select("vec_id")
+    assert "TakeOrderedAndProject" in _plan(small)
+    assert [r["vec_id"] for r in small.collect()] == want[:10]
+
+
 def test_knn_plan_has_no_shuffle(spark, sf_dir):
     qv = embed_py("probe", 64)
     df = vector_knn(_emb(spark, sf_dir), qv, k=10, id_col="vec_id")

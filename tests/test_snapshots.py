@@ -803,168 +803,6 @@ def test_streaming_cdc_with_delete_ops(spark, tmp_path):
     assert "op" not in back.columns
 
 
-def test_streaming_index_maintenance_commits_versions(spark, sf_dir, tmp_path):
-    """Two activation waves of new embeddings -> two snapshot versions of
-    the list_id-partitioned index; the final version answers a pruned
-    ANN probe, and the first version is still readable (maintenance never
-    breaks pinned readers)."""
-    from connapse_spark.plans.ivf import ann_ivf_topk, build_ivf_index_seeded
-    from connapse_spark.streaming.pipeline import streaming_index_maintenance
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    _, centroids = build_ivf_index_seeded(emb, n_lists=4)
-    centroids = spark.createDataFrame(centroids.collect(), centroids.schema)
-
-    watch = str(tmp_path / "incoming")
-    table = str(tmp_path / "index_tbl")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(watch)
-
-    # waves land as flat files in the watched dir (the parquet streaming
-    # source lists the dir itself)
-    emb.filter(F.col("vec_id") < 100).coalesce(1).write.mode("append").parquet(watch)
-    streaming_index_maintenance(spark, watch, table, centroids, ckpt)
-    from connapse_spark.sources import snapshots as snaps
-
-    v1 = snaps.latest_version(table)
-    n1 = snaps.read_snapshot(spark, table).count()
-    assert n1 == 100
-
-    emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 160)).coalesce(
-        1
-    ).write.mode("append").parquet(watch)
-    streaming_index_maintenance(spark, watch, table, centroids, ckpt)
-    assert snaps.latest_version(table) > v1
-    index = snaps.read_snapshot(spark, table)
-    assert index.count() == 160
-    assert set(index.columns) >= {"id", "list_id", "vec", "norm"}
-
-    # pinned reader: version v1 still sees exactly the first wave
-    assert snaps.read_snapshot(spark, table, version=v1).count() == 100
-
-    # the committed snapshot serves a pruned probe
-    from connapse_spark.functions.embed import embed_py
-
-    hits = ann_ivf_topk(index, centroids, embed_py("probe text", 64), k=5, nprobe=2)
-    assert hits.count() == 5
-
-
-def test_streaming_keyword_maintenance_rebuild_equivalent(spark, sf_dir, tmp_path):
-    """Two activation waves of doc batches -> two versions of the
-    kind-partitioned tf-postings snapshot. After each wave the committed
-    index must equal a from-scratch rebuild over the live corpus (the
-    upsert_tf_postings contract, end to end through the stream), the
-    prior version stays readable, and the final snapshot SERVES a batched
-    keyword query identical to the scan tier."""
-    from connapse_spark.operators import keyword_index as ki
-    from connapse_spark.operators.search import keyword_search_many
-    from connapse_spark.sources import snapshots as snaps
-    from connapse_spark.streaming.pipeline import streaming_keyword_maintenance
-
-    docs = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .filter(F.col("doc_id") < 50)
-        .select("doc_id", "text")
-        .persist()
-    )
-    watch = str(tmp_path / "incoming")
-    table = str(tmp_path / "kw_tbl")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(watch)
-
-    def rebuild(live):
-        toks = ki.build_token_table(live)
-        return (
-            ki.build_tf_postings(toks, "tokens_exact").withColumn("kind", F.lit("exact"))
-            .unionByName(
-                ki.build_tf_postings(toks, "tokens_stemmed").withColumn(
-                    "kind", F.lit("stemmed")
-                )
-            )
-            .select("kind", "term", "id", "tf")
-            # the doclen partition maintains in the same commit (r10)
-            .unionByName(
-                ki.build_doclen_table(toks).select(
-                    F.lit("doclen").alias("kind"),
-                    F.lit("").alias("term"),
-                    "id",
-                    F.col("dl").cast("long").alias("tf"),
-                )
-            )
-        )
-
-    def snap_set(df):
-        return {(r["kind"], r["term"], r["id"], r["tf"]) for r in df.collect()}
-
-    posdir = str(tmp_path / "pos_tbl")
-    # wave 1: initial corpus
-    docs.withColumn("op", F.lit("U")).coalesce(1).write.mode("append").parquet(watch)
-    streaming_keyword_maintenance(spark, watch, table, ckpt, positions_dir=posdir)
-    v1 = snaps.latest_version(table)
-    got1 = snaps.read_snapshot(spark, table)
-    assert snap_set(got1) == snap_set(rebuild(docs))
-
-    # wave 2: update doc 3, delete doc 7
-    updated = docs.filter(F.col("doc_id") == 3).select(
-        "doc_id", F.lit("completely new words here").alias("text"), F.lit("U").alias("op")
-    )
-    deleted = spark.createDataFrame([(7, None, "D")], "doc_id long, text string, op string")
-    updated.unionByName(deleted).coalesce(1).write.mode("append").parquet(watch)
-    streaming_keyword_maintenance(spark, watch, table, ckpt, positions_dir=posdir)
-    assert snaps.latest_version(table) > v1
-
-    live = docs.filter(F.col("doc_id") != 7).filter(F.col("doc_id") != 3).unionByName(
-        updated.select("doc_id", "text")
-    )
-    got2 = snaps.read_snapshot(spark, table)
-    assert snap_set(got2) == snap_set(rebuild(live))
-    # pinned reader: v1 unchanged
-    assert snap_set(snaps.read_snapshot(spark, table, version=v1)) == snap_set(
-        rebuild(docs)
-    )
-
-    # the committed snapshot SERVES the batch tier, row-equal to the scan
-    tfe = got2.filter(F.col("kind") == "exact").select("term", "id", "tf")
-    tfs = got2.filter(F.col("kind") == "stemmed").select("term", "id", "tf")
-    queries = [(1, "table scan"), (2, "merge join")]
-    want = keyword_search_many(live, queries, k=5).collect()
-    served = ki.keyword_search_many_indexed(tfe, tfs, queries, k=5).collect()
-    assert [tuple(r) for r in served] == [tuple(r) for r in want]
-    # BM25 serves from the SAME committed snapshot (tf_stemmed + the
-    # doclen partition), bit-equal to the scan tier over the live corpus
-    from connapse_spark.operators.search import keyword_search_bm25
-
-    got_bm25 = ki.keyword_search_bm25_indexed(
-        got2.filter(F.col("kind") == "stemmed").select("term", "id", "tf"),
-        ki.read_doclen(spark, table),
-        "table scan",
-        k=5,
-    ).collect()
-    want_bm25 = keyword_search_bm25(live, "table scan", k=5).collect()
-    assert got_bm25 and [tuple(r) for r in got_bm25] == [
-        (r["doc_id"], r["score"]) for r in want_bm25
-    ]
-    # the opt-in positions table tracks the live corpus position for
-    # position (upsert_positions_postings through the stream, r10)
-    got_pos = snaps.read_snapshot(spark, posdir)
-    toks_live = ki.build_token_table(live)
-    want_pos = (
-        ki.build_positions_postings(toks_live, "tokens_exact")
-        .withColumn("kind", F.lit("exact"))
-        .unionByName(
-            ki.build_positions_postings(toks_live, "tokens_stemmed").withColumn(
-                "kind", F.lit("stemmed")
-            )
-        )
-    )
-    canon_pos = lambda df: sorted(  # noqa: E731
-        (r["kind"], r["term"], r["id"], tuple(r["positions"]))
-        for r in df.select("kind", "term", "id", "positions").collect()
-    )
-    assert canon_pos(got_pos) == canon_pos(want_pos)
-    docs.unpersist()
-
-
 def _tf_rebuild_all(ki, toks):
     """exact∪stemmed tf postings plus the doclen partition (kind='doclen',
     term='', tf=dl — r10): the full kind set a maintained tf table carries."""
@@ -1013,7 +851,7 @@ def test_tf_pending_list_resolve_and_compact(spark, sf_dir, tmp_path):
 
     # batch 0: initial corpus, base does not exist yet
     ki.tf_pending_append(docs, delta_dir, batch=0)
-    assert as_set(ki.tf_resolve(spark, base_dir, delta_dir)) == as_set(rebuild(docs))
+    assert as_set(ki.resolve_pending(spark, base_dir, delta_dir)) == as_set(rebuild(docs))
 
     # batch 1: update doc 3, delete doc 7
     upd = docs.filter(F.col("doc_id") == 3).select(
@@ -1022,25 +860,29 @@ def test_tf_pending_list_resolve_and_compact(spark, sf_dir, tmp_path):
     ki.tf_pending_append(upd, delta_dir, deleted_ids=[7], batch=1)
     live = docs.filter(~F.col("doc_id").isin(3, 7)).unionByName(upd)
     want = as_set(rebuild(live))
-    assert as_set(ki.tf_resolve(spark, base_dir, delta_dir)) == want
+    assert as_set(ki.resolve_pending(spark, base_dir, delta_dir)) == want
 
     # crash-replay of batch 1: identical rows append again, resolution dedups
     ki.tf_pending_append(upd, delta_dir, deleted_ids=[7], batch=1)
-    assert as_set(ki.tf_resolve(spark, base_dir, delta_dir)) == want
+    assert as_set(ki.resolve_pending(spark, base_dir, delta_dir)) == want
 
     # compaction crash window: base committed from the resolved view but
     # the delta NOT truncated — stale tombstones suppress exactly the base
     # rows the stale postings re-add
     snaps.commit_snapshot(
-        ki.tf_resolve(spark, base_dir, delta_dir), base_dir, partition_by=["kind"]
+        ki.resolve_pending(spark, base_dir, delta_dir), base_dir, partition_by=["kind"]
     )
-    assert as_set(ki.tf_resolve(spark, base_dir, delta_dir)) == want
+    assert as_set(ki.resolve_pending(spark, base_dir, delta_dir)) == want
 
-    # full compaction converges; base alone now carries the index
-    ki.tf_compact(spark, base_dir, delta_dir)
+    # full compaction converges; base alone now carries the index (the
+    # fold committed as the next base, then the delta truncated)
+    snaps.commit_snapshot(
+        ki.resolve_pending(spark, base_dir, delta_dir), base_dir, partition_by=["kind"]
+    )
+    ki.truncate_pending(spark, delta_dir)
     assert as_set(snaps.read_snapshot(spark, base_dir).select("kind", "term", "id", "tf")) == want
     assert snaps.read_snapshot(spark, delta_dir).count() == 0
-    assert as_set(ki.tf_resolve(spark, base_dir, delta_dir)) == want
+    assert as_set(ki.resolve_pending(spark, base_dir, delta_dir)) == want
 
     # post-compact batch: delete the updated doc again
     ki.tf_pending_append(
@@ -1048,7 +890,7 @@ def test_tf_pending_list_resolve_and_compact(spark, sf_dir, tmp_path):
         deleted_ids=[3], batch=2,
     )
     live2 = live.filter(F.col("doc_id") != 3)
-    assert as_set(ki.tf_resolve(spark, base_dir, delta_dir)) == as_set(rebuild(live2))
+    assert as_set(ki.resolve_pending(spark, base_dir, delta_dir)) == as_set(rebuild(live2))
     docs.unpersist()
 
 
@@ -1090,7 +932,7 @@ def test_positions_pending_list_resolve_and_compact(spark, sf_dir, tmp_path):
         )
 
     ki.positions_pending_append(docs, delta_dir, batch=0)
-    assert canon(ki.positions_resolve(spark, base_dir, delta_dir)) == canon(
+    assert canon(ki.resolve_pending(spark, base_dir, delta_dir)) == canon(
         rebuild(docs)
     )
 
@@ -1100,28 +942,31 @@ def test_positions_pending_list_resolve_and_compact(spark, sf_dir, tmp_path):
     ki.positions_pending_append(upd, delta_dir, deleted_ids=[7], batch=1)
     live = docs.filter(~F.col("doc_id").isin(3, 7)).unionByName(upd)
     want = canon(rebuild(live))
-    assert canon(ki.positions_resolve(spark, base_dir, delta_dir)) == want
+    assert canon(ki.resolve_pending(spark, base_dir, delta_dir)) == want
 
     # crash-replay of batch 1: byte-identical rows, resolution dedups
     ki.positions_pending_append(upd, delta_dir, deleted_ids=[7], batch=1)
-    assert canon(ki.positions_resolve(spark, base_dir, delta_dir)) == want
+    assert canon(ki.resolve_pending(spark, base_dir, delta_dir)) == want
 
     # compaction crash window: base committed, delta not truncated
     snaps.commit_snapshot(
-        ki.positions_resolve(spark, base_dir, delta_dir),
+        ki.resolve_pending(spark, base_dir, delta_dir),
         base_dir,
         partition_by=["kind"],
     )
-    assert canon(ki.positions_resolve(spark, base_dir, delta_dir)) == want
+    assert canon(ki.resolve_pending(spark, base_dir, delta_dir)) == want
 
-    ki.positions_compact(spark, base_dir, delta_dir)
+    snaps.commit_snapshot(
+        ki.resolve_pending(spark, base_dir, delta_dir), base_dir, partition_by=["kind"]
+    )
+    ki.truncate_pending(spark, delta_dir)
     assert canon(
         snaps.read_snapshot(spark, base_dir).select("kind", "term", "id", "positions")
     ) == want
     assert snaps.read_snapshot(spark, delta_dir).count() == 0
 
     # the resolved view SERVES the phrase tier identically to fresh tables
-    resolved = ki.positions_resolve(spark, base_dir, delta_dir)
+    resolved = ki.resolve_pending(spark, base_dir, delta_dir)
     pe = resolved.filter(F.col("kind") == "exact").select("term", "id", "positions")
     ps = resolved.filter(F.col("kind") == "stemmed").select("term", "id", "positions")
     toks_live = ki.build_token_table(live)
@@ -1132,212 +977,6 @@ def test_positions_pending_list_resolve_and_compact(spark, sf_dir, tmp_path):
     fresh = ki.keyword_search_many_phrase_indexed(fe, fs, pq, k=5).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in fresh]
     docs.unpersist()
-
-
-def test_streaming_keyword_maintenance_pending_compacts(spark, sf_dir, tmp_path):
-    """End-to-end pending-mode stream: batch 0 appends, batch 1 appends
-    then compacts (compact_every=2); the resolved index equals a rebuild
-    and the post-compaction delta is empty."""
-    from connapse_spark.operators import keyword_index as ki
-    from connapse_spark.sources import snapshots as snaps
-    from connapse_spark.streaming.pipeline import streaming_keyword_maintenance_pending
-
-    docs = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .filter(F.col("doc_id") < 30)
-        .select("doc_id", "text")
-        .persist()
-    )
-    watch = str(tmp_path / "incoming")
-    base = str(tmp_path / "base")
-    delta = str(tmp_path / "delta")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(watch)
-
-    pbase = str(tmp_path / "pbase")
-    pdelta = str(tmp_path / "pdelta")
-    docs.withColumn("op", F.lit("U")).coalesce(1).write.mode("append").parquet(watch)
-    streaming_keyword_maintenance_pending(
-        spark, watch, base, delta, ckpt, compact_every=2,
-        positions_base_dir=pbase, positions_delta_dir=pdelta,
-    )
-
-    upd = docs.filter(F.col("doc_id") == 2).select(
-        "doc_id", F.lit("replacement text").alias("text"), F.lit("U").alias("op")
-    )
-    dele = spark.createDataFrame([(5, None, "D")], "doc_id long, text string, op string")
-    upd.unionByName(dele).coalesce(1).write.mode("append").parquet(watch)
-    streaming_keyword_maintenance_pending(
-        spark, watch, base, delta, ckpt, compact_every=2,
-        positions_base_dir=pbase, positions_delta_dir=pdelta,
-    )
-
-    live = docs.filter(~F.col("doc_id").isin(2, 5)).unionByName(
-        upd.select("doc_id", "text")
-    )
-    toks = ki.build_token_table(live)
-    want = {
-        (r["kind"], r["term"], r["id"], r["tf"])
-        for r in _tf_rebuild_all(ki, toks).collect()
-    }
-    got = {
-        (r["kind"], r["term"], r["id"], r["tf"])
-        for r in ki.tf_resolve(spark, base, delta).collect()
-    }
-    assert got == want
-    # batch 1 triggered compaction: delta truncated, base carries the index
-    assert snaps.read_snapshot(spark, delta).count() == 0
-    assert snaps.read_snapshot(spark, base).count() == len(want)
-    # the opt-in positions pending pair rode the same clock (r10)
-    want_pos = sorted(
-        (r["kind"], r["term"], r["id"], tuple(r["positions"]))
-        for r in ki.build_positions_postings(toks, "tokens_exact")
-        .withColumn("kind", F.lit("exact"))
-        .unionByName(
-            ki.build_positions_postings(toks, "tokens_stemmed").withColumn(
-                "kind", F.lit("stemmed")
-            )
-        )
-        .collect()
-    )
-    got_pos = sorted(
-        (r["kind"], r["term"], r["id"], tuple(r["positions"]))
-        for r in ki.positions_resolve(spark, pbase, pdelta)
-        .select("kind", "term", "id", "positions")
-        .collect()
-    )
-    assert got_pos == want_pos
-    assert snaps.read_snapshot(spark, pdelta).count() == 0
-    docs.unpersist()
-
-
-def test_streaming_keyword_maintenance_intra_batch_lww(spark, sf_dir, tmp_path):
-    """One micro-batch carrying BOTH an update and a later delete for the
-    same doc, and two versions of another doc: the batch must first reduce
-    to one surviving event per doc (seq order), so the delete wins over the
-    earlier update and only the seq-latest text is indexed — without the
-    cut the dead doc resurrects and the two versions' tf counts sum."""
-    from connapse_spark.operators import keyword_index as ki
-    from connapse_spark.sources import snapshots as snaps
-    from connapse_spark.streaming.pipeline import streaming_keyword_maintenance
-
-    watch = str(tmp_path / "incoming")
-    table = str(tmp_path / "kw_tbl")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(watch)
-    batch = spark.createDataFrame(
-        [
-            (1, "alpha beta", "U", 10),   # doc 1 v1
-            (1, "gamma delta", "U", 20),  # doc 1 v2 — must be the ONLY one indexed
-            (2, "old words", "U", 10),    # doc 2 updated...
-            (2, None, "D", 20),           # ...then deleted: must NOT serve
-            (3, "keep me", "U", 10),
-        ],
-        "doc_id long, text string, op string, seq long",
-    )
-    batch.coalesce(1).write.mode("append").parquet(watch)
-    streaming_keyword_maintenance(spark, watch, table, ckpt)
-
-    got = snaps.read_snapshot(spark, table)
-    by_doc = {(r["kind"], r["term"], r["id"]): r["tf"] for r in got.collect()}
-    ids = {i for (_, _, i) in by_doc}
-    assert 2 not in ids  # delete won
-    assert 3 in ids
-    # doc 1 serves EXACTLY its seq-latest version — not a v1+v2 merge
-    live = spark.createDataFrame(
-        [(1, "gamma delta"), (3, "keep me")], "doc_id long, text string"
-    )
-    toks = ki.build_token_table(live)
-    want = {
-        (k, r["term"], r["id"]): r["tf"]
-        for k, c in (("exact", "tokens_exact"), ("stemmed", "tokens_stemmed"))
-        for r in ki.build_tf_postings(toks, c).collect()
-    }
-    # the doclen partition obeys the same LWW cut (r10)
-    want.update(
-        {("doclen", "", r["id"]): r["dl"] for r in ki.build_doclen_table(toks).collect()}
-    )
-    assert by_doc == want
-
-
-def test_streaming_pending_retention(spark, sf_dir, tmp_path):
-    """retain_last on the PENDING stream (r10): the delta accretes one
-    version per append and the base one per compact — with vacuum on the
-    compaction cadence only the newest versions stay readable while the
-    resolved index keeps serving the live corpus."""
-    import pytest as _pytest
-
-    from connapse_spark.operators import keyword_index as ki
-    from connapse_spark.sources import snapshots as snaps
-    from connapse_spark.streaming.pipeline import streaming_keyword_maintenance_pending
-
-    watch = str(tmp_path / "incoming")
-    base = str(tmp_path / "base")
-    delta = str(tmp_path / "delta")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(watch)
-    d1 = spark.createDataFrame(
-        [(1, "alpha beta", "U", None)], "doc_id long, text string, op string, seq long"
-    )
-    d1.coalesce(1).write.mode("append").parquet(watch)
-    streaming_keyword_maintenance_pending(
-        spark, watch, base, delta, ckpt, compact_every=1, retain_last=1
-    )
-    bv1 = snaps.latest_version(base)
-    d2 = spark.createDataFrame(
-        [(2, "gamma delta", "U", None)], "doc_id long, text string, op string, seq long"
-    )
-    d2.coalesce(1).write.mode("append").parquet(watch)
-    streaming_keyword_maintenance_pending(
-        spark, watch, base, delta, ckpt, compact_every=1, retain_last=1
-    )
-    assert snaps.latest_version(base) > bv1
-    ids = {
-        r["id"] for r in ki.tf_resolve(spark, base, delta).select("id").collect()
-    }
-    assert ids == {1, 2}  # live index intact through compact + vacuum
-    with _pytest.raises(Exception):
-        snaps.read_snapshot(spark, base, version=bv1).collect()
-
-
-def test_streaming_keyword_maintenance_retention(spark, sf_dir, tmp_path):
-    """retain_last bounds the stream's version growth: with vacuum every
-    batch and keep_last=1 only the newest version's manifest survives each
-    wave — the old version becomes unreadable (fails loudly) while the
-    live index keeps serving, closing the unbounded-manifest-growth gap a
-    per-micro-batch committer otherwise has."""
-    import pytest as _pytest
-
-    from connapse_spark.sources import snapshots as snaps
-    from connapse_spark.streaming.pipeline import streaming_keyword_maintenance
-
-    watch = str(tmp_path / "incoming")
-    table = str(tmp_path / "kw_tbl")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(watch)
-    d1 = spark.createDataFrame(
-        [(1, "alpha beta", "U", None)], "doc_id long, text string, op string, seq long"
-    )
-    d1.coalesce(1).write.mode("append").parquet(watch)
-    streaming_keyword_maintenance(
-        spark, watch, table, ckpt, retain_last=1, vacuum_every=1,
-        vacuum_min_age_seconds=0.0,
-    )
-    v1 = snaps.latest_version(table)
-    d2 = spark.createDataFrame(
-        [(2, "gamma delta", "U", None)], "doc_id long, text string, op string, seq long"
-    )
-    d2.coalesce(1).write.mode("append").parquet(watch)
-    streaming_keyword_maintenance(
-        spark, watch, table, ckpt, retain_last=1, vacuum_every=1,
-        vacuum_min_age_seconds=0.0,
-    )
-    v2 = snaps.latest_version(table)
-    assert v2 > v1
-    ids = {r["id"] for r in snaps.read_snapshot(spark, table).collect()}
-    assert ids == {1, 2}  # live index intact
-    with _pytest.raises(Exception):
-        snaps.read_snapshot(spark, table, version=v1).collect()
 
 
 # ---------------------------------------------------------------------------
@@ -1631,6 +1270,238 @@ def test_streaming_serving_maintenance_full_layout(spark, sf_dir, tmp_path):
     assert got_bm25 and [tuple(r) for r in got_bm25] == [tuple(r) for r in want_bm25]
     for h in (first, want):
         h["chunks"].unpersist(), h["vectors"].unpersist()
+    docs.unpersist()
+
+
+_DOC_EVENTS = "doc_id long, text string, op string, seq long"
+
+
+def _serving_stream(spark, sf_dir, tmp_path, n_docs, **stream_kwargs):
+    """A committed ingest_serving layout over the documents with
+    doc_id < ``n_docs``, and an ``activate(rows)`` that lands one event
+    file in the watched dir, runs streaming_serving_maintenance over it
+    (``stream_kwargs`` pass through) and returns the newly loaded cut."""
+    from connapse_spark.operators.ingest import ingest_serving, load_serving
+    from connapse_spark.streaming.pipeline import streaming_serving_maintenance
+
+    docs = (
+        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        .filter(F.col("doc_id") < n_docs)
+        .select("doc_id", "text")
+        .persist()
+    )
+    base = str(tmp_path / "serving")
+    watch = str(tmp_path / "incoming")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(watch)
+    first = ingest_serving(docs, base_dir=base)
+    first["chunks"].unpersist(), first["vectors"].unpersist()
+
+    def activate(rows):
+        spark.createDataFrame(rows, _DOC_EVENTS).coalesce(1).write.mode(
+            "append"
+        ).parquet(watch)
+        streaming_serving_maintenance(
+            spark, watch, base, ckpt, rebuild_threshold=2.0, **stream_kwargs
+        )
+        return load_serving(spark, base)
+
+    return docs, base, activate
+
+
+def _live_ingest(spark, docs, dropped, replaced):
+    """From-scratch ingest_serving (no layout) of ``docs`` minus the
+    ``dropped`` doc ids plus the (doc_id, text) ``replaced`` rows."""
+    from connapse_spark.operators.ingest import ingest_serving
+
+    live = docs.filter(~F.col("doc_id").isin(*dropped))
+    if replaced:
+        live = live.unionByName(
+            spark.createDataFrame(replaced, "doc_id long, text string")
+        )
+    return ingest_serving(live)
+
+
+def _assert_cut_serves_rebuild(spark, base, cut, want, phrases=False):
+    """The cut's tf pair equals the rebuild's, and BM25 over the cut's
+    committed doclen rows ranks exactly as BM25 over the rebuild; with
+    ``phrases`` the positions pair and phrase hits match too."""
+    from connapse_spark.operators import keyword_index as ki
+
+    def rows(df):
+        return {tuple(r) for r in df.collect()}
+
+    assert rows(cut["tf_postings"][0]) == rows(want["tf_postings"][0])
+    assert rows(cut["tf_postings"][1]) == rows(want["tf_postings"][1])
+    got_bm25 = ki.keyword_search_bm25_indexed(
+        cut["tf_postings"][1],
+        ki.read_doclen(
+            spark, os.path.join(base, "tf_postings"), cut["tables"]["tf_postings"]
+        ),
+        "table scan",
+        k=10,
+    ).collect()
+    want_bm25 = ki.keyword_search_bm25_indexed(
+        want["tf_postings"][1],
+        ki.build_doclen_table(
+            ki.build_token_table(want["chunks"], id_col="chunk_id", text_col="content")
+        ),
+        "table scan",
+        k=10,
+    ).collect()
+    assert got_bm25 and [tuple(r) for r in got_bm25] == [tuple(r) for r in want_bm25]
+    if not phrases:
+        return
+
+    def canon_pos(pair):
+        return sorted(
+            (k, r["term"], r["id"], tuple(r["positions"]))
+            for k, df in zip(("exact", "stemmed"), pair)
+            for r in df.collect()
+        )
+
+    assert canon_pos(cut["positions_postings"]) == canon_pos(want["positions_postings"])
+    pq = [(1, '"table scan"'), (2, '"merge join"')]
+    got_ph = ki.keyword_search_many_phrase_indexed(
+        *cut["positions_postings"], pq, k=5
+    ).collect()
+    want_ph = ki.keyword_search_many_phrase_indexed(
+        *want["positions_postings"], pq, k=5
+    ).collect()
+    assert got_ph and [tuple(r) for r in got_ph] == [tuple(r) for r in want_ph]
+
+
+def _unpersist(*handles):
+    for h in handles:
+        h["chunks"].unpersist(), h["vectors"].unpersist()
+
+
+def test_streaming_index_maintenance_commits_versions(spark, sf_dir, tmp_path):
+    """Two activations of the streaming front -> two new serving cuts,
+    each moving the list_id-partitioned IVF index with the documents:
+    the final cut's index holds exactly the rebuild's chunk ids (the
+    deleted doc's vectors gone, the updated docs' re-embedded), the
+    first cut stays readable at its own version (maintenance never
+    breaks pinned readers), and the committed index answers an ANN
+    probe over live chunks only."""
+    from connapse_spark.functions.embed import embed_py
+    from connapse_spark.operators.ingest import load_serving
+    from connapse_spark.plans.ivf import ann_ivf_topk
+
+    docs, base, activate = _serving_stream(spark, sf_dir, tmp_path, 8)
+    v0 = load_serving(spark, base)["serving_version"]
+    cut1 = activate([(3, "streamed wave table scan words", "U", None)])
+    ids1 = {r["id"] for r in cut1["vector_index"].index.select("id").collect()}
+    cut2 = activate([
+        (5, "second streamed wave merge join", "U", None),
+        (1, None, "D", None),
+    ])
+    assert v0 < cut1["serving_version"] < cut2["serving_version"]
+
+    index = cut2["vector_index"].index
+    assert set(index.columns) >= {"id", "list_id", "vec", "norm"}
+    want = _live_ingest(
+        spark, docs, (1, 3, 5),
+        [(3, "streamed wave table scan words"), (5, "second streamed wave merge join")],
+    )
+    live_ids = {r["chunk_id"] for r in want["chunks"].select("chunk_id").collect()}
+    assert {r["id"] for r in index.select("id").collect()} == live_ids
+    assert not [i for i in live_ids if i.startswith("1:")]
+
+    # pinned reader: the first cut still serves its own index rows
+    pinned = load_serving(spark, base, serving_version=cut1["serving_version"])
+    assert {r["id"] for r in pinned["vector_index"].index.select("id").collect()} == ids1
+    assert [i for i in ids1 if i.startswith("1:")]
+
+    vidx = cut2["vector_index"]
+    dims = len(index.first()["vec"])
+    hits = ann_ivf_topk(
+        index, vidx.centroids, embed_py("probe text", dims), k=5,
+        nprobe=vidx.centroids.count(),
+    ).collect()
+    assert len(hits) == min(5, len(live_ids))
+    assert {r["id"] for r in hits} <= live_ids
+    _unpersist(want)
+    docs.unpersist()
+
+
+def test_streaming_keyword_maintenance_rebuild_equivalent(spark, sf_dir, tmp_path):
+    """Two activations of the streaming front in its default overwrite
+    mode: after each, the published cut's keyword structures equal a
+    from-scratch ingest of the live corpus (tf, BM25 through the
+    committed doclen rows; after the second, positions and phrase hits
+    too), and the first cut stays readable at its version."""
+    from connapse_spark.operators.ingest import load_serving
+
+    docs, base, activate = _serving_stream(spark, sf_dir, tmp_path, 10)
+    upd3 = (3, "completely new words here table scan")
+    cut1 = activate([(*upd3, "U", None), (7, None, "D", None)])
+    want1 = _live_ingest(spark, docs, (3, 7), [upd3])
+    _assert_cut_serves_rebuild(spark, base, cut1, want1)
+
+    upd5 = (5, "second streamed wave merge join")
+    cut2 = activate([(*upd5, "U", None)])
+    assert cut2["serving_version"] > cut1["serving_version"]
+    want2 = _live_ingest(spark, docs, (3, 5, 7), [upd3, upd5])
+    _assert_cut_serves_rebuild(spark, base, cut2, want2, phrases=True)
+
+    # pinned reader: the first cut is unchanged by the second wave
+    pinned = load_serving(spark, base, serving_version=cut1["serving_version"])
+    _assert_cut_serves_rebuild(spark, base, pinned, want1)
+    _unpersist(want1, want2)
+    docs.unpersist()
+
+
+def test_streaming_keyword_maintenance_intra_batch_lww(spark, sf_dir, tmp_path):
+    """One micro-batch carrying BOTH an update and a later delete of doc
+    2, and two versions of doc 4: the batch must first reduce to one
+    surviving event per doc (seq order), so the delete wins over the
+    earlier update and only doc 4's seq-latest text is indexed —
+    without the cut the dead doc resurrects and the two versions' tf
+    counts sum. The doclen rows obey the same cut (BM25 matches)."""
+    docs, base, activate = _serving_stream(spark, sf_dir, tmp_path, 6)
+    cut = activate([
+        (2, "updated then deleted words", "U", 10),
+        (2, None, "D", 20),
+        (4, "first version merge join", "U", 10),
+        (4, "second version table scan merge join", "U", 20),
+    ])
+    want = _live_ingest(spark, docs, (2, 4), [(4, "second version table scan merge join")])
+    _assert_cut_serves_rebuild(spark, base, cut, want, phrases=True)
+    tf_ids = {r["id"] for r in cut["tf_postings"][0].select("id").collect()}
+    assert not [i for i in tf_ids if i.startswith("2:")]  # the delete won
+    assert [i for i in tf_ids if i.startswith("4:")]
+    _unpersist(want)
+    docs.unpersist()
+
+
+def test_streaming_keyword_maintenance_retention(spark, sf_dir, tmp_path):
+    """vacuum_every=1 with keep_last_cuts=1 bounds the stream's version
+    growth: after each activation only the newest cut survives — the
+    dropped cut's manifest and its superseded table versions fail
+    loudly when read — while the live cut keeps serving the corpus."""
+    from connapse_spark.operators.ingest import load_serving
+
+    docs, base, activate = _serving_stream(
+        spark, sf_dir, tmp_path, 6, vacuum_every=1, keep_last_cuts=1
+    )
+    cut1 = activate([(1, "streamed update merge join", "U", None)])
+    cut2 = activate([(5, "streamed update table scan words", "U", None)])
+    assert cut2["serving_version"] > cut1["serving_version"]
+    with pytest.raises(Exception):
+        load_serving(spark, base, serving_version=cut1["serving_version"])
+    with pytest.raises(Exception):
+        snapshots.read_snapshot(
+            spark,
+            os.path.join(base, "tf_postings"),
+            version=cut1["tables"]["tf_postings"],
+        ).collect()
+    want = _live_ingest(
+        spark, docs, (1, 5),
+        [(1, "streamed update merge join"), (5, "streamed update table scan words")],
+    )
+    _assert_cut_serves_rebuild(spark, base, cut2, want)
+    _unpersist(want)
     docs.unpersist()
 
 

@@ -388,3 +388,40 @@ def test_streaming_frontier_maintenance_two_activations(spark, tmpdir):
     v = snapshots.latest_version(ledger)
     sp.streaming_frontier_maintenance(spark, src, ledger, ckpt)
     assert snapshots.latest_version(ledger) == v
+
+
+def test_lww_latest_doc_event_cut(spark):
+    """The streaming front's per-batch cut to one event per doc: the
+    seq-latest event wins, a later delete beats an earlier update (and a
+    later update an earlier delete), NULL seqs lose to any seq, and a
+    seq tie breaks the same way whatever order a replay delivers the
+    rows in."""
+    rows = [
+        (1, "alpha beta", "U", 10),
+        (1, "gamma delta", "U", 20),  # doc 1: the seq-latest text survives
+        (2, "old words", "U", 10),
+        (2, None, "D", 20),  # doc 2: the later delete wins
+        (3, None, "D", 5),
+        (3, "back again", "U", 6),  # doc 3: the later update wins
+        (4, "with seq", "U", 1),
+        (4, "no seq", "U", None),  # doc 4: a NULL seq sorts last
+        (5, "tie one", "U", 7),
+        (5, None, "D", 7),
+        (5, "tie two", "U", 7),  # doc 5: a seq tie
+    ]
+    schema = "doc_id long, text string, op string, seq long"
+
+    def cut(rs):
+        out = sp._lww_latest_doc_event(spark.createDataFrame(rs, schema))
+        return {r["doc_id"]: (r["op"], r["text"]) for r in out.collect()}
+
+    got = cut(rows)
+    assert got[1] == ("U", "gamma delta")
+    assert got[2] == ("D", None)
+    assert got[3] == ("U", "back again")
+    assert got[4] == ("U", "with seq")
+    assert len(got) == 5
+    # replays converge: reversed and shuffled deliveries cut identically
+    assert cut(rows[::-1]) == got
+    assert cut(rows[3:] + rows[:3]) == got
+    assert got[5][0] == "U"  # on a true tie an update outranks a delete
