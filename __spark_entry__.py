@@ -1118,7 +1118,7 @@ def q_keyword_snippets(spark, sf_dir):
 
 def q_keyword_snippets_indexed(spark, sf_dir):
     """Snippets with the RANKING served from the write-time index (r10 —
-    keyword_index.keyword_search_snippets_indexed): posting-list
+    keyword_index.keyword_search_snippets_indexed): tf-row
     candidates rank (row-identical to the scan tier), then only the ≤k
     winners' text is fetched for the excerpt window. Shares the scan
     tier's oracle SQL."""
@@ -1974,38 +1974,38 @@ def q_ann_ivfpq(spark, sf_dir):
 def q_keyword_indexed(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     tokens = keyword_index.build_token_table(docs).cache()
-    pe = keyword_index.build_postings(tokens, "tokens_exact")
-    ps = keyword_index.build_postings(tokens, "tokens_stemmed")
+    tfe = keyword_index.build_tf_postings(tokens, "tokens_exact")
+    tfs = keyword_index.build_tf_postings(tokens, "tokens_stemmed")
     return _scoped_cache_result(
         spark,
         tokens,
-        keyword_index.keyword_search_indexed(tokens, pe, ps, SEARCH_QUERY, k=20),
+        keyword_index.keyword_search_indexed(tokens, tfe, tfs, SEARCH_QUERY, k=20),
     )
 
 
 def q_keyword_indexed_phrase(spark, sf_dir):
     """Websearch (phrase + negation + OR) SERVED from the write-time
     index (r8 — VERDICT r7 ask #8: the served tier lost phrase
-    semantics): posting lists screen candidates per OR-group, the stored
+    semantics): the tf rows screen candidates per OR-group, the stored
     token arrays verify adjacency — zero corpus re-tokenize. The oracle
     is the SCAN tier's own websearch SQL: the index is a physical
     structure, so rows must be identical."""
     docs = _t(spark, sf_dir, "documents")
     tokens = keyword_index.build_token_table(docs).cache()
-    pe = keyword_index.build_postings(tokens, "tokens_exact")
-    ps = keyword_index.build_postings(tokens, "tokens_stemmed")
+    tfe = keyword_index.build_tf_postings(tokens, "tokens_exact")
+    tfs = keyword_index.build_tf_postings(tokens, "tokens_stemmed")
     return _scoped_cache_result(
         spark,
         tokens,
         keyword_index.keyword_search_websearch_indexed(
-            tokens, pe, ps, WEBSEARCH_QUERY, k=20
+            tokens, tfe, tfs, WEBSEARCH_QUERY, k=20
         ),
     )
 
 
 def q_hybrid_indexed(spark, sf_dir):
-    """hybrid_search SERVED from the posting-list keyword index (VERDICT r5
-    ask #2): keyword candidates come from the write-time postings + token
+    """hybrid_search SERVED from the write-time keyword index (VERDICT r5
+    ask #2): keyword candidates come from the write-time tf rows + token
     table instead of a full-scan re-tokenize. The oracle is IDENTICAL to
     hybrid_cc's — the index is a physical structure, so the rows must be
     row-equal to the full-scan hybrid."""
@@ -2013,7 +2013,7 @@ def q_hybrid_indexed(spark, sf_dir):
     # persist via the bundle (not a bare .cache() on one member) so a
     # caller holding the index can pair it with idx.unpersist(); the
     # driver's one-shot evaluation still benefits — tokens feeds three
-    # subtrees (two postings builds + the scorer) in this single plan
+    # subtrees (two tf builds + the scorer) in this single plan
     idx = keyword_index.build_keyword_index(docs).persist()
     out = hybrid_search(
         docs,
@@ -2032,7 +2032,7 @@ def q_hybrid_indexed(spark, sf_dir):
 
 def q_hybrid_ann(spark, sf_dir):
     """Hybrid search with BOTH branches served from write-time index
-    structures: keyword from the posting-list index, semantic from the
+    structures: keyword from the tf-row index, semantic from the
     seeded IVF vector index at FULL probe (nprobe = n_lists) — the regime
     proving the indexes are physical structures, not semantic changes. The
     oracle is IDENTICAL to hybrid_cc's: full-probe candidates are the whole
@@ -2061,7 +2061,7 @@ def q_hybrid_ann(spark, sf_dir):
 
 
 def _hybrid_both_indexed(spark, sf_dir, fusion: str):
-    """Both branches served (posting-list keyword + full-probe seeded IVF)
+    """Both branches served (tf-row keyword + full-probe seeded IVF)
     under the given fusion method — the composition pin: fusion and index
     serving are ORTHOGONAL stages of hybrid_search, so each fused indexed
     tier must be row-equal to its scan twin and shares its oracle."""
@@ -2090,7 +2090,7 @@ def _hybrid_both_indexed(spark, sf_dir, fusion: str):
 def q_hybrid_dbsf_indexed(spark, sf_dir):
     """DBSF fusion over fully index-served branches (r10): distribution-
     based score fusion's mean/std normalization runs on candidate sets
-    that came from the postings + IVF structures — row-equal to the
+    that came from the tf rows + IVF structures — row-equal to the
     scan-tier hybrid_dbsf, whose oracle it shares."""
     return _hybrid_both_indexed(spark, sf_dir, "Dbsf")
 
@@ -4719,18 +4719,6 @@ def q_serving_compact(spark, sf_dir):
     toks = ki.build_token_table(docs)
     tables = {
         "tokens": snaps.commit_snapshot(toks, os.path.join(base, "tokens")),
-        "postings": snaps.commit_snapshot(
-            ki.build_postings(toks, "tokens_exact")
-            .withColumn("kind", F.lit("exact"))
-            .unionByName(
-                ki.build_postings(toks, "tokens_stemmed").withColumn(
-                    "kind", F.lit("stemmed")
-                )
-            )
-            .select("kind", "term", "ids", "df"),
-            os.path.join(base, "postings"),
-            partition_by=["kind"],
-        ),
         "tf_postings": snaps.commit_snapshot(
             ki.build_tf_postings(toks, "tokens_exact")
             .withColumn("kind", F.lit("exact"))

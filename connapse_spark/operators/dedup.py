@@ -173,8 +173,9 @@ def ngram_jaccard_pairs(
     # of the candidate join, both verification sides); without a
     # materialization barrier each consumer re-runs tokenize+shingle over
     # the corpus. This is an index-build operator — persisting the shingle
-    # table IS the index (released by the ContextCleaner when the plan is
-    # garbage-collected).
+    # table IS the index. The CacheManager holds the entry until
+    # unpersist() or clearCache(); it is not released when the plan is
+    # garbage-collected.
     sh = sh.persist()
     # the n_sh>0 screen sits ABOVE the persist (r11): below it, predicate
     # pushdown substitutes the alias and the cache build runs
@@ -221,9 +222,10 @@ def ngram_jaccard_pairs(
         # the executed plan built the document-frequency aggregate, its
         # join and the rarity-rank window TWICE (verified in
         # plans/r12/ngram_jaccard_prefix_before.txt, operators 20-24 vs
-        # 42-46). Persisting the prefix table computes that pipeline once;
-        # like `sh` above it is an index-build structure released by the
-        # ContextCleaner when the plan is garbage-collected.
+        # 42-46). Persisting the prefix table computes that pipeline once.
+        # Like `sh` above, the cache entry stays in the CacheManager until
+        # unpersist() or clearCache(): a persisted DataFrame is not
+        # released when its plan is garbage-collected.
         prefix = prefix.persist()
         # Candidate pruning beyond the shared-prefix-shingle condition, both
         # safe (a qualifying pair passes them on EVERY shared occurrence, so
@@ -817,8 +819,9 @@ def neardup_components(
     takes the min of its own and its neighbors' labels; converged when no
     label changes. One equi-join shuffle per round, rounds bounded by the
     cluster diameter (near-dup clusters are shallow — a handful of rounds
-    in practice, ``max_iter`` caps pathology). ``localCheckpoint`` truncates
-    the growing lineage each round; the per-round ``count()`` is the
+    in practice, ``max_iter`` caps pathology). ``links._step_checkpoint``
+    (reliable when the session has a checkpoint dir, local otherwise)
+    truncates the growing lineage each round; the per-round ``count()`` is the
     convergence test — an iterative algorithm needs one action per step
     (this is label propagation without a graph library). Deterministic, so
     the DuckDB oracle (recursive reachability + min) matches exactly.
@@ -834,6 +837,8 @@ def neardup_components(
 
     Output: (id, component) for every vertex that appears in a pair.
     """
+    from connapse_spark.operators.links import _step_checkpoint
+
     sel = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     if driver_edge_limit > 0:
         # probe WITHOUT persist: caching forces full block materialization
@@ -856,9 +861,9 @@ def neardup_components(
         .distinct()
         .persist()
     )
-    labels = (
+    labels = _step_checkpoint(
         edges.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
-    ).localCheckpoint(eager=True)
+    )
     for _ in range(max_iter):
         prev_labels = labels
         neighbor_min = (
@@ -880,15 +885,13 @@ def neardup_components(
         lref = stepped.select(
             F.col("id").alias("_lid"), F.col("label").alias("_llabel")
         )
-        labels = (
-            stepped.join(lref, stepped["label"] == lref["_lid"], "left")
-            .select(
+        labels = _step_checkpoint(
+            stepped.join(lref, stepped["label"] == lref["_lid"], "left").select(
                 stepped["id"],
                 F.least(
                     stepped["label"], F.coalesce(F.col("_llabel"), stepped["label"])
                 ).alias("label"),
             )
-            .localCheckpoint(eager=True)
         )
         # convergence: any vertex whose label still changed this round?
         # (an equi-join between two vertex-sized checkpointed frames —

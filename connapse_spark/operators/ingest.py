@@ -166,9 +166,10 @@ def ingest_serving(
     bundles; the committed layout always tokenized with the default).
 
     Returns a dict: ``chunks``, ``vectors``, ``keyword_index`` (the
-    KeywordIndex bundle ``hybrid_search(keyword_index=…)`` serves from),
-    ``tf_postings`` (the (tf_exact, tf_stemmed) pair the batched tiers
-    serve from), and ``vector_index`` (the IVF bundle for
+    KeywordIndex bundle ``hybrid_search(keyword_index=…)`` serves from:
+    the token table plus the tf pair), ``tf_postings`` (the same
+    (tf_exact, tf_stemmed) pair, which the batched tiers serve from),
+    ``positions_postings`` and ``vector_index`` (the IVF bundle for
     ``hybrid_search(vector_index=…)``).
 
     ``chunks`` AND ``vectors`` are persisted here so the pandas-UDF
@@ -183,9 +184,9 @@ def ingest_serving(
 
     With ``base_dir`` EVERY structure commits through the snapshot layer
     as an atomically-visible version — ``chunks/``, ``chunk_vectors/``,
-    ``tf_postings/`` (kind-partitioned), ``tokens/``, ``postings/``, and
-    the IVF bundle at ``ivf_index/`` (list_id-partitioned, pruning
-    intact) + ``ivf_centroids/`` — and a ROOT SERVING MANIFEST publishes
+    ``tf_postings/`` and ``positions_postings/`` (kind-partitioned),
+    ``tokens/``, and the IVF bundle at ``ivf_index/`` (list_id-partitioned,
+    pruning intact) + ``ivf_centroids/`` — and a ROOT SERVING MANIFEST publishes
     LAST (:func:`publish_serving`), pinning the versions that form this
     wave's consistent cut; :func:`load_serving` opens exactly that cut,
     so a crash between table commits can never serve torn state (the
@@ -214,20 +215,15 @@ def ingest_serving(
         chunks, id_col="chunk_id", text_col="content", stemmer=stemmer
     )
     if base_dir is not None:
-        # the commit fan-out below evaluates this table ~7 times (two tf
+        # the commit fan-out below evaluates this table ~6 times (two tf
         # builds + doclen inside tf_all, two positions builds, the tokens
-        # commit, two posting-array builds) — without the barrier each is
-        # a full corpus re-tokenize (r10 review finding #3). Released after
-        # publish; the returned bundles recompute lazily like before.
+        # commit) — without the barrier each is a full corpus
+        # re-tokenize. Released after publish; the returned bundles
+        # recompute lazily like before.
         tokens = tokens.persist()
-    kidx = ki.KeywordIndex(
-        tokens=tokens,
-        postings_exact=ki.build_postings(tokens, "tokens_exact"),
-        postings_stemmed=ki.build_postings(tokens, "tokens_stemmed"),
-        stem_fn=_stem_fn_for(stemmer),
-    )
     tfe = ki.build_tf_postings(tokens, "tokens_exact")
     tfs = ki.build_tf_postings(tokens, "tokens_stemmed")
+    kidx = ki.KeywordIndex(tokens, tfe, tfs, stem_fn=_stem_fn_for(stemmer))
     pos_e = ki.build_positions_postings(tokens, "tokens_exact")
     pos_s = ki.build_positions_postings(tokens, "tokens_stemmed")
     vidx = _ivf.build_vector_index(
@@ -272,18 +268,11 @@ def ingest_serving(
             os.path.join(base_dir, "positions_postings"),
             partition_by=["kind"],
         )
-        # the single-query serving bundle persists too: the token table +
-        # posting arrays are what hybrid_search(keyword_index=…) reads —
-        # without them only the batched (tf) and vector tiers survive a
-        # restart
+        # the single-query serving bundle is the token table + the tf
+        # rows above: hybrid_search(keyword_index=…) screens candidates
+        # from the tf rows and scores them from the stored token arrays
         tables["tokens"] = snapshots.commit_snapshot(
             tokens, os.path.join(base_dir, "tokens")
-        )
-        posts = kidx.postings_exact.withColumn("kind", F.lit("exact")).unionByName(
-            kidx.postings_stemmed.withColumn("kind", F.lit("stemmed"))
-        ).select("kind", "term", "ids", "df")
-        tables["postings"] = snapshots.commit_snapshot(
-            posts, os.path.join(base_dir, "postings"), partition_by=["kind"]
         )
         # the IVF bundle goes through the snapshot layer too — versioned,
         # list_id-partitioned (pruning intact), and pinnable by the root
@@ -409,9 +398,9 @@ def keyword_serving_wave(
     ``deleted_ids`` is a one-column ``id`` frame of EVERY affected old
     id (updated ids' prior rows AND deleted-only ids). ``pinned`` is the
     serving cut the wave reads its current state from (manifest
-    ``tables`` dict). The token table and the posting arrays commit by
-    copy-on-write and surgery; each payload table (``PAYLOAD_TABLES``)
-    takes the wave as one tombstone-clock delta
+    ``tables`` dict). The token table commits by copy-on-write; each
+    payload table (``PAYLOAD_TABLES``) takes the wave as one
+    tombstone-clock delta
     (``keyword_index.pending_delta``), and per ``tf_mode``:
 
     - ``"pending"``: the delta appends to the table's pending dir in
@@ -425,50 +414,31 @@ def keyword_serving_wave(
       it and truncates the pinned delta.
 
     A table the cut does not pin yet is built from the post-wave tokens
-    in either mode. Returns the version mapping to merge into
-    the wave's serving manifest."""
+    in either mode. A legacy ``postings`` (id-list) pin of the cut is
+    neither read nor carried forward. Returns the version mapping to
+    merge into the wave's serving manifest."""
     import os
 
     from connapse_spark.operators import keyword_index as ki
     from connapse_spark.sources import snapshots
 
     tokens_dir = os.path.join(base_dir, "tokens")
-    postings_dir = os.path.join(base_dir, "postings")
 
-    # persisted: feeds the tokens COW, both posting surgeries, and both
-    # payload deltas — without the barrier the batch re-tokenizes per action
+    # persisted: feeds the tokens COW and both payload deltas — without
+    # the barrier the batch re-tokenizes per action
     tokens_new = ki.build_token_table(
         batch, id_col=id_col, text_col=text_col, stemmer=stemmer
     ).persist()
     try:
         tokens_new.count()
-        # single-query serving bundle: token table via chunk-keyed COW,
-        # posting arrays via the explode→anti-join surgery — so
-        # hybrid_search(keyword_index=…) over a load_serving() of this
-        # layout stays fresh across increments; deletions stay a DataFrame
-        # end to end (no driver collect on the removal path)
+        # token table via chunk-keyed COW, so hybrid_search(keyword_index=…)
+        # over a load_serving() of this layout stays fresh across
+        # increments; deletions stay a DataFrame end to end (no driver
+        # collect on the removal path)
         tokv = snapshots.apply_changes(
             spark, tokens_dir, "id", upserts=tokens_new, delete_keys=deleted_ids
         )
-        cur_posts = snapshots.read_snapshot(
-            spark, postings_dir, version=pinned["postings"]
-        )
-        pparts = []
-        for kind, col in (("exact", "tokens_exact"), ("stemmed", "tokens_stemmed")):
-            cur_k = cur_posts.filter(F.col("kind") == kind).select(
-                "term", "ids", "df"
-            )
-            pparts.append(
-                ki.upsert_postings(
-                    cur_k, tokens_new, deleted_ids=deleted_ids, token_col=col
-                ).withColumn("kind", F.lit(kind))
-            )
-        postv = snapshots.commit_snapshot(
-            pparts[0].unionByName(pparts[1]).select("kind", "term", "ids", "df"),
-            postings_dir,
-            partition_by=["kind"],
-        )
-        out = {"tokens": tokv, "postings": postv}
+        out = {"tokens": tokv}
         tokens_cut = snapshots.read_snapshot(spark, tokens_dir, version=tokv)
         for table, delta, builder in PAYLOAD_TABLES:
             build = getattr(ki, builder)
@@ -530,9 +500,9 @@ def ingest_serving_incremental(
       stored vector (from_cache=true), only novel content pays the
       embedder; the cache narrows to the batch's hashes before joining,
       so the corpus-sized vectors table is never broadcast.
-    - **postings / tf_postings / positions_postings — O(table)**: the
-      posting arrays re-commit whole; the two payload tables take the
-      wave as one tombstone-clock delta (:func:`keyword_serving_wave`).
+    - **tf_postings / positions_postings — O(table)**: the two payload
+      tables take the wave as one tombstone-clock delta
+      (:func:`keyword_serving_wave`).
       ``tf_mode="overwrite"`` (default) folds it into each base and
       re-commits the table whole — a term-clustered index cannot use
       keyed copy-on-write (one doc touches every term range); these
@@ -586,8 +556,6 @@ def ingest_serving_incremental(
         chunks_dir = os.path.join(base_dir, "chunks")
         vectors_dir = os.path.join(base_dir, "chunk_vectors")
         tf_dir = os.path.join(base_dir, "tf_postings")
-        tokens_dir = os.path.join(base_dir, "tokens")
-        postings_dir = os.path.join(base_dir, "postings")
         ivf_dir = os.path.join(base_dir, "ivf_index")
 
         # EVERY "current state" read below pins to the last PUBLISHED serving
@@ -691,7 +659,7 @@ def ingest_serving_incremental(
         )
 
         # keyword side: remove every affected old chunk id, add the batch's
-        # rows — the whole family (tokens COW, posting arrays, tf/doclen,
+        # rows — the whole family (tokens COW, tf/doclen,
         # positions, both maintenance regimes) lives in keyword_serving_wave
         # so the interleaving fuzz drives the PRODUCTION branch logic
         # without paying the chunk/embed/IVF pipeline per wave (r11)
@@ -829,9 +797,9 @@ def load_serving(
 ) -> dict:
     """Reopen EVERYTHING an :func:`ingest_serving` layout committed, as
     the live bundles every query tier takes — the restart story in one
-    call: ``keyword_index`` (token table + posting arrays →
-    ``hybrid_search(keyword_index=…)``), ``tf_postings`` (the batched
-    tiers), and ``vector_index`` (snapshot-committed IVF bundle,
+    call: ``keyword_index`` (token table + the tf pair →
+    ``hybrid_search(keyword_index=…)``), ``tf_postings`` (the same tf
+    pair, for the batched tiers), and ``vector_index`` (snapshot-committed IVF bundle,
     list_id-partitioned so probes prune). Every table opens at the
     version the ROOT SERVING MANIFEST pins (latest complete wave by
     default, or ``serving_version`` for time travel across the whole
@@ -852,23 +820,12 @@ def load_serving(
         )
 
     tokens = _open("tokens")
-    posts = _open("postings")
     # the manifest records the analyzer (r11): the bundle carries the
     # matching stem_fn so a porter2-built layout serves coherently with
     # zero caller knowledge — the exact silent-0 failure class the ad-hoc
     # bundle fix (933b5d2) closed, now closed for the committed layout
     stemmer = m.get("stemmer", "suffix")
     stem_fn = _stem_fn_for(stemmer)
-    kidx = ki.KeywordIndex(
-        tokens=tokens,
-        postings_exact=posts.filter(F.col("kind") == "exact").select(
-            "term", "ids", "df"
-        ),
-        postings_stemmed=posts.filter(F.col("kind") == "stemmed").select(
-            "term", "ids", "df"
-        ),
-        stem_fn=stem_fn,
-    )
 
     def _payload(table, delta):
         # a pending-mode cut serves base ∪ delta, both at their pins; None
@@ -890,6 +847,8 @@ def load_serving(
         tf.filter(F.col("kind") == k).select("term", "id", "tf")
         for k in ("exact", "stemmed")
     )
+    # the single-query tiers screen candidates from the same tf rows
+    kidx = ki.KeywordIndex(tokens, *tf_pair, stem_fn=stem_fn)
     doclen = tf.filter(F.col("kind") == "doclen").select(
         "id", F.col("tf").alias("dl")
     )

@@ -1,24 +1,26 @@
 """Keyword (inverted / posting-list) index — the batch analogue of the
 reference's GIN index on the generated tsvector column
 (KnowledgeDbContext.cs:232-245): pay tokenization at WRITE time, then a
-selective query touches only the posting lists of its own terms instead of
+selective query touches only the posting rows of its own terms instead of
 scanning every document.
 
-Build (one shuffle on term):
-    postings(term, ids: array<id>, df: long)   — per exact/stemmed config
+Build (one shuffle on (term, id)):
+    tf(term, id, tf)   — per exact/stemmed config (:func:`build_tf_postings`)
 
 Query path for selective terms (the common case at 100 TB):
-    query terms → semi-join postings (term is the join key; the postings
-    table is partitioned/sorted by term so the lookup is a pruned scan) →
-    explode candidate ids → score ONLY candidates (join back to the tokens
-    table, which is the write-time materialization of tokens_exact/stemmed)
-    → rank/(rank+1) normalize → top-k.
+    query terms → term-pruned scan of the tf rows (a literal IN filter;
+    the table is partitioned/sorted by term so the lookup prunes) →
+    candidate ids → score ONLY candidates (semi-join the tokens table,
+    the write-time materialization of tokens_exact/stemmed) →
+    rank/(rank+1) normalize → top-k.
 
-Scoring is identical to operators.search.keyword_score_expr (weight A=1.0
-exact, B=0.4 stemmed, rank/(rank+1) — the documented ts_rank_cd(…,32)
-simplification), so the full-scan path and the indexed path return the SAME
-hits — the index is a physical structure, not a semantic change. That
-invariant is what the oracle checks.
+The same tf rows serve the batched tiers, so one posting store backs
+every keyword query. Scoring is identical to
+operators.search.keyword_score_expr (weight A=1.0 exact, B=0.4 stemmed,
+rank/(rank+1) — the documented ts_rank_cd(…,32) simplification), so the
+full-scan path and the indexed path return the SAME hits — the index is
+a physical structure, not a semantic change. That invariant is what the
+oracle checks.
 """
 
 from __future__ import annotations
@@ -104,15 +106,22 @@ def build_token_table(
     ).withColumn("tokens_stemmed", F.transform(F.col("tokens_exact"), stem_expr))
 
 
+def _term_ids(tokens: DataFrame, token_col: str) -> DataFrame:
+    """(id, term) once per distinct term of each token row."""
+    return tokens.select(
+        "id", F.explode_outer(F.array_distinct(F.col(token_col))).alias("term")
+    ).filter(F.col("term").isNotNull())
+
+
 def build_postings(
     tokens: DataFrame, token_col: str = "tokens_exact"
 ) -> DataFrame:
-    """Posting lists: term → sorted id array + document frequency. Write
-    partitioned by a term-hash bucket and sorted by term so a term lookup
-    prunes to one bucket's row groups."""
+    """Id-list posting table: term → sorted id array + document frequency
+    — the Q3 maintenance operator's layout (:func:`upsert_postings`).
+    The serving path does not read it: every keyword tier draws its
+    candidates from the tf rows (:func:`build_tf_postings`)."""
     return (
-        tokens.select("id", F.explode_outer(F.array_distinct(F.col(token_col))).alias("term"))
-        .filter(F.col("term").isNotNull())
+        _term_ids(tokens, token_col)
         .groupBy("term")
         .agg(F.sort_array(F.collect_list("id")).alias("ids"), F.count(F.lit(1)).alias("df"))
     )
@@ -121,16 +130,18 @@ def build_postings(
 @dataclass
 class KeywordIndex:
     """The write-time keyword index bundle: the tokenized corpus plus one
-    postings table per config — the repo analogue of the reference's GIN
-    index over the generated tsvector column (KnowledgeDbContext.cs:232-245,
-    served by KeywordSearchService.cs:73-91). Build once at ingest with
+    (term, id, tf) table per config — the repo analogue of the reference's
+    GIN index over the generated tsvector column
+    (KnowledgeDbContext.cs:232-245, served by KeywordSearchService.cs:73-91).
+    The tf pair is the same one the batched tiers serve from
+    (``load_serving(...)["tf_postings"]``). Build once at ingest with
     :func:`build_keyword_index`; pass to ``hybrid_search(keyword_index=…)``
-    so query-time keyword scoring touches only posting-list candidates
+    so query-time keyword scoring touches only the query terms' candidates
     instead of scanning and re-tokenizing every document."""
 
     tokens: DataFrame  # (id, tokens_exact, tokens_stemmed)
-    postings_exact: DataFrame  # (term, ids, df)
-    postings_stemmed: DataFrame  # (term, ids, df)
+    tf_exact: DataFrame  # (term, id, tf)
+    tf_stemmed: DataFrame  # (term, id, tf)
     # the analyzer the stemmed config was built with (None = the default
     # suffix stripper): the bundle CARRIES its stemmer so every consumer
     # (hybrid_search's indexed keyword branch, the snippets tier) stems
@@ -139,12 +150,12 @@ class KeywordIndex:
     stem_fn: "object" = None
 
     def persist(self) -> "KeywordIndex":
-        for df in (self.tokens, self.postings_exact, self.postings_stemmed):
+        for df in (self.tokens, self.tf_exact, self.tf_stemmed):
             df.persist()
         return self
 
     def unpersist(self) -> "KeywordIndex":
-        for df in (self.tokens, self.postings_exact, self.postings_stemmed):
+        for df in (self.tokens, self.tf_exact, self.tf_stemmed):
             df.unpersist()
         return self
 
@@ -155,9 +166,9 @@ def build_keyword_index(
     text_col: str = "text",
     stemmer: str = "suffix",
 ) -> KeywordIndex:
-    """One-stop ingest-time build: token table + both postings tables. At
+    """One-stop ingest-time build: token table + both tf tables. At
     deployment scale, write all three partitioned/sorted (tokens bucketed by
-    id for the score-join; postings sorted by term for pruned lookups).
+    id for the score-join; tf rows sorted by term for pruned lookups).
     ``stemmer`` selects the weight-B analyzer (see
     :func:`build_token_table`); the bundle records the matching query-side
     stem function so consumers stay coherent automatically."""
@@ -169,8 +180,8 @@ def build_keyword_index(
         stem_fn = porter2_stem
     return KeywordIndex(
         tokens=tokens,
-        postings_exact=build_postings(tokens, "tokens_exact"),
-        postings_stemmed=build_postings(tokens, "tokens_stemmed"),
+        tf_exact=build_tf_postings(tokens, "tokens_exact"),
+        tf_stemmed=build_tf_postings(tokens, "tokens_stemmed"),
         stem_fn=stem_fn,
     )
 
@@ -929,8 +940,8 @@ def _affected_ids(
     deletions may be a full change feed, so its join strategy is left to
     the optimizer (AQE broadcasts it at runtime when it measures small).
     ``elem_type`` casts every side to the probed table's id type (string
-    chunk ids and bigint doc ids both maintain — shared with
-    upsert_postings since r9); omitted, list deletions coerce to bigint
+    chunk ids and bigint doc ids both maintain — upsert_postings passes
+    its table's id type); omitted, list deletions coerce to bigint
     (the tf twin's historical contract)."""
     def _cast(df: DataFrame) -> DataFrame:
         if elem_type is None:
@@ -998,10 +1009,15 @@ def fold_postings(
     )
 
 
-def _upsert(base: DataFrame, new_tokens: DataFrame, deleted_ids, fresh: DataFrame) -> DataFrame:
+def _upsert(
+    base: DataFrame, new_tokens: DataFrame, deleted_ids, fresh: DataFrame, elem_type=None
+) -> DataFrame:
     """One batch — its ``fresh`` rows and a tomb per affected id, on one
-    clock tick — folded into ``base``."""
-    affected, bounded = _affected_ids(base.sparkSession, new_tokens, deleted_ids)
+    clock tick — folded into ``base``; ``elem_type`` as in
+    :func:`_affected_ids`."""
+    affected, bounded = _affected_ids(
+        base.sparkSession, new_tokens, deleted_ids, elem_type=elem_type
+    )
     tick = F.lit(0).cast("long")
     return fold_postings(
         base,
@@ -1310,17 +1326,31 @@ def keyword_search_many_indexed(
     )
 
 
+def _candidates(
+    tf_exact: DataFrame, tf_stemmed: DataFrame, terms: list, stems: list
+) -> DataFrame:
+    """Ids of the tf rows of ``terms`` (exact) and ``stems`` (stemmed),
+    one per matching row: the single-query tiers' candidate set."""
+    return (
+        tf_exact.filter(f"term IN ({spark_sql_values(terms)})")
+        .select("id")
+        .unionByName(
+            tf_stemmed.filter(f"term IN ({spark_sql_values(stems)})").select("id")
+        )
+    )
+
+
 def keyword_search_indexed(
     tokens: DataFrame,
-    postings_exact: DataFrame,
-    postings_stemmed: DataFrame,
+    tf_exact: DataFrame,
+    tf_stemmed: DataFrame,
     query: str,
     k: int = 10,
     allowed: DataFrame | None = None,
     stem_fn=None,
 ) -> DataFrame:
-    """Indexed keyword query: candidates = union of the query terms' posting
-    lists (tiny scan), scored by joining back to the candidates' token rows
+    """Indexed keyword query: candidates = the ids of the query terms' tf
+    rows (tiny scan), scored by joining back to the candidates' token rows
     only. Returns (id, score) — identical to operators.search.keyword_search
     on the same corpus. ``allowed`` (an ``id`` column) semi-joins a filter
     predicate into the candidate set, mirroring the reference AND-composing
@@ -1332,16 +1362,12 @@ def keyword_search_indexed(
         return tokens.select(F.col("id"), F.lit(0.0).alias("score")).limit(0)
 
     # Term lookup as a literal IN-filter, NOT a join against a created
-    # DataFrame: the literal predicate pushes into the postings scan
+    # DataFrame: the literal predicate pushes into the tf scan
     # (partition/row-group pruning on the term-sorted layout), where a join
     # key never does — and it costs zero extra Spark jobs. No distinct: a
     # left-semi probe is insensitive to duplicate candidate ids, and the
     # dedup was a full shuffle of the candidate set.
-    cand = (
-        postings_exact.filter(f"term IN ({spark_sql_values(terms)})")
-        .unionByName(postings_stemmed.filter(f"term IN ({spark_sql_values(stems)})"))
-        .selectExpr("explode(ids) AS id")
-    )
+    cand = _candidates(tf_exact, tf_stemmed, terms, stems)
     if allowed is not None:
         cand = cand.join(allowed.select("id"), "id", "left_semi")
     # top-k FIRST, filter the <=k survivors (r11 §16, the §12 scan-tier
@@ -1373,7 +1399,7 @@ def keyword_search_snippets_indexed(
     """Result-list snippets with the RANKING served from the write-time
     index (r10 — VERDICT r9 ask #6's second half: the snippets tier still
     re-tokenized the corpus at query time even though its ranking is
-    exactly keyword_search's): candidates come from the posting lists via
+    exactly keyword_search's): candidates come from the tf rows via
     :func:`keyword_search_indexed` (row-identical to the scan ranking,
     oracle-pinned), and the ONLY touch of the documents table is the
     ≤k winners' text fetch for the excerpt window — a k-row point read,
@@ -1383,8 +1409,8 @@ def keyword_search_snippets_indexed(
 
     hits = keyword_search_indexed(
         index.tokens,
-        index.postings_exact,
-        index.postings_stemmed,
+        index.tf_exact,
+        index.tf_stemmed,
         query,
         k=k,
         stem_fn=stem_fn if stem_fn is not None else index.stem_fn,
@@ -1396,23 +1422,23 @@ def keyword_search_snippets_indexed(
 
 def keyword_search_websearch_indexed(
     tokens: DataFrame,
-    postings_exact: DataFrame,
-    postings_stemmed: DataFrame,
+    tf_exact: DataFrame,
+    tf_stemmed: DataFrame,
     query: str,
     k: int = 10,
     stem_fn=None,
 ) -> DataFrame:
     """Websearch syntax (phrases, negation, OR-groups) served from the
     write-time index (r8 — VERDICT r7 missing/#8: the served tier
-    silently lost phrase semantics). Candidates come from the posting
-    lists — each OR-group's FIRST positive term is a sound screen (a doc
+    silently lost phrase semantics). Candidates come from the tf rows
+    — each OR-group's FIRST positive term is a sound screen (a doc
     matching the group must contain it, in either config) — then the
     SAME match/score expressions as the scan tier
     (operators.search.websearch_match_sql/_score_sql) verify and rank
     over the candidates' STORED token arrays. Phrase adjacency therefore
     needs no separate positions column: the token table IS the
     write-time positional materialization, and candidate verification
-    touches only posting-list hits, never the corpus. Identical rows to
+    touches only the screen terms' rows, never the corpus. Identical rows to
     keyword_search_websearch by construction — the oracle pins it
     against the scan tier's own SQL.
 
@@ -1439,12 +1465,11 @@ def keyword_search_websearch_indexed(
             )
         tok = pos[0].tokens[0]
         screens.append((tok, stem(tok)))
-    exact = spark_sql_values(sorted({tok for tok, _ in screens}))
-    stemmed = spark_sql_values(sorted({st for _, st in screens}))
-    cand = (
-        postings_exact.filter(f"term IN ({exact})")
-        .unionByName(postings_stemmed.filter(f"term IN ({stemmed})"))
-        .selectExpr("explode(ids) AS id")
+    cand = _candidates(
+        tf_exact,
+        tf_stemmed,
+        sorted({tok for tok, _ in screens}),
+        sorted({st for _, st in screens}),
     )
     te, ts = "tokens_exact", "tokens_stemmed"
     # no broadcast HINT on the candidate set: a high-df screen term can
@@ -1465,7 +1490,7 @@ def keyword_search_websearch_indexed(
 def sql_keyword_indexed(query: str, k: int = 10) -> str:
     """Oracle: the indexed path must equal the full-scan scorer, so the
     mirror IS the full-scan scorer restricted to docs containing ≥1 query
-    term — same candidate semantics as the posting-list union."""
+    term — same candidate semantics as the tf-row union."""
     terms = sorted(set(tokenize_py(query)))
     stems = sorted({stem_py(t) for t in terms})
     term_list = ", ".join(f"'{t}'" for t in terms)
@@ -1500,56 +1525,30 @@ def upsert_postings(
     deleted_ids: "list | DataFrame | None" = None,
     token_col: str = "tokens_exact",
 ) -> DataFrame:
-    """Incremental posting-list maintenance — the Q3 analogue of
-    plans/ivf.ivf_index_upsert: a batch of NEW/UPDATED docs (their token
-    table) plus optional deletions folds into an EXISTING postings table
-    without re-tokenizing the corpus.
-
-    Semantics are rebuild-equivalent (the oracle entry checks exactly
-    that): every affected id (upserted or deleted) is first REMOVED from
-    the old lists — an upserted doc's stale terms must not linger — then
-    the batch's own rows merge in and one term-keyed aggregation rebuilds
-    the touched lists; ``df`` stays the list length; terms whose last doc
-    vanished drop out.
-
-    Scale: removal is the SAME anti-join shape as
-    :func:`upsert_tf_postings` — old lists explode to (term, id) rows
-    and the affected-id set drops in one ``left_anti`` join, with NO
-    driver-side collect and NO per-id plan literals, so plan size is
-    independent of batch cardinality and the batch may itself be a
-    DataFrame-sized change feed (the prior design collected every batch
-    id into an ``F.array(lit…)`` the whole postings table
-    ``array_except``-ed against — O(|batch|) plan size AND per-row cost).
-    The postings table is scanned once; the explode → re-``collect_list``
-    round-trip shuffles only postings-sized rows on term, which a
-    term-partitioned layout co-locates. ``deleted_ids`` may be a Python
-    list (bounded ad-hoc batch → broadcast-hinted probe) or a DataFrame
-    with an ``id`` column (change-feed scale — join strategy left to
-    AQE, same policy as the tf twin). Id-type-agnostic: probe ids cast
-    to the postings table's own ``ids`` element type, so bigint doc ids
-    and string chunk ids ("doc:idx") both maintain."""
+    """Incremental maintenance of an id-list table (:func:`build_postings`)
+    — the Q3 analogue of plans/ivf.ivf_index_upsert: a batch of
+    NEW/UPDATED docs (their token table) plus optional deletions folds in
+    without re-tokenizing the corpus. Rebuild-equivalent (the
+    ``postings_upsert`` oracle entry checks exactly that): the lists
+    explode to (term, id) rows, :func:`fold_postings` drops every affected
+    id (an upserted doc's stale terms must not linger) and unions the
+    batch's rows, and one term-keyed aggregation regroups them; ``df``
+    stays the list length and terms whose last doc vanished drop out.
+    ``deleted_ids`` follows :func:`upsert_tf_postings`. Id-type-agnostic:
+    batch and deletion ids cast to the table's own ``ids`` element type,
+    so bigint doc ids and string chunk ids ("doc:idx") both maintain."""
     elem = postings.schema["ids"].dataType.elementType
-    affected, bounded = _affected_ids(
-        postings.sparkSession, new_tokens, deleted_ids, elem_type=elem
-    )
-    probe = affected.distinct()
-    if bounded:
-        probe = F.broadcast(probe)
-    live = (
-        postings.select("term", F.explode("ids").alias("id"))
-        .join(probe, "id", "left_anti")
-        .select("term", "id")
-    )
-    fresh = (
-        new_tokens.select(
-            F.col("id").cast(elem).alias("id"),
-            F.explode_outer(F.array_distinct(F.col(token_col))).alias("term"),
-        )
-        .filter(F.col("term").isNotNull())
-        .select("term", "id")
+    fresh = _term_ids(new_tokens, token_col).select(
+        "term", F.col("id").cast(elem).alias("id")
     )
     return (
-        live.unionByName(fresh)
+        _upsert(
+            postings.select("term", F.explode("ids").alias("id")),
+            new_tokens,
+            deleted_ids,
+            fresh,
+            elem_type=elem,
+        )
         .groupBy("term")
         .agg(
             F.sort_array(F.collect_list("id")).alias("ids"),

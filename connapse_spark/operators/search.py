@@ -1260,8 +1260,9 @@ def hybrid_search(
     HybridSearchService.SearchAsync stage order.
 
     ``keyword_index`` (an ``operators.keyword_index.KeywordIndex``) is the
-    serving configuration: the keyword branch then scores ONLY the posting
-    lists' candidates from the write-time token table — no per-query corpus
+    serving configuration: the keyword branch then scores ONLY the
+    candidates of the query terms' tf rows (the same write-time tf pair the
+    batched tiers read) from the write-time token table — no per-query corpus
     re-tokenization — the way the reference serves keyword from the GIN
     index (KeywordSearchService.cs:73-91). Results are identical to the
     full-scan branch (the index is a physical structure, not a semantic
@@ -1347,8 +1348,8 @@ def hybrid_search(
 
                 k_hits = keyword_search_websearch_indexed(
                     keyword_index.tokens,
-                    keyword_index.postings_exact,
-                    keyword_index.postings_stemmed,
+                    keyword_index.tf_exact,
+                    keyword_index.tf_stemmed,
                     query,
                     fetch_k,
                     stem_fn=keyword_index.stem_fn,
@@ -1367,8 +1368,8 @@ def hybrid_search(
                 allowed = base.select(F.col(id_col).alias("id"))
             k_hits = keyword_search_indexed(
                 keyword_index.tokens,
-                keyword_index.postings_exact,
-                keyword_index.postings_stemmed,
+                keyword_index.tf_exact,
+                keyword_index.tf_stemmed,
                 query,
                 fetch_k,
                 allowed=allowed,

@@ -267,8 +267,9 @@ def neardup_cosine_pairs_lsh(
     # of the bucket self-join read `v`, and Spark does not share the
     # subtree — the n_planes sign-projection dots plus the l2 norm (all
     # interpreted HOF folds) ran TWICE over every vector. Persisting the
-    # slim (id, vec, bucket, norm) projection computes them once;
-    # released by the ContextCleaner when the plan is garbage-collected.
+    # slim (id, vec, bucket, norm) projection computes them once. The
+    # CacheManager holds the entry until unpersist() or clearCache(); it
+    # is not released when the plan is garbage-collected.
     v = v.persist()
     a = v.select(
         F.col("id").alias("id_a"), F.col("bucket"),

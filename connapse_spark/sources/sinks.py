@@ -7,7 +7,6 @@ writer here chooses partition/sort keys so the matching read prunes.
 | chunks         | container_id            | document_id, chunk_idx | container + doc filters    |
 | chunk_vectors  | model_id                | content_hash           | model filter (Q2 forces it)|
 | lsh_index      | model_id, bucket        | id                     | probe's bucket equality    |
-| postings       | term_bucket (hash-mod)  | term                   | query-term bucket lookup   |
 
 The content-hash sort on chunk_vectors co-locates the E2 cache anti-join;
 the per-model partition mirrors the reference's per-model partial indexes
@@ -19,8 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-POSTINGS_BUCKETS = 64
 
 
 def write_chunks(chunks: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -58,41 +55,6 @@ def write_lsh_index(index: DataFrame, path: str, model_id: str = "hash-64", mode
         .partitionBy("model_id", "bucket")
         .parquet(path)
     )
-
-
-def write_postings(postings: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Posting lists bucketed by term hash: a query's terms map to ≤|terms|
-    buckets, so the lookup scans |terms|/64 of the index."""
-    (
-        postings.withColumn(
-            "term_bucket", F.pmod(F.hash("term"), F.lit(POSTINGS_BUCKETS))
-        )
-        .repartition("term_bucket")
-        .sortWithinPartitions("term")
-        .write.mode(mode)
-        .partitionBy("term_bucket")
-        .parquet(path)
-    )
-
-
-def read_postings_for_terms(spark: SparkSession, path: str, terms: list[str]) -> DataFrame:
-    """Pruned posting read: partition filter on the terms' buckets reaches
-    the scan (PartitionFilters in explain), then exact term filter."""
-    df = spark.read.parquet(path)
-    term_col = F.col("term")
-    bucket_col = F.col("term_bucket")
-    import pandas as pd  # noqa: F401  (documents the pandas-free path)
-
-    # compute buckets with Spark's own hash on a literal frame to stay
-    # consistent with the writer's pmod(hash(term), N)
-    buckets = [
-        r["b"]
-        for r in spark.createDataFrame([(t,) for t in terms], "term string")
-        .select(F.pmod(F.hash("term"), F.lit(POSTINGS_BUCKETS)).alias("b"))
-        .distinct()
-        .collect()
-    ]
-    return df.filter(bucket_col.isin(buckets) & term_col.isin(terms))
 
 
 # ---------------------------------------------------------------------------

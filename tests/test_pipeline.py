@@ -117,9 +117,9 @@ def test_ivf_probe_recall_improves_with_nprobe(spark, sf_dir):
 def test_keyword_indexed_equals_full_scan(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     tokens = keyword_index.build_token_table(docs)
-    pe = keyword_index.build_postings(tokens, "tokens_exact")
-    ps = keyword_index.build_postings(tokens, "tokens_stemmed")
-    indexed = keyword_index.keyword_search_indexed(tokens, pe, ps, QUERY, k=15).collect()
+    tfe = keyword_index.build_tf_postings(tokens, "tokens_exact")
+    tfs = keyword_index.build_tf_postings(tokens, "tokens_stemmed")
+    indexed = keyword_index.keyword_search_indexed(tokens, tfe, tfs, QUERY, k=15).collect()
     full = keyword_search(docs, QUERY, k=15).collect()
     assert [(r["id"], r["score"]) for r in indexed] == [
         (r["doc_id"], r["score"]) for r in full
@@ -701,6 +701,74 @@ def test_ingest_serving_incremental_wave_job_budget(spark, sf_dir, tmp_path):
     # wave's model, so the guard scans those files and refuses the wave
     with pytest.raises(ValueError, match="besides"):
         ingest_serving_incremental(batch, base, model_id="other-model")
+
+
+def test_serving_layout_has_no_id_list_postings(spark, sf_dir, tmp_path):
+    """The serving layout keeps no id-list ``postings`` table: a fresh
+    ingest_serving commits no ``postings/`` directory and its manifest
+    pins none. A legacy cut that still pins one migrates on its next
+    wave: the published cut drops the pin, and the single-query keyword
+    tiers over load_serving's bundle (token table + tf pair) equal a
+    rebuild and the scan tier over the live chunks."""
+    from connapse_spark.operators.ingest import (
+        ingest_serving,
+        ingest_serving_incremental,
+        load_serving,
+        publish_serving,
+    )
+    from connapse_spark.operators.search import SearchOptions, hybrid_search
+    from connapse_spark.sources import snapshots as snaps
+
+    docs = _docs(spark, sf_dir).filter(F.col("doc_id") < 20).select("doc_id", "text")
+    base = str(tmp_path / "serving")
+    first = ingest_serving(docs, base_dir=base)
+    first["chunks"].unpersist(), first["vectors"].unpersist()
+    m = snaps.load_manifest(os.path.join(base, "_serving"))
+    assert not os.path.exists(os.path.join(base, "postings"))
+    assert "postings" not in m["tables"]
+
+    # a legacy cut: the id-list table committed and pinned beside the rest
+    toks = snaps.read_snapshot(spark, os.path.join(base, "tokens"))
+    legacy = (
+        keyword_index.build_postings(toks, "tokens_exact")
+        .withColumn("kind", F.lit("exact"))
+        .unionByName(
+            keyword_index.build_postings(toks, "tokens_stemmed").withColumn(
+                "kind", F.lit("stemmed")
+            )
+        )
+    )
+    pin = snaps.commit_snapshot(
+        legacy, os.path.join(base, "postings"), partition_by=["kind"]
+    )
+    publish_serving(
+        base,
+        {**m["tables"], "postings": pin},
+        **{k: v for k, v in m.items() if k not in ("tables", "version")},
+    )
+
+    batch = docs.filter(F.col("doc_id") == 3).select(
+        "doc_id", F.lit("entirely new content about table scan joins").alias("text")
+    )
+    out = ingest_serving_incremental(batch, base, deleted_doc_ids=[7])
+    out["chunks"].unpersist(), out["vectors"].unpersist()
+    cut = load_serving(spark, base)
+    assert "postings" not in cut["tables"]
+
+    chunks = snaps.read_snapshot(
+        spark, os.path.join(base, "chunks"), version=cut["tables"]["chunks"]
+    )
+    corpus = chunks.select(
+        F.col("chunk_id").alias("doc_id"), F.col("content").alias("text")
+    )
+    rebuilt = keyword_index.build_keyword_index(corpus)
+    for q, ws in (("table scan joins", False), ('"table scan" joins -merge', True)):
+        opts = SearchOptions(top_k=10, mode="Keyword", websearch=ws)
+        got = hybrid_search(corpus, q, opts, keyword_index=cut["keyword_index"]).collect()
+        want = hybrid_search(corpus, q, opts, keyword_index=rebuilt).collect()
+        scan = hybrid_search(corpus, q, opts).collect()
+        assert got and [tuple(r) for r in got] == [tuple(r) for r in want]
+        assert [tuple(r) for r in got] == [tuple(r) for r in scan]
 
 
 @pytest.mark.slow

@@ -105,24 +105,10 @@ def test_lsh_probe_prunes_partitions_on_disk(spark, sf_dir, tmp_path):
     assert re.search(r"PartitionFilters: \[.*bucket.*\]", plan)
 
 
-def test_postings_read_prunes_term_buckets(spark, sf_dir, tmp_path):
-    from connapse_spark.operators import keyword_index
-
-    docs = _docs(spark, sf_dir).limit(200)
-    tokens = keyword_index.build_token_table(docs)
-    postings = keyword_index.build_postings(tokens, "tokens_exact")
-    path = str(tmp_path / "postings")
-    sinks.write_postings(postings, path)
-    pruned = sinks.read_postings_for_terms(spark, path, ["table", "scan"])
-    plan = _plan(pruned)
-    assert re.search(r"PartitionFilters: \[.*term_bucket.*\]", plan)
-    rows = pruned.collect()
-    assert {r["term"] for r in rows} <= {"table", "scan"}
-
-
 def test_indexed_keyword_probe_plan_is_shuffle_free(spark, sf_dir):
-    """The SERVING plan of the posting-list keyword probe over a
-    materialized index: candidate ids broadcast into a LeftSemi join
+    """The SERVING plan of the single-query keyword probe over a
+    materialized index (token table + tf pair): candidate ids from the
+    query terms' tf rows broadcast into a LeftSemi join
     against the token table, top-k via TakeOrderedAndProject, and ZERO
     shuffle Exchange — the whole point of paying tokenization at write
     time. (hybrid_indexed's bench row measures this same path.)"""
@@ -130,10 +116,10 @@ def test_indexed_keyword_probe_plan_is_shuffle_free(spark, sf_dir):
 
     docs = _docs(spark, sf_dir).limit(300)
     idx = keyword_index.build_keyword_index(docs).persist()
-    for df in (idx.tokens, idx.postings_exact, idx.postings_stemmed):
+    for df in (idx.tokens, idx.tf_exact, idx.tf_stemmed):
         df.count()  # materialize: the probe must plan against the cache
     probe = keyword_index.keyword_search_indexed(
-        idx.tokens, idx.postings_exact, idx.postings_stemmed, "table scan", k=10
+        idx.tokens, idx.tf_exact, idx.tf_stemmed, "table scan", k=10
     )
     plan = _plan(probe)
     assert re.search(r"BroadcastHashJoin .*LeftSemi", plan) or "LeftSemi" in plan
@@ -158,7 +144,7 @@ def test_websearch_indexed_matches_scan_tier(spark, sf_dir):
     idx = keyword_index.build_keyword_index(docs).persist()
     q = '"table scan" fast -merge OR "fast merge"'
     served = keyword_index.keyword_search_websearch_indexed(
-        idx.tokens, idx.postings_exact, idx.postings_stemmed, q, k=15
+        idx.tokens, idx.tf_exact, idx.tf_stemmed, q, k=15
     )
     scan = keyword_search_websearch(docs, q, k=15)
     assert [(r["id"], r["score"]) for r in served.collect()] == [
@@ -166,7 +152,7 @@ def test_websearch_indexed_matches_scan_tier(spark, sf_dir):
     ]
     with pytest.raises(ValueError, match="positive term"):
         keyword_index.keyword_search_websearch_indexed(
-            idx.tokens, idx.postings_exact, idx.postings_stemmed, "-merge", k=5
+            idx.tokens, idx.tf_exact, idx.tf_stemmed, "-merge", k=5
         )
     idx.unpersist()
 

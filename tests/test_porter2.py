@@ -98,16 +98,14 @@ def test_build_token_table_porter2_and_bm25_serving(spark, sf_dir):
         tfe, tf, [(1, "running")], k=4, stem_fn=porter2_stem
     ).collect()
     assert {r["id"] for r in many} >= {1, 2}
-    kidx_posts_e = ki.build_postings(toks, "tokens_exact")
-    kidx_posts_s = ki.build_postings(toks, "tokens_stemmed")
     ws = ki.keyword_search_websearch_indexed(
-        toks, kidx_posts_e, kidx_posts_s, "rationally", k=4, stem_fn=porter2_stem
+        toks, tfe, tf, "rationally", k=4, stem_fn=porter2_stem
     ).collect()
     # porter2: rationally→ration == rational→ration (the suffix stripper
     # maps rationally→rationall and finds nothing)
     assert [r["id"] for r in ws] == [2]
     single = ki.keyword_search_indexed(
-        toks, kidx_posts_e, kidx_posts_s, "runs", k=4, stem_fn=porter2_stem
+        toks, tfe, tf, "runs", k=4, stem_fn=porter2_stem
     ).collect()
     assert {r["id"] for r in single} >= {1, 2}
 

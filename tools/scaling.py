@@ -307,12 +307,7 @@ def main_sf1(out_path: str = "SCALING.md") -> None:
             emb, n_rows=n_vecs, nprobe=3, id_col="vec_id"
         ).persist()
         vidx.index.count()
-        kidx = ki.KeywordIndex(
-            tokens,
-            ki.build_postings(tokens, "tokens_exact").persist(),
-            ki.build_postings(tokens, "tokens_stemmed").persist(),
-        )
-        kidx.postings_exact.count(), kidx.postings_stemmed.count()
+        kidx = ki.KeywordIndex(tokens, tfe, tfs)
         vectors = emb.select(F.col("vec_id").alias("id"), "embedding")
         sq = "query vector table scan join"
         serve_cases = {
@@ -354,7 +349,6 @@ def main_sf1(out_path: str = "SCALING.md") -> None:
         for df in (docs, corpus, tokens, tfe, tfs):
             df.unpersist()
         vidx.unpersist()
-        kidx.postings_exact.unpersist(), kidx.postings_stemmed.unpersist()
 
     lines = [
         "",
