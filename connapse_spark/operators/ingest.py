@@ -255,7 +255,7 @@ def ingest_serving(
         # BM25 mixes tf rows and lengths from ONE corpus version, so they
         # must share an atomic commit — see keyword_index.read_doclen
         tables["tf_postings"] = snapshots.commit_snapshot(
-            ki.build_tf_all(tokens),
+            ki.build_tf_all(tokens).sortWithinPartitions("kind", "term"),
             os.path.join(base_dir, "tf_postings"),
             partition_by=["kind"],
         )
@@ -264,13 +264,14 @@ def ingest_serving(
         # this table a restart could not answer a quoted phrase from disk.
         # The GIN-with-positions storage trade, applied to the layout.
         tables["positions_postings"] = snapshots.commit_snapshot(
-            ki.build_positions_all(tokens),
+            ki.build_positions_all(tokens).sortWithinPartitions("kind", "term"),
             os.path.join(base_dir, "positions_postings"),
             partition_by=["kind"],
         )
         # the single-query serving bundle is the token table + the tf
-        # rows above: hybrid_search(keyword_index=…) screens candidates
-        # from the tf rows and scores them from the stored token arrays
+        # rows above: hybrid_search(keyword_index=…) scores a plain query
+        # from the tf rows alone; the websearch tier screens candidates
+        # there and verifies phrases on the stored token arrays
         tables["tokens"] = snapshots.commit_snapshot(
             tokens, os.path.join(base_dir, "tokens")
         )
@@ -370,7 +371,9 @@ def _fold_payload_table(
                     ki.doclen_partition_rows(ki.build_doclen_table(tokens))
                 )
     v = snapshots.commit_snapshot(
-        nxt, os.path.join(base_dir, table), partition_by=["kind"]
+        nxt.sortWithinPartitions("kind", "term"),
+        os.path.join(base_dir, table),
+        partition_by=["kind"],
     )
     if delta in pinned:
         ki.truncate_pending(spark, os.path.join(base_dir, delta))
@@ -847,7 +850,8 @@ def load_serving(
         tf.filter(F.col("kind") == k).select("term", "id", "tf")
         for k in ("exact", "stemmed")
     )
-    # the single-query tiers screen candidates from the same tf rows
+    # the single-query tiers read the same tf rows: the plain tier scores
+    # from them, the websearch tier screens its candidates there
     kidx = ki.KeywordIndex(tokens, *tf_pair, stem_fn=stem_fn)
     doclen = tf.filter(F.col("kind") == "doclen").select(
         "id", F.col("tf").alias("dl")

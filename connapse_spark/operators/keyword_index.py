@@ -7,12 +7,12 @@ scanning every document.
 Build (one shuffle on (term, id)):
     tf(term, id, tf)   — per exact/stemmed config (:func:`build_tf_postings`)
 
-Query path for selective terms (the common case at 100 TB):
+Query path (the common case at 100 TB):
     query terms → term-pruned scan of the tf rows (a literal IN filter;
-    the table is partitioned/sorted by term so the lookup prunes) →
-    candidate ids → score ONLY candidates (semi-join the tokens table,
-    the write-time materialization of tokens_exact/stemmed) →
-    rank/(rank+1) normalize → top-k.
+    the committed table is sorted by term so the lookup prunes row
+    groups) → one single-partition aggregate of the matched tf per id →
+    rank/(rank+1) normalize → top-k. No token row is read; only the
+    websearch tier goes back to the token table, to verify phrases.
 
 The same tf rows serve the batched tiers, so one posting store backs
 every keyword query. Scoring is identical to
@@ -41,7 +41,7 @@ from connapse_spark.functions.vector import bind_once as _bind, spark_sql_values
 from connapse_spark.operators.search import (
     WEIGHT_EXACT,
     WEIGHT_STEMMED,
-    keyword_score_sql,
+    keyword_squash_sql,
 )
 
 
@@ -136,8 +136,10 @@ class KeywordIndex:
     The tf pair is the same one the batched tiers serve from
     (``load_serving(...)["tf_postings"]``). Build once at ingest with
     :func:`build_keyword_index`; pass to ``hybrid_search(keyword_index=…)``
-    so query-time keyword scoring touches only the query terms' candidates
-    instead of scanning and re-tokenizing every document."""
+    so a plain keyword query is scored from the query terms' tf rows
+    alone instead of scanning and re-tokenizing every document. The
+    token table serves the websearch tier, which verifies phrases on the
+    candidates' stored arrays."""
 
     tokens: DataFrame  # (id, tokens_exact, tokens_stemmed)
     tf_exact: DataFrame  # (term, id, tf)
@@ -168,7 +170,8 @@ def build_keyword_index(
 ) -> KeywordIndex:
     """One-stop ingest-time build: token table + both tf tables. At
     deployment scale, write all three partitioned/sorted (tokens bucketed by
-    id for the score-join; tf rows sorted by term for pruned lookups).
+    id for the websearch tier's candidate join; tf rows sorted by term for
+    pruned lookups, as ``ingest_serving`` commits them).
     ``stemmer`` selects the weight-B analyzer (see
     :func:`build_token_table`); the bundle records the matching query-side
     stem function so consumers stay coherent automatically."""
@@ -190,10 +193,11 @@ def build_tf_postings(
     tokens: DataFrame, token_col: str = "tokens_exact"
 ) -> DataFrame:
     """Term-frequency postings: (term, id, tf) — the write-time layout that
-    serves BATCHED keyword scoring (keyword_search_many's per-(id, term)
-    aggregation, materialized once at ingest instead of recomputed per
-    query batch). Store partitioned/sorted by term: a batch's lookup scans
-    only its query terms' row groups. This is the GIN-with-positions
+    serves keyword scoring, single-query and BATCHED (keyword_search_many's
+    per-(id, term) aggregation, materialized once at ingest instead of
+    recomputed per query). Stored sorted by term (every serving-layout
+    commit sorts each file by (kind, term)): a lookup reads only its query
+    terms' row groups. This is the GIN-with-positions
     trade: postings with payload cost more to store, serve in one join."""
     # explode_outer + isnotnull ≡ explode, but InferFiltersFromGenerate does
     # not fire for OUTER explodes — for a plain explode it adds
@@ -250,9 +254,9 @@ def build_positions_postings(
     """(term, id, positions) — the GIN-with-positions layout (r9, VERDICT
     r8 ask #6): 0-based sorted token positions per (term, doc), the
     write-time structure that serves BATCHED phrase verification without
-    touching token arrays or re-tokenizing anything. Store
-    partitioned/sorted by term like the tf tables; costs one extra
-    int-array column over tf postings."""
+    touching token arrays or re-tokenizing anything. Stored sorted by
+    term like the tf tables; costs one extra int-array column over tf
+    postings."""
     # posexplode_outer + isnotnull: same InferFiltersFromGenerate dodge as
     # build_tf_postings (the plain posexplode's inferred size()>0 filter
     # re-ran the tokenizer per row through the pushed-down projection)
@@ -1326,20 +1330,6 @@ def keyword_search_many_indexed(
     )
 
 
-def _candidates(
-    tf_exact: DataFrame, tf_stemmed: DataFrame, terms: list, stems: list
-) -> DataFrame:
-    """Ids of the tf rows of ``terms`` (exact) and ``stems`` (stemmed),
-    one per matching row: the single-query tiers' candidate set."""
-    return (
-        tf_exact.filter(f"term IN ({spark_sql_values(terms)})")
-        .select("id")
-        .unionByName(
-            tf_stemmed.filter(f"term IN ({spark_sql_values(stems)})").select("id")
-        )
-    )
-
-
 def keyword_search_indexed(
     tokens: DataFrame,
     tf_exact: DataFrame,
@@ -1349,37 +1339,53 @@ def keyword_search_indexed(
     allowed: DataFrame | None = None,
     stem_fn=None,
 ) -> DataFrame:
-    """Indexed keyword query: candidates = the ids of the query terms' tf
-    rows (tiny scan), scored by joining back to the candidates' token rows
-    only. Returns (id, score) — identical to operators.search.keyword_search
+    """Indexed keyword query scored from the query terms' tf rows alone.
+    Returns (id, score) — identical to operators.search.keyword_search
     on the same corpus. ``allowed`` (an ``id`` column) semi-joins a filter
-    predicate into the candidate set, mirroring the reference AND-composing
-    documentId/path filters into the keyword SQL."""
+    predicate into the matched rows, mirroring the reference AND-composing
+    documentId/path filters into the keyword SQL. ``tokens`` only types
+    the empty result of a query with no terms.
+
+    The query's terms and stems are deduplicated, so a document's sum of
+    tf over them is the count of its token-array elements that are query
+    terms / stems: exactly the counts the scan tier takes, fed to the same
+    weighted raw/(raw+1) squash. Only ids with a matching tf row can score
+    above zero, and every such id has one, so the rows are the scan
+    tier's, bit for bit.
+
+    Plan: a literal ``term IN`` filter on each tf table (it pushes into
+    the scan and prunes row groups of the term-sorted layout), the two
+    configs' rows union-tagged, ``coalesce(1)`` and ONE ``groupBy(id)``
+    of the exact and stemmed integer sums — the batched tiers' tagged
+    aggregation (``search.tagged_keyword_agg``) for a batch of one. The
+    single-partition aggregate needs no Exchange, so a served hybrid
+    query stays one Spark job. Cost scales with the query terms'
+    postings, never with the corpus: no token row is read and no
+    candidate id goes through the driver (a scoring join back to the
+    token table would scan every token row and broadcast the candidate
+    ids, a second job per query)."""
     stem = stem_py if stem_fn is None else stem_fn
     terms = sorted(set(tokenize_py(query)))
     stems = sorted({stem(t) for t in terms})
     if not terms:
         return tokens.select(F.col("id"), F.lit(0.0).alias("score")).limit(0)
 
-    # Term lookup as a literal IN-filter, NOT a join against a created
-    # DataFrame: the literal predicate pushes into the tf scan
-    # (partition/row-group pruning on the term-sorted layout), where a join
-    # key never does — and it costs zero extra Spark jobs. No distinct: a
-    # left-semi probe is insensitive to duplicate candidate ids, and the
-    # dedup was a full shuffle of the candidate set.
-    cand = _candidates(tf_exact, tf_stemmed, terms, stems)
+    def rows(tf: DataFrame, vals: list, cfg: str) -> DataFrame:
+        return tf.where(f"term IN ({spark_sql_values(vals)})").selectExpr(
+            "id", f"'{cfg}' AS cfg", "tf"
+        )
+
+    probe = rows(tf_exact, terms, "e").unionByName(rows(tf_stemmed, stems, "s"))
     if allowed is not None:
-        cand = cand.join(allowed.select("id"), "id", "left_semi")
-    # top-k FIRST, filter the <=k survivors (r11 §16, the §12 scan-tier
-    # rewrite): the score>0 cut below the sort pushes through the
-    # projection, so the Filter re-ran both O(tokens·terms) array-filter
-    # counts a second time per candidate row; provably identical (raw is
-    # a non-negative weighted count, so zero-score rows sort last under
-    # desc) and Limit is a pushdown barrier.
-    score = keyword_score_sql("tokens_exact", "tokens_stemmed", terms, stems)
+        probe = probe.join(allowed.select("id"), "id", "left_semi")
+    score = keyword_squash_sql("sum(IF(cfg = 'e', tf, 0))", "sum(IF(cfg = 's', tf, 0))")
+    # top-k FIRST, score>0 cut on the <=k survivors: raw is a non-negative
+    # weighted count, so zero-score rows sort last under desc and the cut
+    # keeps the rows a pre-limit filter would (the scan tier's shape)
     return (
-        tokens.join(F.broadcast(cand), "id", "left_semi")
-        .selectExpr("id", f"{score} AS score")
+        probe.coalesce(1)
+        .groupBy("id")
+        .agg(F.expr(f"{score} AS score"))
         .orderBy(F.desc("score"), F.asc("id"))
         .limit(k)
         .filter("score > 0.0D")
@@ -1465,11 +1471,12 @@ def keyword_search_websearch_indexed(
             )
         tok = pos[0].tokens[0]
         screens.append((tok, stem(tok)))
-    cand = _candidates(
-        tf_exact,
-        tf_stemmed,
-        sorted({tok for tok, _ in screens}),
-        sorted({st for _, st in screens}),
+    terms = spark_sql_values(sorted({tok for tok, _ in screens}))
+    stems = spark_sql_values(sorted({st for _, st in screens}))
+    cand = (
+        tf_exact.filter(f"term IN ({terms})")
+        .select("id")
+        .unionByName(tf_stemmed.filter(f"term IN ({stems})").select("id"))
     )
     te, ts = "tokens_exact", "tokens_stemmed"
     # no broadcast HINT on the candidate set: a high-df screen term can

@@ -15,7 +15,8 @@ Scale notes (100 TB):
    shuffle of the corpus). The query vector is a literal/broadcast — never a
    shuffled join key. For sub-scan latency use the IVF index (plans/ivf.py).
  - Keyword scoring is map-side over precomputed token arrays; the selective
-   path is the posting-list index (operators/keyword_index.py).
+   path is the tf-postings index (operators/keyword_index.py), which
+   reads only the query terms' rows.
  - Fusion/autocut operate on ≤ k·2 rows — negligible at any corpus size.
 """
 
@@ -146,20 +147,27 @@ def keyword_score_expr(text: Column, query: str) -> Column:
     )
 
 
+def keyword_squash_sql(n_exact: str, n_stem: str) -> str:
+    """Spark-SQL text of the flat keyword score over integer exact and
+    stemmed match counts ``n_exact``/``n_stem``: the weighted sum,
+    normalized raw/(raw+1) — keyword_score_expr's arithmetic."""
+    raw = (
+        f"({spark_sql_literal(WEIGHT_EXACT)} * {n_exact} "
+        f"+ {spark_sql_literal(WEIGHT_STEMMED)} * {n_stem})"
+    )
+    return f"({raw} / ({raw} + 1.0D))"
+
+
 def keyword_score_sql(te: str, ts: str, terms: list[str], stems: list[str]) -> str:
     """Spark-SQL text of the flat keyword score over token-array
-    expressions ``te``/``ts``: weighted exact + stemmed term counts,
-    normalized raw/(raw+1) — keyword_score_expr's arithmetic."""
+    expressions ``te``/``ts``: :func:`keyword_squash_sql` of the counts of
+    their elements that are query terms / stems."""
 
     def _count(arr: str, vals: list[str]) -> str:
         hit = f"t IN ({spark_sql_values(vals)})" if vals else "FALSE"
         return f"size(filter({arr}, t -> {hit}))"
 
-    raw = (
-        f"({spark_sql_literal(WEIGHT_EXACT)} * {_count(te, terms)} "
-        f"+ {spark_sql_literal(WEIGHT_STEMMED)} * {_count(ts, stems)})"
-    )
-    return f"({raw} / ({raw} + 1.0D))"
+    return keyword_squash_sql(_count(te, terms), _count(ts, stems))
 
 
 def keyword_search(
@@ -1260,11 +1268,13 @@ def hybrid_search(
     HybridSearchService.SearchAsync stage order.
 
     ``keyword_index`` (an ``operators.keyword_index.KeywordIndex``) is the
-    serving configuration: the keyword branch then scores ONLY the
-    candidates of the query terms' tf rows (the same write-time tf pair the
-    batched tiers read) from the write-time token table — no per-query corpus
-    re-tokenization — the way the reference serves keyword from the GIN
-    index (KeywordSearchService.cs:73-91). Results are identical to the
+    serving configuration: the keyword branch then scores from the query
+    terms' tf rows alone (the same write-time tf pair the batched tiers
+    read; ``keyword_index.keyword_search_indexed``) — no corpus or token
+    table read, and the whole served query runs as one Spark job — the way
+    the reference serves keyword from the GIN index
+    (KeywordSearchService.cs:73-91). Websearch syntax screens candidates
+    from the tf rows and verifies them on the stored token arrays. Results are identical to the
     full-scan branch (the index is a physical structure, not a semantic
     change); ``hybrid_indexed``'s oracle pins row-equality to ``hybrid_cc``.
 

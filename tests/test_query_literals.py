@@ -6,6 +6,7 @@ import math
 import os
 import random
 import struct
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -79,8 +80,8 @@ def _build_layout(docs, base: str) -> str:
 
 def _jobs_while(spark, fn) -> list:
     sc = spark.sparkContext
-    group = "plan-only-probe"
-    sc.setJobGroup(group, "plan construction")
+    group = f"jobs-while-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs of one call")
     try:
         fn()
     finally:
@@ -112,6 +113,34 @@ def test_served_hybrid_plan_launches_no_job_after_first_probe(spark, sf_dir, tmp
     assert _jobs_while(spark, lambda: frames.append(build("join order", False))) == []
     assert _jobs_while(spark, lambda: frames.append(build('"table scan" OR join', True))) == []
     assert all(f.collect() for f in frames)
+
+
+def test_served_plain_query_runs_one_job(spark, sf_dir, tmp_path):
+    """On an overwrite-mode cut, a served plain hybrid query and a
+    Keyword-mode query each execute as ONE Spark job: the keyword branch
+    aggregates the query terms' tf rows in one partition, so no broadcast
+    of candidate ids (and no shuffle) splits the query."""
+    from connapse_spark.operators.ingest import load_serving
+    from connapse_spark.sources import snapshots
+
+    base = _build_layout(_docs(spark, sf_dir), str(tmp_path / "serving"))
+    cut = load_serving(spark, base)
+    corpus = snapshots.read_snapshot(spark, os.path.join(base, "chunks")).select(
+        F.col("chunk_id").alias("doc_id"), F.col("content").alias("text")
+    )
+
+    def served(query, mode):
+        return hybrid_search(
+            corpus, query, SearchOptions(top_k=5, mode=mode),
+            keyword_index=cut["keyword_index"], vector_index=cut["vector_index"],
+        )
+
+    assert served("table scan", "Hybrid").collect()  # collects the centroids
+    for query in ("join order", "table scan merge"):
+        for mode in ("Hybrid", "Keyword"):
+            rows = []
+            jobs = _jobs_while(spark, lambda: rows.extend(served(query, mode).collect()))
+            assert rows and len(jobs) == 1, (query, mode, len(jobs))
 
 
 def test_new_cut_probes_its_own_centroids_after_rebuild(spark, sf_dir, tmp_path, monkeypatch):
